@@ -151,79 +151,64 @@ def fit_pair_encoder(
     clean = pairs.where(
         F.col(text_a).isNotNull() & F.col(text_b).isNotNull()
     )
-    # Round-12 optimization (guide §4.2): the fit's only heavy term is
-    # the 2·dim md5-based portable hashes per pair (32 md5 + hex +
-    # conv string round-trips per row in the JVM — measured 47 s of
-    # the 51 s fit at sf0.1's 500k training pairs). The hash is an
-    # INTEGER (md5-hex prefix), so a vectorized Python twin
-    # (hashing.portable_hash64_py) computes the identical longs in a
-    # mapInPandas kernel, and the ENTIRE float/decimal chain (pmod →
-    # double grid → diff → square → 12-dp round → DECIMAL(38,12) sum)
-    # stays the same JVM expressions over those longs — bit-identical
-    # weights by construction (A/B-pinned; the weights themselves are
-    # value-gated in deepjoin_train_eval's output row).
-    # SPARK_GRAFT_PAIRFIT_KERNEL=0 restores the pure-expression path.
-    import os
+    # The fit's only heavy term is the 2·dim md5-based portable hashes
+    # per pair (md5 + hex + conv string round-trips per row in the
+    # JVM). The hash is an INTEGER (md5-hex prefix), so a vectorized
+    # Python twin (hashing.portable_hash64_py) computes the identical
+    # longs in a mapInPandas kernel, and the ENTIRE float/decimal chain
+    # (pmod → double grid → diff → square → 12-dp round →
+    # DECIMAL(38,12) sum) stays the same JVM expressions over those
+    # longs — bit-identical weights by construction. The DuckDB
+    # replay (fit_weights_sql) is the reference. Text columns are cast
+    # to string first, as the JVM concat in portable_hash64 does.
+    seeds = [f"{i}:".encode() for i in range(dim)]
 
-    if os.environ.get("SPARK_GRAFT_PAIRFIT_KERNEL", "1") != "0":
-        seeds = [f"{i}:".encode() for i in range(dim)]
+    def hash_rows(batches):
+        import pandas as pd
 
-        def hash_rows(batches):
-            import pandas as pd
-
-            from semantic_ann_in_data_lake_spark.functions.hashing import (
-                portable_hash64_py,
-            )
-
-            for pdf in batches:
-                out = {}
-                for side, col in (("a", text_a), ("b", text_b)):
-                    enc = [t.encode("utf-8") for t in pdf[col]]
-                    for i in range(dim):
-                        s = seeds[i]
-                        out[f"h{side}{i}"] = [
-                            portable_hash64_py(s + t) for t in enc
-                        ]
-                yield pd.DataFrame(out)
-
-        schema = ", ".join(
-            f"ha{i} long, hb{i} long" for i in range(dim)
+        from semantic_ann_in_data_lake_spark.functions.hashing import (
+            portable_hash64_py,
         )
-        src = clean.select(text_a, text_b)
-        # the pairs frame usually arrives AQE-coalesced to a handful of
-        # partitions (fine for its joins, 8x under-parallel for 2·dim
-        # hashes/row): spread the hash work across the executors —
-        # aggregation below is order-independent (decimal sums + count)
-        target = pairs.sparkSession.sparkContext.defaultParallelism
-        if src.rdd.getNumPartitions() < target:
-            src = src.repartition(target)
-        hashed = src.mapInPandas(hash_rows, schema=schema)
 
-        def lane(h):
-            # identical float chain to hash_embedding_expr's component
-            return (
-                F.pmod(F.col(h), F.lit(200001)).cast("double")
-                / F.lit(100000.0)
-                - F.lit(1.0)
-            )
+        for pdf in batches:
+            out = {}
+            for side, col in (("a", text_a), ("b", text_b)):
+                enc = [t.encode("utf-8") for t in pdf[col]]
+                for i in range(dim):
+                    s = seeds[i]
+                    out[f"h{side}{i}"] = [
+                        portable_hash64_py(s + t) for t in enc
+                    ]
+            yield pd.DataFrame(out)
 
-        aggs = []
-        for i in range(dim):
-            d = lane(f"ha{i}") - lane(f"hb{i}")
-            sq = F.round(d * d, _SUM_DP).cast("decimal(38,12)")
-            aggs.append(F.sum(sq).alias(f"s{i}"))
-        aggs.append(F.count(F.lit(1)).alias("n"))
-        row = hashed.agg(*aggs).collect()[0]
-    else:
-        va = hash_embedding_expr(F.col(text_a), dim)
-        vb = hash_embedding_expr(F.col(text_b), dim)
-        aggs = []
-        for i in range(dim):
-            d = va[i] - vb[i]
-            sq = F.round(d * d, _SUM_DP).cast("decimal(38,12)")
-            aggs.append(F.sum(sq).alias(f"s{i}"))
-        aggs.append(F.count(F.lit(1)).alias("n"))
-        row = clean.agg(*aggs).collect()[0]
+    schema = ", ".join(f"ha{i} long, hb{i} long" for i in range(dim))
+    src = clean.select(
+        *(F.col(c).cast("string").alias(c) for c in (text_a, text_b))
+    )
+    # the pairs frame usually arrives AQE-coalesced to a handful of
+    # partitions (fine for its joins, 8x under-parallel for 2·dim
+    # hashes/row): spread the hash work across the executors —
+    # aggregation below is order-independent (decimal sums + count)
+    target = pairs.sparkSession.sparkContext.defaultParallelism
+    if src.rdd.getNumPartitions() < target:
+        src = src.repartition(target)
+    hashed = src.mapInPandas(hash_rows, schema=schema)
+
+    def lane(h):
+        # identical float chain to hash_embedding_expr's component
+        return (
+            F.pmod(F.col(h), F.lit(200001)).cast("double")
+            / F.lit(100000.0)
+            - F.lit(1.0)
+        )
+
+    aggs = []
+    for i in range(dim):
+        d = lane(f"ha{i}") - lane(f"hb{i}")
+        sq = F.round(d * d, _SUM_DP).cast("decimal(38,12)")
+        aggs.append(F.sum(sq).alias(f"s{i}"))
+    aggs.append(F.count(F.lit(1)).alias("n"))
+    row = hashed.agg(*aggs).collect()[0]
     n = row["n"]
     if n == 0:
         raise ValueError("fit_pair_encoder: no non-null training pairs")

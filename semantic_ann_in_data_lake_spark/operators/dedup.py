@@ -540,72 +540,24 @@ def embedding_near_dups(
                 "id_a", "id_b", F.round(cosine_sim("va", "vb"), 6).alias("cosine")
             ).where(F.col("cosine") >= tau)
 
-        # Round-11 optimization (guide §8: decide with a cheap proxy,
-        # recompute exactly on survivors): when the corpus matrix fits
-        # the broadcast budget, a BLAS pass prefilters the n² pairs to
-        # a SUPERSET of the answer — unrounded cosine ≥ τ − 1e-6, a
-        # margin covering both the 6-dp rounding shift (≤ 5e-7) and
-        # BLAS-vs-sequential-fold summation noise (~1e-12 at d≤4096) —
-        # and the original JVM expressions then re-score only the
-        # survivors, so every emitted (pair, cosine) is bit-identical
-        # to the former full cross join (A/B-verified and hash-gated).
-        # Over budget, the declarative cross join stands unchanged.
-        from semantic_ann_in_data_lake_spark.operators.knn import (
-            _broadcast_byte_budget,
-            _estimate_rows,
-        )
-
-        n = _estimate_rows(emb)
-        if n is None:
-            n = emb.count()
-        dim_row = emb.select(vec_col).head(1)
-        dim = (
-            len(dim_row[0][0])
-            if dim_row and dim_row[0][0] is not None
-            else 0
-        )
-        if n * dim * 8 + n * 16 > _broadcast_byte_budget() or dim == 0:
-            return jvm_exact(None)
-
-        # the prefilter keys its id→row map by int64 id value: decline
-        # non-integral id columns up front (ADVICE r11 — a string/
-        # decimal id would crash the int64 conversion the declarative
-        # path handles fine), and duplicate ids / ragged vectors below
-        from pyspark.sql.types import (
-            ByteType,
-            IntegerType,
-            LongType,
-            ShortType,
-        )
-
-        id_type = emb.schema[id_col].dataType
-        if not isinstance(
-            id_type, (ByteType, ShortType, IntegerType, LongType)
-        ):
-            return jvm_exact(None)
-
+        # When the corpus matrix is admitted for broadcast, a BLAS pass
+        # prefilters the n² pairs to a SUPERSET of the answer —
+        # unrounded cosine ≥ τ − 1e-6, a margin covering both the 6-dp
+        # rounding shift (≤ 5e-7) and BLAS-vs-sequential-fold summation
+        # noise (~1e-12 at d≤4096) — and the JVM expressions above then
+        # re-score only the survivors, so every emitted (pair, cosine)
+        # is bit-identical to the full cross join. When the admission
+        # gate declines, the declarative cross join is the reference.
         import numpy as np
 
-        rows = (
-            emb.select(
-                F.col(id_col).alias("vec_id"),
-                F.col(vec_col).cast("array<double>").alias("v"),
-            )
-            .toPandas()
+        from semantic_ann_in_data_lake_spark.operators.pairscore import (
+            admit_matrices,
         )
-        rows = rows[rows["v"].notna()]
-        ids = rows["vec_id"].to_numpy(dtype=np.int64)
-        # duplicate ids would collapse in the id→row map (silently
-        # dropping pairs the declarative path emits); ragged vector
-        # lengths would crash the matrix build — both decline to the
-        # unchanged declarative cross join
-        if len(ids) != len(np.unique(ids)) or (
-            len(rows) and rows["v"].map(len).nunique() != 1
-        ):
+
+        m = admit_matrices(emb, emb, id_col, vec_col)
+        if m is None:
             return jvm_exact(None)
-        mat = np.asarray(list(rows["v"]), dtype=np.float64)
-        order = np.argsort(ids)
-        ids, mat = ids[order], mat[order]
+        ids, mat = m[0], m[1]
         norms = np.sqrt((mat * mat).sum(axis=1))
         spark = emb.sparkSession
         bc = spark.sparkContext.broadcast((ids, mat, norms))

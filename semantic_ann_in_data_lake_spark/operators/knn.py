@@ -62,6 +62,16 @@ def _broadcast_byte_budget() -> int:
     return int(os.environ.get("SPARK_GRAFT_KNN_BCAST_BUDGET_MB", "512")) << 20
 
 
+def _pair_budget() -> float:
+    """Compute ceiling on brute-force scored pairs (|Q|·|C|, or the
+    equivalent pair work of a quadratic kernel). Tunable via
+    ``SPARK_GRAFT_KNN_PAIR_BUDGET``; the 1e10 default is minutes of
+    BLAS on one box, amortized across executors."""
+    import os
+
+    return float(os.environ.get("SPARK_GRAFT_KNN_PAIR_BUDGET", "1e10"))
+
+
 def _estimate_rows(df: DataFrame) -> int | None:
     """Row count from parquet footers when ``df`` is an unfiltered
     file scan — zero Spark jobs (footer metadata only); None when the
@@ -108,7 +118,7 @@ def derive_nlist(
     candidate population ≈ √n, so probe work |Q|·nprobe·(n/nlist)
     grows as n^1.5 overall but each cell stays worker-sized as the
     corpus grows 100× — a fixed nlist instead re-approaches |Q|·|C|
-    per cell (the sf1 7.4× outlier in SCALING, VERDICT r5 item 5).
+    per cell (the sf1 7.4× outlier in SCALING_sf1.json).
     ``known_n`` (a count the caller already paid for — the auto
     dispatcher, the PQ degrade path) skips the probe entirely; else
     row count from parquet footers when free, count() otherwise.
@@ -206,11 +216,8 @@ def knn_join(
         # 4M dim-8 vectors fit the 256 MiB broadcast line yet cost
         # 1.6e13 pair ops; the sf1 curve measured the quadratic tier at
         # ~n² wall-clock, SCALING_sf1.json). Past the pair budget
-        # (SPARK_GRAFT_KNN_PAIR_BUDGET, default 1e10 ≈ minutes of BLAS
-        # on one box, amortized across executors) auto prefers the
-        # sub-quadratic IVF path even when memory would allow broadcast.
-        import os
-
+        # (_pair_budget) auto prefers the sub-quadratic IVF path even
+        # when memory would allow broadcast.
         n_cand = _estimate_rows(candidates)
         if n_cand is None:
             n_cand = candidates.count()
@@ -222,11 +229,8 @@ def knn_join(
         first = candidates.select(vec_col).head(1)
         dim = len(first[0][0]) if first else 0
         approx_bytes = n_cand * dim * 8
-        pair_budget = float(
-            os.environ.get("SPARK_GRAFT_KNN_PAIR_BUDGET", "1e10")
-        )
         fits_mem = approx_bytes <= 256 << 20
-        fits_compute = n_query * n_cand <= pair_budget
+        fits_compute = n_query * n_cand <= _pair_budget()
         if fits_mem and fits_compute:
             # pass the probe results down: _knn_broadcast would
             # otherwise re-run head(1) + a count/LIMIT-probe job to
@@ -509,23 +513,20 @@ def _ranked_topk(scored: DataFrame, k: int, metric: str) -> DataFrame:
 def _knn_exact(
     queries, candidates, id_col, vec_col, k, metric, exclude_self, round_dp
 ) -> DataFrame:
-    # Round-12 optimization (guide §8): when the vector matrices fit
-    # the broadcast budget, the |Q|·|C| crossJoin + interpreted fold is
-    # replaced by the pairscore superset kernel — bit-identical
-    # unrounded distances (sequential lane loop) emitted only for a
-    # provable superset of the rounded top-k; the SAME JVM round +
-    # window below then picks the final rows, so output is identical
-    # (A/B-pinned, oracle-gated). Gates decline (None) on non-integral
-    # ids, NULL/ragged vectors, duplicates, or over-budget corpora —
-    # the declarative path below stands unchanged. l2_sq only; the
-    # cosine exact tier keeps its declarative shape.
+    # When the vector matrices are admitted for broadcast, the |Q|·|C|
+    # crossJoin + interpreted fold is replaced by the pairscore superset
+    # kernel: bit-identical unrounded distances, emitted only for a
+    # provable superset of the rounded top-k. The same JVM round +
+    # window then picks the final rows, so the output is identical.
+    # When the admission gate declines, the declarative path below is
+    # the reference. l2_sq only; cosine keeps its declarative shape.
     if metric == "l2_sq":
         from semantic_ann_in_data_lake_spark.operators.pairscore import (
             exact_l2_topk_superset,
         )
 
         sup = exact_l2_topk_superset(
-            queries, candidates, id_col, vec_col, k, exclude_self
+            queries, candidates, id_col, vec_col, k, exclude_self, round_dp
         )
         if sup is not None:
             scored = sup.select(
@@ -563,6 +564,26 @@ def _knn_exact(
     return _ranked_topk(scored, k, metric)
 
 
+def _topk_mask(key, k, round_dp):
+    """Boolean mask of a per-row SUPERSET of the rounded top-k of
+    ``key`` (smaller is better; +inf marks excluded cells).
+
+    Any cell in the final top-k by ``round(key, round_dp)`` satisfies
+    round(key) ≤ round(kth), hence key < kth + one rounding quantum,
+    where kth is the row's k-th smallest unrounded key. The margin is
+    that quantum plus 1% slack for the float error of the rounding.
+    Ties at the boundary only ADD cells; the caller's exact round +
+    tie-break decides. ``isfinite`` keeps excluded cells out when a
+    row has ≤ k finite keys (kth is then +inf)."""
+    import numpy as np
+
+    kk = min(k, key.shape[1])
+    kth = np.partition(key, kk - 1, axis=1)[:, kk - 1]
+    margin = 1.01 / 10**round_dp
+    with np.errstate(invalid="ignore"):
+        return (key <= kth[:, None] + margin) & np.isfinite(key)
+
+
 def _np_topk_rows(qids, qmat, cids, cmat, k, metric, exclude_self, round_dp,
                   with_rank=True):
     """Shared numpy kernel: BLAS distance matrix + per-query stable top-k.
@@ -592,10 +613,9 @@ def _np_topk_rows(qids, qmat, cids, cmat, k, metric, exclude_self, round_dp,
     # Vectorized selection (a per-query python loop with a full argsort
     # was the measured hot spot, and rounding the FULL matrix costs more
     # than the matmul): work on key = ±d so "best" is always smallest,
-    # knock out self-matches with +inf via one searchsorted, threshold
-    # every row at its kth UNROUNDED key + one rounding quantum (any
-    # candidate whose rounded key could tie the kth must lie within it),
-    # then round and exact-tie-break ONLY the ≤ k+ties survivors.
+    # knock out self-matches with +inf via one searchsorted, keep the
+    # top-k superset (_topk_mask), then round and exact-tie-break ONLY
+    # the ≤ k+ties survivors.
     key = d if asc else -d
     if exclude_self:
         pos = np.searchsorted(cids, qids)
@@ -603,11 +623,7 @@ def _np_topk_rows(qids, qmat, cids, cmat, k, metric, exclude_self, round_dp,
         ri = np.nonzero(ok)[0]
         hit = ri[cids[pos[ok]] == qids[ri]]
         key[hit, pos[hit]] = np.inf
-    kk = min(k, key.shape[1])
-    kth = np.partition(key, kk - 1, axis=1)[:, kk - 1]
-    quantum = 10.0 ** (-round_dp)
-    with np.errstate(invalid="ignore"):
-        mask = (key <= kth[:, None] + quantum) & np.isfinite(key)
+    mask = _topk_mask(key, k, round_dp)
     counts = mask.sum(axis=1)
     _, cols_idx = np.nonzero(mask)
     rows = []

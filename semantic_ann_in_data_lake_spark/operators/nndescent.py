@@ -140,15 +140,15 @@ def nndescent_knn_graph(
     n = v.count()
     n_buckets = max(1, (n + k) // (k + 1))
 
-    # Round-12 optimization (guide §4.2): the candidate scorings are
-    # the dominant build cost — O(n·(k+rk)²) pairs per round, each
-    # paying an INTERPRETED 64-lane aggregate/zip_with fold plus two
-    # shuffle joins. The pairscore kernel computes the same unrounded
-    # L2² bit-identically (sequential lane loop — same add chain) over
-    # the broadcast vector matrix; round stays a JVM expression on the
-    # returned column, so graph trajectories are unchanged (A/B-pinned
-    # and oracle-gated). Over budget / non-integral ids / NULL or
-    # ragged vectors: scorer is None and the join path stands.
+    # The candidate scorings are the dominant build cost —
+    # O(n·(k+rk)²) pairs per round, each paying an INTERPRETED 64-lane
+    # aggregate/zip_with fold plus two shuffle joins. The pairscore
+    # kernel computes the same unrounded L2² bit-identically
+    # (sequential lane loop — same add chain) over the broadcast vector
+    # matrix; round stays a JVM expression on the returned column, so
+    # graph trajectories are unchanged. When the admission gate
+    # declines, scorer is None and the join path below is the
+    # reference.
     from semantic_ann_in_data_lake_spark.operators.pairscore import (
         exact_l2_pair_scorer,
     )

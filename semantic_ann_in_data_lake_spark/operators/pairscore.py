@@ -1,19 +1,16 @@
-"""Exact pair-scoring kernel: the vectorized twin of the declarative
+"""Exact pair-scoring kernels: the vectorized twins of the declarative
 ``pairs ⋈ vectors ⋈ vectors`` + ``functions.vectors.l2_sq`` fold.
 
-Round-12 optimization (guide §4.2 — hand whole batches to vectorized
-native code). The NN-descent rounds and every refine tier's exact
-re-rank score a ``(query_id, cand_id)`` pair list against the raw
-vectors. The declarative formulation pays two shuffle joins plus an
-INTERPRETED higher-order fold per pair (``aggregate(zip_with(...))``
-is not codegen'd) — at sf0.1 the NN-descent build evaluates ~3M such
-64-lane folds per round. This kernel broadcasts the (id → vector)
-matrix (budget-gated, same ceiling as the kNN broadcast tier) and
-computes the UNROUNDED L2² in numpy.
+The NN-descent rounds and the exact kNN tier score (query, candidate)
+pairs against the raw vectors. The declarative formulation pays shuffle
+joins (or a |Q|·|C| crossJoin) plus an INTERPRETED higher-order fold
+per pair (``aggregate(zip_with(...))`` is not codegen'd). These kernels
+broadcast the (id → vector) matrices and compute the UNROUNDED L2² in
+numpy.
 
-Bit-identity argument (what lets the hash-gated NN-descent family and
-the refine tiers keep their oracle hashes): the kernel is vectorized
-over ROWS but SEQUENTIAL over LANES —
+Bit-identity argument (what lets the hash-gated callers keep their
+oracle hashes): the kernels are vectorized over ROWS but SEQUENTIAL
+over LANES —
 
     acc = 0.0
     for i in 0..d-1:  acc = acc + (a_i - b_i) * (a_i - b_i)
@@ -24,76 +21,95 @@ double subtract/multiply/add the JVM fold performs (``(((0+t_0)+t_1)+
 double first), so every emitted distance is the same 64-bit pattern
 the fold emits. Rounding stays a JVM expression on the returned
 column. No reordered/blocked summation anywhere — this is NOT a BLAS
-matmul, precisely so no margin/re-score step is needed.
+matmul, precisely so no re-score step is needed.
 
-Join-semantics parity: the scorer only engages when the vector frames
-have unique non-null integral ids, no NULL vectors, and one uniform
-dimension (checked at build time); pairs whose id is absent from a
-frame are dropped exactly like the inner joins they replace. Anything
-else returns ``None`` and the caller keeps the declarative path — the
-same budget-degrade discipline as the kNN broadcast tier.
+Join-semantics parity: :func:`admit_matrices` is the one admission
+gate for every broadcast vector-matrix kernel. It admits only frames
+with unique non-null integral ids, no NULL/NaN vectors and one uniform
+dimension that fit the broadcast byte budget; pairs whose id is absent
+from a frame are dropped exactly like the inner joins they replace.
+Anything else returns ``None`` and the caller runs its declarative
+twin, which stays the reference.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import ByteType, IntegerType, LongType, ShortType
 
 
-def _collect_matrix(vframe: DataFrame, id_col: str, vec_col: str):
-    """(ids int64[n], mat float64[n, d]) for a gated vector frame, or
-    None when any engagement gate fails (non-integral ids, NULL or
-    ragged vectors, duplicate ids)."""
+def _collect(vframe: DataFrame, id_col: str, vec_col: str):
+    """(ids int64[n], mat float64[n, d]) or None on empty input, NULL
+    ids, NULL/NaN/ragged vectors or duplicate ids."""
     import numpy as np
-    from pyspark.sql.types import (
-        ByteType,
-        IntegerType,
-        LongType,
-        ShortType,
-    )
 
-    if not isinstance(
-        vframe.schema[id_col].dataType,
-        (ByteType, ShortType, IntegerType, LongType),
-    ):
-        return None
     rows = vframe.select(
         F.col(id_col).alias("__id"),
         F.col(vec_col).cast("array<double>").alias("__v"),
     ).toPandas()
-    if len(rows) == 0 or rows["__v"].isna().any():
+    if (
+        len(rows) == 0
+        or rows["__id"].isna().any()
+        or rows["__v"].isna().any()
+        or rows["__v"].map(len).nunique() != 1
+    ):
         return None
     ids = rows["__id"].to_numpy(dtype=np.int64)
-    if len(ids) != len(np.unique(ids)):
-        return None
-    if rows["__v"].map(len).nunique() != 1:
-        return None
     mat = np.asarray(list(rows["__v"]), dtype=np.float64)
-    if mat.ndim != 2 or mat.shape[1] == 0 or np.isnan(mat).any():
+    if (
+        len(ids) != len(np.unique(ids))
+        or mat.shape[1] == 0
+        or np.isnan(mat).any()
+    ):
         return None
     return ids, mat
 
 
-def _budget_ok(qframe, cframe, vec_col) -> bool:
-    """Pre-collect size gate (never collect before knowing the size):
-    footer/row-count estimate × dim × 8 bytes per side ≤ the kNN
-    broadcast byte budget."""
+def admit_matrices(
+    qframe: DataFrame, cframe: DataFrame, id_col: str, vec_col: str
+):
+    """The broadcast admission gate: ``(qids, qmat, cids, cmat)`` for
+    the two vector frames, or ``None`` when a kernel must not engage.
+
+    Checks, cheapest first: the id column type (schema only, no Spark
+    job); the estimated matrix bytes (row estimate × dim × 8 + 16 per
+    row, both sides) against the kNN broadcast byte budget; then the
+    collected rows (see :func:`_collect`) and matching dims. When
+    ``qframe is cframe`` the matrix is collected once and both halves
+    of the result are the same objects."""
+    # call-time import: knn is the monkeypatch seam for the size probes
     from semantic_ann_in_data_lake_spark.operators.knn import (
         _broadcast_byte_budget,
         _estimate_rows,
     )
 
+    same = qframe is cframe
+    sides = [qframe] if same else [qframe, cframe]
+    integral = (ByteType, ShortType, IntegerType, LongType)
+    if not all(
+        isinstance(side.schema[id_col].dataType, integral) for side in sides
+    ):
+        return None
     head = qframe.select(vec_col).head(1)
     dim = len(head[0][0]) if head and head[0][0] is not None else 0
     if dim == 0:
-        return False
+        return None
     total = 0
-    for side in ([qframe] if qframe is cframe else [qframe, cframe]):
+    for side in sides:
         n = _estimate_rows(side)
         if n is None:
             n = side.count()
         total += n * dim * 8 + n * 16
-    return total <= _broadcast_byte_budget()
+    if total > _broadcast_byte_budget():
+        return None
+    q = _collect(qframe, id_col, vec_col)
+    if q is None:
+        return None
+    c = q if same else _collect(cframe, id_col, vec_col)
+    if c is None or q[1].shape[1] != c[1].shape[1]:
+        return None
+    return q[0], q[1], c[0], c[1]
 
 
 def exact_l2_topk_superset(
@@ -103,47 +119,30 @@ def exact_l2_topk_superset(
     vec_col: str,
     k: int,
     exclude_self: bool,
+    round_dp: int,
     qcol: str = "query_id",
     ccol: str = "cand_id",
 ) -> DataFrame | None:
     """Exact-tier kNN prefilter: emit, per query, a PROVABLE SUPERSET
-    of the (round6(d), cand_id)-ranked top-k with the bit-identical
-    unrounded d — the caller's unchanged JVM round + window then picks
-    the final rows.
+    of the (round(d, round_dp), cand_id)-ranked top-k with the
+    bit-identical unrounded d — the caller's JVM round + window then
+    picks the final rows.
 
     Replaces the |Q|·|C| crossJoin + interpreted fold of the exact
-    strategy (guide §8: decide with the cheap pass, emit only
-    survivors). Distances use the same sequential-lane add chain as
-    the fold (module doc), so they are bit-identical; the selection
-    threshold is t_k + 1.01e-6 where t_k is the per-query k-th
-    smallest (self-excluded) distance: any candidate in the final
-    ROUNDED top-k satisfies round6(d) ≤ round6(t_k), hence
-    d < t_k + 5e-7 + 5e-7 + ulp — inside the margin. Ties at the
-    boundary only ADD rows (a superset is always safe; the JVM window
-    is the decider). Returns None when the gates decline (caller keeps
-    the crossJoin path)."""
+    strategy. Distances use the same sequential-lane add chain as the
+    fold (module doc), so they are bit-identical; the selection is the
+    shared top-k superset mask (``knn._topk_mask``), whose margin is
+    derived from ``round_dp``. Returns None when the admission gate
+    declines (caller keeps the crossJoin path)."""
     import numpy as np
 
-    if (
-        __import__("os").environ.get("SPARK_GRAFT_PAIRSCORE_KERNEL", "1")
-        == "0"
-    ):
-        return None
-    if not _budget_ok(qframe, cframe, vec_col):
-        return None
-    same = qframe is cframe
-    q = _collect_matrix(qframe, id_col, vec_col)
-    if q is None:
-        return None
-    c = q if same else _collect_matrix(cframe, id_col, vec_col)
-    if c is None:
-        return None
-    if q[1].shape[1] != c[1].shape[1]:
-        return None
+    from semantic_ann_in_data_lake_spark.operators.knn import _topk_mask
 
+    m = admit_matrices(qframe, cframe, id_col, vec_col)
+    if m is None:
+        return None
     spark = qframe.sparkSession
-    bc = spark.sparkContext.broadcast((q[0], q[1], c[0], c[1]))
-    margin = 1.01e-6
+    bc = spark.sparkContext.broadcast(m)
 
     qid = qframe.select(F.col(id_col).alias(qcol))
     target = spark.sparkContext.defaultParallelism
@@ -156,7 +155,6 @@ def exact_l2_topk_superset(
         qids, qmat, cids, cmat = bc.value
         pos = {int(i): p for p, i in enumerate(qids)}
         n, d = cmat.shape
-        kth = min(k - 1, n - 1)
         # block query rows so the (B, n) distance scratch stays ~32 MB
         blk = max(1, int((32 << 20) // max(n * 8, 1)))
         for pdf in batches:
@@ -177,14 +175,12 @@ def exact_l2_topk_superset(
                 for i in range(d):
                     diff = a[:, i][:, None] - cmat[:, i][None, :]
                     acc += diff * diff
-                sel = acc
+                key = acc
                 if exclude_self:
-                    sel = np.where(
+                    key = np.where(
                         cids[None, :] == ids_blk[:, None], np.inf, acc
                     )
-                t = np.partition(sel, kth, axis=1)[:, kth]
-                keep = sel <= t[:, None] + margin
-                r, cj = np.nonzero(keep)
+                r, cj = np.nonzero(_topk_mask(key, k, round_dp))
                 yield pd.DataFrame(
                     {
                         qcol: ids_blk[r],
@@ -213,43 +209,12 @@ def exact_l2_pair_scorer(
     bit-identical to ``l2_sq`` (see module doc); callers apply their
     own JVM ``round`` to it.
     """
-    import os
-
     import numpy as np
 
-    from semantic_ann_in_data_lake_spark.operators.knn import (
-        _broadcast_byte_budget,
-        _estimate_rows,
-    )
-
-    if os.environ.get("SPARK_GRAFT_PAIRSCORE_KERNEL", "1") == "0":
+    m = admit_matrices(qframe, cframe, id_col, vec_col)
+    if m is None:
         return None
-    same = qframe is cframe
-    budget = _broadcast_byte_budget()
-    head = qframe.select(vec_col).head(1)
-    dim = len(head[0][0]) if head and head[0][0] is not None else 0
-    if dim == 0:
-        return None
-    total = 0
-    for side in ([qframe] if same else [qframe, cframe]):
-        n = _estimate_rows(side)
-        if n is None:
-            n = side.count()
-        total += n * dim * 8 + n * 16
-    if total > budget:
-        return None
-
-    q = _collect_matrix(qframe, id_col, vec_col)
-    if q is None:
-        return None
-    c = q if same else _collect_matrix(cframe, id_col, vec_col)
-    if c is None:
-        return None
-    if q[1].shape[1] != c[1].shape[1]:
-        return None
-
-    spark = qframe.sparkSession
-    bc = spark.sparkContext.broadcast((q[0], q[1], c[0], c[1]))
+    bc = qframe.sparkSession.sparkContext.broadcast(m)
 
     def score(
         pairs: DataFrame, qcol: str = "query_id", ccol: str = "cand_id"

@@ -213,6 +213,7 @@ def knn_pq(
     from semantic_ann_in_data_lake_spark.operators.knn import (
         _broadcast_byte_budget,
         _estimate_rows,
+        _pair_budget,
     )
 
     spark = queries.sparkSession
@@ -230,13 +231,10 @@ def knn_pq(
     n_cand = known_n_cand if known_n_cand is not None else _estimate_rows(candidates)
     # PQ/ADC shrinks MEMORY, not compute: the broadcast scorer still
     # evaluates every (query, candidate) pair. Mirror auto-dispatch's
-    # compute ceiling (SPARK_GRAFT_KNN_PAIR_BUDGET) so an oversized
-    # explicit call degrades to the cell-sharded IVF-PQ tier instead of
-    # running a quadratic job (VERDICT r5 carried item: pq.py had only
-    # the byte guard). count() fallback is noise next to the full
+    # compute ceiling (_pair_budget) so an oversized explicit call
+    # degrades to the cell-sharded IVF-PQ tier instead of running a
+    # quadratic job. count() fallback is noise next to the full
     # encode+collect this tier performs anyway.
-    import os
-
     if n_cand is None:
         n_cand = candidates.count()
     if known_n_query is not None:
@@ -245,7 +243,7 @@ def knn_pq(
         n_query = n_cand
     else:
         n_query = _estimate_rows(queries) or queries.count()
-    pair_budget = float(os.environ.get("SPARK_GRAFT_KNN_PAIR_BUDGET", "1e10"))
+    pair_budget = _pair_budget()
     over_bytes = n_cand * (m + 16) > _broadcast_byte_budget()
     over_pairs = n_query * n_cand > pair_budget
     if over_bytes or over_pairs:

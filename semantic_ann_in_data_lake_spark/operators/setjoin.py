@@ -171,15 +171,14 @@ def _bitmask_exact_jaccard(toks: DataFrame, threshold: float):
     broadcast byte budget, and the n²·words pair work fits the pair
     budget (``SPARK_GRAFT_KNN_PAIR_BUDGET`` — the same compute ceiling
     the kNN broadcast tier obeys)."""
-    import os
-
     import numpy as np
 
     from semantic_ann_in_data_lake_spark.operators.knn import (
         _broadcast_byte_budget,
+        _pair_budget,
     )
 
-    # BOUNDED dispatch probe (round-12, ADVICE r11): collect at most
+    # BOUNDED dispatch probe: collect at most
     # cap+1 distinct tokens — enough to decide "vocabulary exceeds the
     # cap" without ever materializing a large corpus's full vocabulary
     # on the driver (an unbounded distinct().collect() here was a
@@ -198,8 +197,7 @@ def _bitmask_exact_jaccard(toks: DataFrame, threshold: float):
         return None
     n = toks.count()
     w = (v + 63) // 64
-    pair_budget = float(os.environ.get("SPARK_GRAFT_KNN_PAIR_BUDGET", "1e10"))
-    if n * (w * 8 + 16) > _broadcast_byte_budget() or n * n * w > pair_budget:
+    if n * (w * 8 + 16) > _broadcast_byte_budget() or n * n * w > _pair_budget():
         return None
     bit = {r["tok"]: i for i, r in enumerate(sorted(vocab_rows))}
     spark = toks.sparkSession
