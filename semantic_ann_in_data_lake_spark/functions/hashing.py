@@ -52,12 +52,6 @@ def portable_hash_expr(sql_expr: str, seed: str = "") -> str:
     return f"('0x' || substr(md5({payload}), 1, {_HEX_CHARS}))::BIGINT"
 
 
-def portable_hash_spark_sql(sql_expr: str, seed: str = "") -> str:
-    """Spark-SQL text form (for use inside F.expr / higher-order lambdas)."""
-    payload = f"'{seed}' || ({sql_expr})" if seed else f"({sql_expr})"
-    return f"cast(conv(substring(md5({payload}), 1, {_HEX_CHARS}), 16, 10) as bigint)"
-
-
 def fast_hash64(col: Column | str, seed: int = 42) -> Column:
     """Native xxhash64 — the production hot path (not oracle-portable)."""
     c = F.col(col) if isinstance(col, str) else col

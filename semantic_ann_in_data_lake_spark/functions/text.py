@@ -122,15 +122,6 @@ def word_shingles_sql(expr: str, n: int = 3) -> str:
     return word_shingles_from_sql(words_sql(expr), n)
 
 
-def char_shingles_sql(expr: str, n: int = 5) -> str:
-    c = normalize_sentence_sql(expr)
-    return (
-        f"list_sort(list_distinct(list_transform("
-        f"range(1, greatest(length({c}) - {n - 1}, 0) + 1), "
-        f"i -> substr({c}, i, {n}))))"
-    )
-
-
 def token_truncate(
     df,
     text_col: str = "text",

@@ -54,6 +54,8 @@ import math
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from semantic_ann_in_data_lake_spark.operators.knn import _row_count
+
 #: xxhash64 seeds for the k probe functions — fixed so build and probe
 #: always agree (the no-false-negative invariant depends on it).
 _SEED_BASE = 0xB100F
@@ -166,14 +168,7 @@ def bloom_prune_join(
             f"dim[{on}]={dtype} — cast one side before bloom_prune_join"
         )
     if num_bits is None and expected_keys is None:
-        from semantic_ann_in_data_lake_spark.operators.knn import (
-            _estimate_rows,
-        )
-
-        expected_keys = _estimate_rows(dim)
-        if expected_keys is None:
-            expected_keys = dim.count()
-        expected_keys = max(1, expected_keys)
+        expected_keys = max(1, _row_count(dim))
     bits = num_bits if num_bits is not None else bloom_bits_for(expected_keys)
     bloom = bloom_build(dim, on, bits, num_hashes)
     pruned = bloom_probe(fact, on, bloom, bits, num_hashes)

@@ -428,10 +428,6 @@ def _fit_from_moment_rows(rows, m: int | None) -> PCAModel:
     )
 
 
-def _lit_arr(vals) -> Column:
-    return F.array(*[F.lit(float(x)) for x in vals])
-
-
 def _model_frame(df: DataFrame, model: PCAModel) -> DataFrame:
     """The rotation shipped as DATA: a 1-row frame carrying the m×d
     component matrix and the mean as nested arrays, crossJoin-broadcast

@@ -101,6 +101,44 @@ def _estimate_rows(df: DataFrame) -> int | None:
         return None
 
 
+def _row_count(df: DataFrame) -> int:
+    """Rows in ``df``: the parquet-footer estimate when it is free, else
+    one ``count()``."""
+    n = _estimate_rows(df)
+    return df.count() if n is None else n
+
+
+def _vec_dim(df: DataFrame, vec_col: str) -> int:
+    """Length of the first vector in ``df`` (one ``head(1)`` job); 0 when
+    the frame is empty or that vector is NULL."""
+    first = df.select(vec_col).head(1)
+    return len(first[0][0]) if first and first[0][0] is not None else 0
+
+
+def _over_budget(
+    n_rows: int, row_bytes: int, n_pairs: float = 0, byte_share: float = 1.0
+) -> str | None:
+    """The size check behind every broadcast decision: ``None`` when
+    ``n_rows`` rows of ``row_bytes`` each fit ``byte_share`` of the
+    broadcast byte budget and ``n_pairs`` scored pairs fit the pair
+    budget, else the reason, naming the budget and the measured sizes."""
+    reasons = []
+    byte_budget = int(_broadcast_byte_budget() * byte_share)
+    if n_rows * row_bytes > byte_budget:
+        reasons.append(
+            f"{n_rows} rows x {row_bytes} B = {n_rows * row_bytes} B exceed "
+            f"the {byte_budget} B broadcast budget "
+            "(SPARK_GRAFT_KNN_BCAST_BUDGET_MB)"
+        )
+    pair_budget = _pair_budget()
+    if n_pairs > pair_budget:
+        reasons.append(
+            f"{n_pairs:.3g} pairs exceed the {pair_budget:.3g} pair budget "
+            "(SPARK_GRAFT_KNN_PAIR_BUDGET)"
+        )
+    return "; ".join(reasons) or None
+
+
 def _prep(df: DataFrame, id_col: str, vec_col: str, side: str) -> DataFrame:
     return df.select(
         F.col(id_col).alias(f"{side}_id"),
@@ -121,16 +159,12 @@ def derive_nlist(
     per cell (the sf1 7.4× outlier in SCALING_sf1.json).
     ``known_n`` (a count the caller already paid for — the auto
     dispatcher, the PQ degrade path) skips the probe entirely; else
-    row count from parquet footers when free, count() otherwise.
-    Capped so the centroid broadcast stays small. The floor/cap/√n
-    policy lives ONLY here — every tier derives through this helper."""
+    :func:`_row_count`. Capped so the centroid broadcast stays small.
+    The floor/cap/√n policy lives ONLY here — every tier derives
+    through this helper."""
     if candidates is None and known_n is None:
         raise ValueError("derive_nlist needs candidates or known_n")
-    n = known_n
-    if n is None:
-        n = _estimate_rows(candidates)
-    if n is None:
-        n = candidates.count()
+    n = _row_count(candidates) if known_n is None else known_n
     return int(min(cap, max(floor, round(n ** 0.5))))
 
 
@@ -208,33 +242,23 @@ def knn_join(
         # SURVEY §4.2's optional dispatch: broadcast the candidate index
         # when it fits comfortably in executor memory, else fall back to
         # the partitioned IVF path (both-sides-huge). Cost of the probe:
-        # parquet FOOTER row counts when the input is a bare scan (no
-        # Spark job at all), else one count(); plus one head() for dim.
+        # one _row_count per side plus one head() for dim.
         #
         # TWO ceilings, not one: memory (the candidate matrix must fit
         # an executor) AND compute (brute-force scoring is |Q|·|C| —
-        # 4M dim-8 vectors fit the 256 MiB broadcast line yet cost
-        # 1.6e13 pair ops; the sf1 curve measured the quadratic tier at
-        # ~n² wall-clock, SCALING_sf1.json). Past the pair budget
-        # (_pair_budget) auto prefers the sub-quadratic IVF path even
-        # when memory would allow broadcast.
-        n_cand = _estimate_rows(candidates)
-        if n_cand is None:
-            n_cand = candidates.count()
-        n_query = n_cand
-        if queries is not candidates:
-            n_query = _estimate_rows(queries)
-            if n_query is None:
-                n_query = queries.count()
-        first = candidates.select(vec_col).head(1)
-        dim = len(first[0][0]) if first else 0
-        approx_bytes = n_cand * dim * 8
-        fits_mem = approx_bytes <= 256 << 20
-        fits_compute = n_query * n_cand <= _pair_budget()
-        if fits_mem and fits_compute:
-            # pass the probe results down: _knn_broadcast would
-            # otherwise re-run head(1) + a count/LIMIT-probe job to
-            # re-derive what the dispatcher just measured
+        # 4M dim-8 vectors fit a 256 MiB broadcast yet cost 1.6e13 pair
+        # ops; the sf1 curve measured the quadratic tier at ~n²
+        # wall-clock, SCALING_sf1.json). Past the pair budget auto
+        # prefers the sub-quadratic IVF path even when memory would
+        # allow broadcast. Auto's rungs get half the broadcast budget:
+        # it broadcasts without being asked to, so it keeps headroom.
+        n_cand = _row_count(candidates)
+        n_query = n_cand if queries is candidates else _row_count(queries)
+        dim = _vec_dim(candidates, vec_col)
+        n_pairs = n_query * n_cand
+        if _over_budget(n_cand, dim * 8, n_pairs, byte_share=0.5) is None:
+            # pass the probe results down so _knn_broadcast does not
+            # re-measure them
             return _knn_broadcast(
                 queries, candidates, id_col, vec_col, k, metric,
                 exclude_self, round_dp, compress,
@@ -247,16 +271,9 @@ def knn_join(
         # call-time import: pq imports from this module at its top
         from semantic_ann_in_data_lake_spark.operators.pq import derive_m
 
-        pq_bytes = n_cand * (derive_m(dim) + 16)  # m codes + id/overhead
-        if (
-            fits_compute
-            and not fits_mem
-            and metric == "l2_sq"
-            and pq_bytes <= 256 << 20
-        ):
-            strategy = "pq"
-        else:
-            strategy = "ivf"
+        pq_row_bytes = derive_m(dim) + 16  # m codes + id/overhead
+        fits_pq = _over_budget(n_cand, pq_row_bytes, n_pairs, byte_share=0.5) is None
+        strategy = "pq" if metric == "l2_sq" and fits_pq else "ivf"
         # pass the dispatcher's measurements down so neither knn_pq's
         # budget guard nor derive_nlist re-counts the lineage
         known_n_cand, known_n_query = n_cand, n_query
@@ -658,52 +675,29 @@ def _knn_broadcast(
     broadcast — see :func:`knn_join`).
 
     Memory guard: the candidate matrix must fit in driver AND executor
-    memory. The auto-dispatcher's row estimate already routes oversized
-    inputs to IVF, but an EXPLICIT strategy="broadcast" call used to
-    trust the caller blindly — now the estimated matrix bytes are
-    checked against a hard budget (``SPARK_GRAFT_KNN_BCAST_BUDGET_MB``,
-    default 512) and oversized inputs degrade to the probe-all IVF path
-    (same exact semantics, partitioned shuffle instead of a broadcast)
-    with a logged warning.
+    memory, so a matrix over the broadcast byte budget
+    (``SPARK_GRAFT_KNN_BCAST_BUDGET_MB``, default 512) degrades to the
+    probe-all IVF path (same exact semantics, partitioned shuffle
+    instead of a broadcast) with a warning.
     """
     import numpy as np
 
     spark = queries.sparkSession
-    if known_dim is not None:
-        dim = known_dim
-    else:
-        first = candidates.select(vec_col).head(1)
-        dim = len(first[0][0]) if first and first[0][0] is not None else 0
-    per_elem = 1 if compress == "int8" else 8
-    n_cand = known_n_cand if known_n_cand is not None else _estimate_rows(candidates)
-    if n_cand is None:
-        # derived frame — no parquet footer to read. A full count()
-        # here costs an entire extra scan of the candidate lineage per
-        # call (measured on the doc-embedding bench queries); all the
-        # guard needs is "more rows than the budget allows?", which a
-        # LIMIT probe answers with bounded work: scan until budget+1
-        # rows are produced, then stop.
-        budget_rows = _broadcast_byte_budget() // max(dim * per_elem + 16, 1)
-        probe = candidates.select(F.lit(1)).limit(budget_rows + 1).count()
-        n_cand = probe  # == budget_rows + 1 iff over budget
-    est_bytes = n_cand * dim * per_elem + n_cand * 16
-    budget = _broadcast_byte_budget()
-    if est_bytes > budget:
+    dim = _vec_dim(candidates, vec_col) if known_dim is None else known_dim
+    n_cand = _row_count(candidates) if known_n_cand is None else known_n_cand
+    row_bytes = dim * (1 if compress == "int8" else 8) + 16
+    reason = _over_budget(n_cand, row_bytes)
+    if reason is not None:
         import warnings
 
-        if known_n_cand is None and _estimate_rows(candidates) is None:
-            # the LIMIT probe only proved "over budget" — get the true
-            # row count for nlist sizing (we are about to run a far
-            # bigger IVF job; one count is noise next to it)
-            n_cand = candidates.count()
-            est_bytes = n_cand * dim * per_elem + n_cand * 16
-        nlist = int(min(4096, max(16, 4 * (est_bytes / max(budget, 1)))))
+        # probe-all sends every query to all nlist cells, so nlist stays
+        # near the floor (4 cells per budget's worth of bytes) instead
+        # of derive_nlist's √n
+        overshoot = n_cand * row_bytes / max(_broadcast_byte_budget(), 1)
+        nlist = int(min(4096, max(16, 4 * overshoot)))
         warnings.warn(
-            f"knn_join(strategy='broadcast'): estimated candidate matrix "
-            f"{est_bytes >> 20} MiB exceeds the {budget >> 20} MiB broadcast "
-            f"budget; degrading to the exact probe-all IVF path "
-            f"(nlist={nlist}). Raise SPARK_GRAFT_KNN_BCAST_BUDGET_MB to "
-            f"override.",
+            f"knn_join(strategy='broadcast'): {reason}; degrading to the "
+            f"exact probe-all IVF path (nlist={nlist}).",
             stacklevel=3,
         )
         return _knn_ivf(

@@ -38,6 +38,13 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import ByteType, IntegerType, LongType, ShortType
 
+from semantic_ann_in_data_lake_spark.operators.knn import (
+    _over_budget,
+    _row_count,
+    _topk_mask,
+    _vec_dim,
+)
+
 
 def _collect(vframe: DataFrame, id_col: str, vec_col: str):
     """(ids int64[n], mat float64[n, d]) or None on empty input, NULL
@@ -78,12 +85,6 @@ def admit_matrices(
     collected rows (see :func:`_collect`) and matching dims. When
     ``qframe is cframe`` the matrix is collected once and both halves
     of the result are the same objects."""
-    # call-time import: knn is the monkeypatch seam for the size probes
-    from semantic_ann_in_data_lake_spark.operators.knn import (
-        _broadcast_byte_budget,
-        _estimate_rows,
-    )
-
     same = qframe is cframe
     sides = [qframe] if same else [qframe, cframe]
     integral = (ByteType, ShortType, IntegerType, LongType)
@@ -91,17 +92,11 @@ def admit_matrices(
         isinstance(side.schema[id_col].dataType, integral) for side in sides
     ):
         return None
-    head = qframe.select(vec_col).head(1)
-    dim = len(head[0][0]) if head and head[0][0] is not None else 0
+    dim = _vec_dim(qframe, vec_col)
     if dim == 0:
         return None
-    total = 0
-    for side in sides:
-        n = _estimate_rows(side)
-        if n is None:
-            n = side.count()
-        total += n * dim * 8 + n * 16
-    if total > _broadcast_byte_budget():
+    n_rows = sum(_row_count(side) for side in sides)
+    if _over_budget(n_rows, dim * 8 + 16) is not None:
         return None
     q = _collect(qframe, id_col, vec_col)
     if q is None:
@@ -135,8 +130,6 @@ def exact_l2_topk_superset(
     derived from ``round_dp``. Returns None when the admission gate
     declines (caller keeps the crossJoin path)."""
     import numpy as np
-
-    from semantic_ann_in_data_lake_spark.operators.knn import _topk_mask
 
     m = admit_matrices(qframe, cframe, id_col, vec_col)
     if m is None:

@@ -39,8 +39,11 @@ from pyspark.sql import functions as F
 
 from semantic_ann_in_data_lake_spark.operators.knn import (
     DEFAULT_ROUND_DP,
+    _over_budget,
     _prep,
     _ranked_topk,
+    _row_count,
+    _vec_dim,
     derive_nlist,
 )
 
@@ -206,57 +209,27 @@ def knn_pq(
     """
     import numpy as np
 
-    # imported at call time, NOT module level: knn is the single
-    # monkeypatch seam for the budget probes (tests patch
-    # knn._estimate_rows); a module-level binding here would freeze
-    # the unpatched function
-    from semantic_ann_in_data_lake_spark.operators.knn import (
-        _broadcast_byte_budget,
-        _estimate_rows,
-        _pair_budget,
-    )
-
     spark = queries.sparkSession
     if m is None:
-        # resolve before the byte guard (code bytes scale with m)
-        first = candidates.select(vec_col).head(1)
-        dim0 = len(first[0][0]) if first and first[0][0] is not None else 0
-        m = derive_m(dim0) if dim0 else 16
-    # the coded index is collected to the driver before broadcasting —
-    # same discipline as _knn_broadcast's guard: estimate the code
-    # bytes first and degrade to the cell-sharded IVF-PQ path instead
-    # of OOMing the driver (codes are m ints + id ≈ m+16 bytes/row
-    # once packed; the pandas interchange is wider, so the budget
-    # check uses the broadcast-side size it protects)
-    n_cand = known_n_cand if known_n_cand is not None else _estimate_rows(candidates)
-    # PQ/ADC shrinks MEMORY, not compute: the broadcast scorer still
-    # evaluates every (query, candidate) pair. Mirror auto-dispatch's
-    # compute ceiling (_pair_budget) so an oversized explicit call
-    # degrades to the cell-sharded IVF-PQ tier instead of running a
-    # quadratic job. count() fallback is noise next to the full
-    # encode+collect this tier performs anyway.
-    if n_cand is None:
-        n_cand = candidates.count()
+        dim = _vec_dim(candidates, vec_col)
+        m = derive_m(dim) if dim else 16
+    # the coded index is collected to the driver and broadcast (m codes
+    # + id ≈ m+16 bytes a row), and ADC shrinks memory, not compute:
+    # the scorer still evaluates every (query, candidate) pair. Past
+    # either budget the cell-sharded IVF-PQ tier runs instead.
+    n_cand = _row_count(candidates) if known_n_cand is None else known_n_cand
     if known_n_query is not None:
         n_query = known_n_query
     elif queries is candidates:
         n_query = n_cand
     else:
-        n_query = _estimate_rows(queries) or queries.count()
-    pair_budget = _pair_budget()
-    over_bytes = n_cand * (m + 16) > _broadcast_byte_budget()
-    over_pairs = n_query * n_cand > pair_budget
-    if over_bytes or over_pairs:
+        n_query = _row_count(queries)
+    reason = _over_budget(n_cand, m + 16, n_query * n_cand)
+    if reason is not None:
         import warnings
 
-        why = (
-            "exceed the broadcast budget even PQ-coded"
-            if over_bytes
-            else f"x {n_query} queries exceed the {pair_budget:.0e} pair budget"
-        )
         warnings.warn(
-            f"knn_pq: ~{n_cand} candidates {why}; degrading to "
-            "knn_ivf_pq (cell-sharded).",
+            f"knn_pq: {reason}; degrading to knn_ivf_pq (cell-sharded).",
             stacklevel=2,
         )
         return knn_ivf_pq(

@@ -32,14 +32,13 @@ Scale design (100 TB):
 
 from __future__ import annotations
 
-import math
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from semantic_ann_in_data_lake_spark.cache import scoped_persist
 from semantic_ann_in_data_lake_spark.functions.text import words
+from semantic_ann_in_data_lake_spark.operators.knn import _over_budget
 
 
 def jaccard_prefix_join(
@@ -155,10 +154,8 @@ def jaccard_prefix_join(
 #: vocabulary ceiling for the bitmask tier: above this the mask width
 #: (⌈V/64⌉ words) makes per-pair popcounts no cheaper than prefix
 #: postings, and a large vocabulary is precisely where prefix filtering
-#: works. Tunable per deployment.
-_BITMASK_VOCAB_CAP = int(__import__("os").environ.get(
-    "SPARK_GRAFT_SETJOIN_BITMASK_VOCAB_CAP", "2048"
-))
+#: works.
+_BITMASK_VOCAB_CAP = 2048
 
 
 def _bitmask_exact_jaccard(toks: DataFrame, threshold: float):
@@ -169,23 +166,13 @@ def _bitmask_exact_jaccard(toks: DataFrame, threshold: float):
     Returns None (caller falls through to the prefix path) unless the
     vocabulary fits ``_BITMASK_VOCAB_CAP``, the mask matrix fits the
     broadcast byte budget, and the n²·words pair work fits the pair
-    budget (``SPARK_GRAFT_KNN_PAIR_BUDGET`` — the same compute ceiling
-    the kNN broadcast tier obeys)."""
+    budget (``knn._over_budget``, the check the kNN broadcast tiers
+    use)."""
     import numpy as np
 
-    from semantic_ann_in_data_lake_spark.operators.knn import (
-        _broadcast_byte_budget,
-        _pair_budget,
-    )
-
-    # BOUNDED dispatch probe: collect at most
-    # cap+1 distinct tokens — enough to decide "vocabulary exceeds the
-    # cap" without ever materializing a large corpus's full vocabulary
-    # on the driver (an unbounded distinct().collect() here was a
-    # driver-OOM hazard on exactly the corpora that must DECLINE the
-    # tier). When the probe comes back within the cap it IS the full
-    # vocabulary (limit didn't truncate), so the bit assignment below
-    # is unchanged.
+    # bounded probe: at most cap+1 distinct tokens decide "vocabulary
+    # exceeds the cap" without collecting a large corpus's vocabulary
+    # on the driver; within the cap it IS the full vocabulary
     vocab_rows = (
         toks.select(F.explode("toks").alias("tok"))
         .distinct()
@@ -197,7 +184,7 @@ def _bitmask_exact_jaccard(toks: DataFrame, threshold: float):
         return None
     n = toks.count()
     w = (v + 63) // 64
-    if n * (w * 8 + 16) > _broadcast_byte_budget() or n * n * w > _pair_budget():
+    if _over_budget(n, w * 8 + 16, n * n * w) is not None:
         return None
     bit = {r["tok"]: i for i, r in enumerate(sorted(vocab_rows))}
     spark = toks.sparkSession
@@ -311,12 +298,6 @@ def _bitmask_exact_jaccard(toks: DataFrame, threshold: float):
         "id_b",
         F.round(F.col("__inter") / F.col("__union"), 6).alias("jaccard"),
     )
-
-
-def required_overlap(size_a: int, size_b: int, threshold: float) -> int:
-    """⌈τ/(1+τ)·(|A|+|B|)⌉ — the overlap bound behind the filter
-    (exposed for tests)."""
-    return math.ceil(threshold / (1.0 + threshold) * (size_a + size_b))
 
 
 def containment_prefix_join(

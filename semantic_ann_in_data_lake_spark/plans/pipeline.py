@@ -41,19 +41,6 @@ def label_truth_pairs(emb: DataFrame) -> DataFrame:
     )
 
 
-def discover_joinable(
-    spark: SparkSession,
-    sf_dir: str,
-    k: int = 10,
-    tau: float = 3.0,
-    strategy: str = "broadcast",
-) -> DataFrame:
-    """embeddings → kNN(k) → √L2 ≤ τ → joinable (query, cand, dist, rank)."""
-    emb = load_embeddings(spark, sf_dir)
-    knn = knn_join(emb, emb, k=k, strategy=strategy)
-    return threshold_join(knn, tau)
-
-
 #: the reference's evaluation grid (``SemLink/config.py:26-27``)
 GRID_KS = [5, 10, 25]
 GRID_TAUS = [0.1, 0.2, 0.3, 0.4]

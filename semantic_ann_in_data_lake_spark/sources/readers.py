@@ -142,16 +142,3 @@ def read_jsonl(spark: SparkSession, path: str, schema: T.StructType | str | None
     if schema is not None:
         reader = reader.schema(schema)
     return reader.json(path)
-
-
-def ground_truth_schema() -> T.StructType:
-    """S3: the 4-column ground-truth pair file
-    (``DeepJoin/repositoryLoader.py:89-92``)."""
-    return T.StructType(
-        [
-            T.StructField("query_table", T.StringType()),
-            T.StructField("query_column", T.StringType()),
-            T.StructField("candidate_table", T.StringType()),
-            T.StructField("candidate_column", T.StringType()),
-        ]
-    )
