@@ -11,7 +11,7 @@ Rotation (round 9): the script no longer re-checks only a fixed tricky
 list. It keeps its own pass record (INVARIANCE.json at the repo root,
 name → sequence number of the last local[5] pass) and orders the
 registry with the SAME policy as the driver gate window
-(plans/registry.py::_gate_ordered): never-checked names first, then
+(__spark_entry__.py::_gate_ordered): never-checked names first, then
 stalest pass first, registration order as the tie-break. Each run
 checks the TRICKY core (the queries that exercise every portability
 discipline) plus the next WINDOW names of that ordering and records

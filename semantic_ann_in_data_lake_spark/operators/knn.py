@@ -4,25 +4,32 @@ The reference does exact flat-L2 kNN with FAISS
 (``SemLink/join_discoverer.py:273-299``) and approximate kNN with an
 HNSW index (``DeepJoin/annIndex.py:6-40``). Spark has no mutable ANN
 index object; instead one logical operator —
-``knn_join(queries, candidates, k)`` — dispatches to three physical
-strategies (SURVEY §4.2):
+``knn_join(queries, candidates, k)`` — dispatches on ``strategy`` to
+thirteen physical strategies (SURVEY §4.2), and ``strategy="auto"``
+picks broadcast, pq, ivf or graph from measured sizes:
 
-a. ``strategy="exact"``   cross join + higher-order-array L2 + ranking
-   window. O(|Q|·|C|·d) but fully declarative, whole-stage-codegen'd,
-   and the one whose semantics the DuckDB oracle can check bit-for-bit.
-b. ``strategy="broadcast"`` collect+broadcast the candidate matrix, then
-   a vectorized numpy top-k per partition via ``mapInPandas`` — the
-   FAISS/hnswlib role. Matches (a) for exact metrics in practice
-   (every gated run agrees hash-exactly), with one theoretical caveat:
-   the BLAS expansion ||q||²-2q·c+||c||² sums in a different order
-   than (a)'s sequential per-element fold, so a distance within ~1 ulp
-   of a 6-dp rounding boundary could round differently. ~50-100×
-   faster since the distance matrix is BLAS-computed. Right whenever
-   candidates fit in executor memory (≤ a few GB of vectors).
-c. ``strategy="lsh"``     random-projection bucket LSH (p-stable hash
-   family) with per-bucket BLAS rescoring — the analog of HNSW
-   approximation; cost stays sub-quadratic when BOTH sides are huge.
-   Quality is judged by the P/R/NDCG harness, not hash-equality.
+- exact: ``exact`` (crossJoin + declarative L2 fold + ranking window,
+  or the bit-identical pairscore superset kernel when the matrices
+  are admitted — the DuckDB oracle checks it hash-for-hash) and
+  ``broadcast`` (the candidate matrix rides a broadcast variable and a
+  BLAS top-k runs per query partition — the FAISS ``IndexFlatL2``
+  role; its Gram-form sum order can differ from the fold by ~1 ulp, so
+  a distance on a rounding boundary could round differently);
+- partitioned approximate: ``lsh`` (p-stable bucket LSH with
+  per-bucket BLAS rescoring) and ``ivf`` (coarse k-means cells,
+  nprobe-cell query probes, exact per-cell scoring);
+- compressed (``operators/pq.py``): ``pq`` (broadcast ADC over
+  product-quantization codes), ``ivf_pq`` (ADC inside IVF cells) and
+  their exact re-rank forms ``pq_refine`` and ``ivf_pq_refine``;
+- projected (``operators/embedproj.py``): ``pca_refine``,
+  ``opq_refine`` and ``nndescent_refine``;
+- graph: ``nndescent`` (self kNN graph, ``operators/nndescent.py``)
+  and ``graph`` (beam search over a candidate graph,
+  ``operators/graphsearch.py`` — the hnswlib ``knn_query`` role).
+
+The IVF and PQ tiers share one quantizer core kept in this module:
+:func:`_sq_l2` (Gram-form squared L2), :func:`_id_sorted_sample`,
+:func:`_lloyd` and :func:`_nearest`.
 
 Distances are SQUARED L2 internally, exactly like FAISS ``IndexFlatL2``
 (the reference thresholds ``dist**0.5 <= tau``,
@@ -143,6 +150,13 @@ def _prep(df: DataFrame, id_col: str, vec_col: str, side: str) -> DataFrame:
     return df.select(
         F.col(id_col).alias(f"{side}_id"),
         F.col(vec_col).cast("array<double>").alias(f"{side}_vec"),
+    )
+
+
+def _empty_topk(spark) -> DataFrame:
+    """The standard ``knn_join`` result with no rows."""
+    return spark.createDataFrame(
+        [], "query_id long, cand_id long, distance double, rank int"
     )
 
 
@@ -612,19 +626,12 @@ def _np_topk_rows(qids, qmat, cids, cmat, k, metric, exclude_self, round_dp,
     """
     import numpy as np
 
-    sq_c = (cmat * cmat).sum(axis=1)
     if metric == "l2_sq":
-        # ||q-c||² = ||q||² - 2q·c + ||c||², BLAS-backed
-        d = (
-            (qmat * qmat).sum(axis=1)[:, None]
-            - 2.0 * (qmat @ cmat.T)
-            + sq_c[None, :]
-        )
-        d = np.maximum(d, 0.0)
+        d = np.maximum(_sq_l2(qmat, cmat), 0.0)
         asc = True
     else:
         qn = np.sqrt((qmat * qmat).sum(axis=1))
-        cn = np.sqrt(sq_c)
+        cn = np.sqrt((cmat * cmat).sum(axis=1))
         d = (qmat @ cmat.T) / (qn[:, None] * cn[None, :] + 1e-12)
         asc = False
     # Vectorized selection (a per-query python loop with a full argsort
@@ -824,9 +831,7 @@ def _knn_lsh(
     q = _prep(queries, id_col, vec_col, "query")
     first = c.select("cand_vec").head(1)
     if not first:
-        return spark.createDataFrame(
-            [], "query_id long, cand_id long, distance double, rank int"
-        )
+        return _empty_topk(spark)
     dim = len(first[0][0])
     rng = np.random.RandomState(seed)
     proj = rng.standard_normal((num_hash_tables, dim))
@@ -912,6 +917,105 @@ def _knn_lsh(
     return _ranked_topk(scored, k, "l2_sq")
 
 
+class _EmptySample(ValueError):
+    """The candidate frame has no rows to fit a quantizer on."""
+
+
+def _sq_l2(x, c):
+    """Squared L2 from every row of ``x`` to every row of ``c`` in the
+    Gram form |x|²-2x·cᵀ+|c|²: BLAS-backed, and it allocates only the
+    (n, k) result where the broadcast difference allocates n·k·d.
+    Every IVF/PQ kernel scores through this one copy, so a fit, an
+    encode and its replay see the same bits. Evaluated in place on
+    the product (a - b == a + (-b) in IEEE, so the bits equal the
+    plain expression's): one (n, k) allocation instead of four, which
+    measured ~0.4 s less per PQ codebook fit beside a live Spark
+    session."""
+    d = x @ c.T
+    d *= -2.0
+    d += (x * x).sum(axis=1)[:, None]
+    d += (c * c).sum(axis=1)[None, :]
+    return d
+
+
+def _id_sorted_sample(c: DataFrame, limit: int):
+    """The first ``limit`` rows of a prepped ``(cand_id, cand_vec)``
+    frame as a float64 matrix, sorted by id: ``limit()`` returns rows in
+    partition-completion order, so the sort keeps every seeded fit
+    reproducible across sessions. Raises :class:`_EmptySample` when
+    the frame has no rows."""
+    import numpy as np
+
+    sample = c.select("cand_id", "cand_vec").limit(limit).toPandas()
+    if sample.empty:
+        raise _EmptySample("no candidate rows to fit a quantizer on")
+    sample = sample.sort_values("cand_id", kind="mergesort")
+    return np.asarray(list(sample["cand_vec"]), dtype=np.float64)
+
+
+def _lloyd(mat, init, iters: int):
+    """``iters`` Lloyd iterations from the centroids ``init``. Each
+    cell's members are summed one after another in row order, so the
+    fit is a pure function of the (id-sorted) sample; an empty cell
+    keeps its centroid."""
+    import numpy as np
+
+    cents = init.copy()
+    for _ in range(iters):
+        assign = _sq_l2(mat, cents).argmin(axis=1)
+        sums = np.zeros_like(cents)
+        np.add.at(sums, assign, mat)
+        counts = np.bincount(assign, minlength=len(cents))
+        nz = counts > 0
+        cents[nz] = sums[nz] / counts[nz, None]
+    return cents
+
+
+def _nearest(x, cents, n: int):
+    """Indices of each row's ``n`` nearest centroids, nearest first,
+    ties to the lower index."""
+    import numpy as np
+
+    return np.argsort(_sq_l2(x, cents), axis=1, kind="stable")[:, :n]
+
+
+def _vectors(pdf):
+    """A batch's vectors as a float64 matrix: its second column, or
+    ``qvec``·``scale`` for the int8 index (:func:`quantize_embeddings`)."""
+    import numpy as np
+
+    if "qvec" in pdf.columns:
+        mat = np.asarray(list(pdf["qvec"]), dtype=np.float64)
+        mat *= pdf["scale"].to_numpy(dtype=np.float64)[:, None]
+        return mat
+    return np.asarray(list(pdf.iloc[:, 1]), dtype=np.float64)
+
+
+def _assign_cells(df: DataFrame, cents, n_cells: int) -> DataFrame:
+    """``df`` plus a ``cells array<int>`` column holding each row's
+    ``n_cells`` nearest centroids (:func:`_nearest` over
+    :func:`_vectors`); the centroids ride one broadcast."""
+    from pyspark.sql.types import ArrayType, IntegerType, StructField, StructType
+
+    bc = df.sparkSession.sparkContext.broadcast(cents)
+
+    def run(batches):
+        cm = bc.value
+        for pdf in batches:
+            if len(pdf) == 0:
+                continue
+            out = pdf.copy()
+            out["cells"] = [
+                row.tolist() for row in _nearest(_vectors(pdf), cm, n_cells)
+            ]
+            yield out
+
+    schema = StructType(
+        df.schema.fields + [StructField("cells", ArrayType(IntegerType()))]
+    )
+    return df.mapInPandas(run, schema=schema)
+
+
 def fit_ivf_centroids(
     c: DataFrame, nlist: int = 16, seed: int = 42, fit: str = "sample"
 ):
@@ -924,10 +1028,8 @@ def fit_ivf_centroids(
     participates, executors hold only their partitions; preferred at
     100 TB when the sample tier isn't representative (many fine cells,
     drifting data). ``fit="sample"``: driver-side Lloyd over a bounded
-    sample — O(sample·d) regardless of table size; the collected
-    sample is sorted by id so the seeded pick (and every approximate
-    IVF result) is reproducible across sessions (limit() returns rows
-    in partition-completion order otherwise)."""
+    id-sorted sample (:func:`_id_sorted_sample`) — O(sample·d)
+    regardless of table size, and reproducible across sessions."""
     import numpy as np
 
     if fit == "kmeans_ml":
@@ -944,34 +1046,10 @@ def fit_ivf_centroids(
             [ctr for ctr in km.clusterCenters()], dtype=np.float64
         )
     if fit == "sample":
-        sample = c.select("cand_id", "cand_vec").limit(100_000).toPandas()
-        sample = sample.sort_values("cand_id", kind="mergesort")
-        mat = np.asarray(list(sample["cand_vec"]), dtype=np.float64)
+        mat = _id_sorted_sample(c, 100_000)
         rng = np.random.RandomState(seed)
-        centroids = mat[
-            rng.choice(len(mat), size=min(nlist, len(mat)), replace=False)
-        ]
-        # BLAS |x|²-2x·c+|c|² form, same as pq.fit_pq: the (n, k, d)
-        # broadcast-subtract allocates n·k·d floats per iteration and
-        # became the dominant cost once nlist started scaling with the
-        # corpus (derive_nlist); the Gram form allocates only n·k.
-        sq = (mat * mat).sum(axis=1)[:, None]
-        for _ in range(10):  # Lloyd iterations, driver-side on the sample
-            d2 = (
-                sq
-                - 2.0 * (mat @ centroids.T)
-                + (centroids * centroids).sum(axis=1)[None, :]
-            )
-            assign = d2.argmin(axis=1)
-            # vectorized per-cell mean: bincount sums per assigned cell
-            counts = np.bincount(assign, minlength=len(centroids))
-            for j in range(mat.shape[1]):
-                sums = np.bincount(
-                    assign, weights=mat[:, j], minlength=len(centroids)
-                )
-                nz = counts > 0
-                centroids[nz, j] = sums[nz] / counts[nz]
-        return centroids
+        init = mat[rng.choice(len(mat), size=min(nlist, len(mat)), replace=False)]
+        return _lloyd(mat, init, 10)
     raise ValueError(f"unknown ivf fit {fit!r}")
 
 
@@ -996,72 +1074,30 @@ def _knn_ivf(
     true neighbor may live in an unprobed cell.
     """
     import numpy as np
-    import pandas as pd
 
     spark = queries.sparkSession
+    if compress not in (None, "int8"):
+        raise ValueError(f"unknown compress {compress!r}")
     c = _prep(candidates, id_col, vec_col, "cand")
-    centroids = fit_ivf_centroids(c, nlist=nlist, seed=seed, fit=fit)
-    bc = spark.sparkContext.broadcast(centroids)
-
-    def assign_cells(n_cells: int):
-        def run(batches):
-            cents = bc.value
-            for pdf in batches:
-                if len(pdf) == 0:
-                    continue
-                vecs = np.asarray(list(pdf.iloc[:, 1]), dtype=np.float64)
-                d2 = (
-                    (vecs * vecs).sum(axis=1)[:, None]
-                    - 2.0 * (vecs @ cents.T)
-                    + (cents * cents).sum(axis=1)[None, :]
-                )
-                order = np.argsort(d2, axis=1, kind="stable")[:, :n_cells]
-                out = pdf.copy()
-                out["cells"] = [row.tolist() for row in order]
-                yield out
-
-        return run
-
+    try:
+        centroids = fit_ivf_centroids(c, nlist=nlist, seed=seed, fit=fit)
+    except _EmptySample:
+        return _empty_topk(spark)
     if compress == "int8":
         # The candidate side crosses the cell shuffle as the int8 index
         # (8× narrower than float64); cells dequantize qvec·scale at
         # scoring time. Distances become quantization-approximate —
         # same contract as the broadcast int8 tier.
-        cq = quantize_embeddings(candidates, id_col, vec_col).select(
+        c = quantize_embeddings(candidates, id_col, vec_col).select(
             F.col("vec_id").alias("cand_id"), "scale", "qvec"
         )
-
-        def assign_q(batches):
-            cents = bc.value
-            for pdf in batches:
-                if len(pdf) == 0:
-                    continue
-                vecs = np.asarray(list(pdf["qvec"]), dtype=np.float64)
-                vecs *= pdf["scale"].to_numpy(dtype=np.float64)[:, None]
-                d2 = (
-                    (vecs * vecs).sum(axis=1)[:, None]
-                    - 2.0 * (vecs @ cents.T)
-                    + (cents * cents).sum(axis=1)[None, :]
-                )
-                out = pdf.copy()
-                out["cell"] = d2.argmin(axis=1).astype("int32")
-                yield out
-
-        c_cells = cq.mapInPandas(
-            assign_q, schema="cand_id long, scale double, qvec array<int>, cell int"
-        )
-    elif compress is None:
-        c_cells = c.mapInPandas(
-            assign_cells(1),
-            schema="cand_id long, cand_vec array<double>, cells array<int>",
-        ).select("cand_id", "cand_vec", F.col("cells")[0].alias("cell"))
-    else:
-        raise ValueError(f"unknown compress {compress!r}")
+    c_cells = _assign_cells(c, centroids, 1).select(
+        *c.columns, F.col("cells")[0].alias("cell")
+    )
     q = _prep(queries, id_col, vec_col, "query")
-    q_cells = q.mapInPandas(
-        assign_cells(nprobe),
-        schema="query_id long, query_vec array<double>, cells array<int>",
-    ).select("query_id", "query_vec", F.explode("cells").alias("cell"))
+    q_cells = _assign_cells(q, centroids, nprobe).select(
+        "query_id", "query_vec", F.explode("cells").alias("cell")
+    )
 
     # Per-cell BLAS scoring with a LOCAL top-k, then a global merge over
     # ≤ nprobe·k survivors per query — the classic IVF merge. The naive
@@ -1080,11 +1116,7 @@ def _knn_ivf(
         if len(qpdf) == 0 or len(cpdf) == 0:
             return pd.DataFrame(columns=cols)
         cids = cpdf["cand_id"].to_numpy(dtype=np.int64)
-        if "cand_vec" in cpdf.columns:
-            cmat = np.asarray(list(cpdf["cand_vec"]), dtype=np.float64)
-        else:  # int8 cells: dequantize qvec·scale at scoring time
-            cmat = np.asarray(list(cpdf["qvec"]), dtype=np.float64)
-            cmat *= cpdf["scale"].to_numpy(dtype=np.float64)[:, None]
+        cmat = _vectors(cpdf)
         order = np.argsort(cids)
         cids, cmat = cids[order], cmat[order]
         qids = qpdf["query_id"].to_numpy(dtype=np.int64)

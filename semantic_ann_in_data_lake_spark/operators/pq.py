@@ -15,7 +15,7 @@ Scale design:
 
 - Codebooks are tiny (m·ksub·dsub doubles) and train on a bounded,
   id-sorted, seeded sample — same reproducibility discipline as the
-  IVF ``fit="sample"`` tier (``knn.py:586``).
+  IVF ``fit="sample"`` tier (``knn._id_sorted_sample``).
 - Encoding is one Arrow-batched ``mapInPandas`` pass (vectorized
   argmin per subspace); encoded candidates are what an index build
   persists (cf. SURVEY §4.3's parquet index redesign).
@@ -39,10 +39,17 @@ from pyspark.sql import functions as F
 
 from semantic_ann_in_data_lake_spark.operators.knn import (
     DEFAULT_ROUND_DP,
+    _assign_cells,
+    _empty_topk,
+    _EmptySample,
+    _id_sorted_sample,
+    _lloyd,
+    _nearest,
     _over_budget,
     _prep,
     _ranked_topk,
     _row_count,
+    _sq_l2,
     _vec_dim,
     derive_nlist,
 )
@@ -79,21 +86,15 @@ def train_pq_codebooks(
     (seeded) — deterministic across sessions and partitionings. The
     vector dim must divide evenly into ``m`` subspaces.
     """
-    import numpy as np
-
-    sample = (
-        _prep(candidates, id_col, vec_col, "cand")
-        .limit(sample_limit)
-        .toPandas()
-        .sort_values("cand_id", kind="mergesort")
+    mat = _id_sorted_sample(
+        _prep(candidates, id_col, vec_col, "cand"), sample_limit
     )
-    mat = np.asarray(list(sample["cand_vec"]), dtype=np.float64)
     return _books_from_mat(mat, m, ksub, seed, iters)
 
 
 def _books_from_mat(mat, m: int | None, ksub: int, seed: int, iters: int = 10):
     """Codebooks from an in-memory sample matrix (shared by
-    train_pq_codebooks and knn_ivf_pq, which reuses ONE collected
+    train_pq_codebooks and fit_ivf_pq, which reuses ONE collected
     sample for both the coarse quantizer and the codebooks)."""
     import numpy as np
 
@@ -108,40 +109,79 @@ def _books_from_mat(mat, m: int | None, ksub: int, seed: int, iters: int = 10):
     for j in range(m):
         sub = mat[:, j * dsub:(j + 1) * dsub]
         k_eff = min(ksub, len(sub))
-        cents = sub[rng.choice(len(sub), size=k_eff, replace=False)]
-        sub_sq = (sub * sub).sum(axis=1)[:, None]
-        for _ in range(iters):
-            # BLAS expansion |x|²-2x·c+|c|²: O(n·ksub) memory — the
-            # (n, ksub, dsub) broadcast form allocates ~800 MB per
-            # iteration at the 100k sample (measured; dominated the
-            # tier's bench time)
-            d2 = (
-                sub_sq
-                - 2.0 * (sub @ cents.T)
-                + (cents * cents).sum(axis=1)[None, :]
-            )
-            assign = d2.argmin(axis=1)
-            # vectorized centroid update (round-11): the former
-            # per-cluster boolean-mask loop cost ~2.5 s of the 2.9 s
-            # fit at the 100k-sample posture (k_eff·iters·m mask scans
-            # of the sample). np.add.at accumulates deterministically
-            # in row order of the id-sorted sample, so the fit stays a
-            # pure function of the input (summation grouping differs
-            # from the old per-cluster mean at fp noise level — fit
-            # QUALITY is what's pinned, by the pytest recall floors;
-            # no oracle replays this fit, the recall meta-gates use
-            # the hash-picked codewords).
-            sums = np.zeros((k_eff, cents.shape[1]))
-            np.add.at(sums, assign, sub)
-            counts = np.bincount(assign, minlength=k_eff)
-            nz = counts > 0
-            cents[nz] = sums[nz] / counts[nz, None].astype(np.float64)
+        cents = _lloyd(
+            sub, sub[rng.choice(len(sub), size=k_eff, replace=False)], iters
+        )
         if k_eff < ksub:  # degenerate tiny input: pad by repetition
             cents = np.concatenate(
                 [cents, np.repeat(cents[:1], ksub - k_eff, axis=0)]
             )
         books[j] = cents
     return books
+
+
+def _pq_codes(x, books):
+    """Each row's nearest codeword index per subspace: (n, m) int64."""
+    import numpy as np
+
+    m, _, dsub = books.shape
+    codes = np.empty((len(x), m), dtype=np.int64)
+    for j in range(m):
+        sub = x[:, j * dsub:(j + 1) * dsub]
+        codes[:, j] = _sq_l2(sub, books[j]).argmin(axis=1)
+    return codes
+
+
+def _pq_reconstruct(codes, books):
+    """The codeword concatenation each code row stands for: (n, m·dsub)."""
+    import numpy as np
+
+    m, _, dsub = books.shape
+    dec = np.empty((len(codes), m * dsub), dtype=np.float64)
+    for j in range(m):
+        dec[:, j * dsub:(j + 1) * dsub] = books[j][codes[:, j]]
+    return dec
+
+
+def _adc_topk_rows(
+    qids, qmat, cids, code_cols, books, k, exclude_self, round_dp
+):
+    """ADC top-k: ``(query_id, cand_id, distance)`` rows, the k best per
+    query by distance rounded to ``round_dp``. ``cids`` MUST be sorted
+    (the stable argsort then breaks ties by id); ``code_cols[j]`` is
+    subspace j's code column offset by ``j·ksub`` into the flat lookup
+    table.
+
+    The lookup tables for the whole batch are built at once (per
+    subspace one BLAS pass, (nq, m·ksub)); distances are then gathered
+    in 256-query blocks, accumulating one subspace at a time, so peak
+    memory is ONE (block, n_cand) array — the fused fancy gather
+    ``lut[block, flat_codes]`` materializes (block, n_cand, m), m×
+    larger, which OOMs the python worker at broadcast-tier candidate
+    counts before the broadcast budget ever binds."""
+    import numpy as np
+
+    mm, kk, dsub = books.shape
+    lut = np.empty((len(qmat), mm * kk), dtype=np.float64)
+    for j in range(mm):
+        lut[:, j * kk:(j + 1) * kk] = _sq_l2(
+            qmat[:, j * dsub:(j + 1) * dsub], books[j]
+        )
+    rows = []
+    for lo in range(0, len(qmat), 256):
+        hi = min(lo + 256, len(qmat))
+        blk = lut[lo:hi]
+        dist = blk[:, code_cols[0]]
+        for col in code_cols[1:]:
+            dist += blk[:, col]
+        if exclude_self:
+            dist[qids[lo:hi, None] == cids[None, :]] = np.inf
+        dr = np.round(dist, round_dp)
+        for qi in range(hi - lo):
+            take = min(k, int((dr[qi] < np.inf).sum()))
+            for j in np.argsort(dr[qi], kind="stable")[:take]:
+                rows.append((int(qids[lo + qi]), int(cids[j]), float(dr[qi, j])))
+    return rows
 
 
 def pq_encode(
@@ -162,20 +202,11 @@ def pq_encode(
         import pandas as pd
 
         books = bc.value
-        m, ksub, dsub = books.shape
         for pdf in batches:
             if len(pdf) == 0:
                 continue
             vecs = np.asarray(list(pdf["cand_vec"]), dtype=np.float64)
-            codes = np.empty((len(vecs), m), dtype=np.int64)
-            for j in range(m):
-                sub = vecs[:, j * dsub:(j + 1) * dsub]
-                d2 = (
-                    (sub * sub).sum(axis=1)[:, None]
-                    - 2.0 * (sub @ books[j].T)
-                    + (books[j] * books[j]).sum(axis=1)[None, :]
-                )
-                codes[:, j] = d2.argmin(axis=1)
+            codes = _pq_codes(vecs, books)
             yield pd.DataFrame(
                 {"vec_id": pdf["cand_id"], "codes": list(codes)}
             )
@@ -238,9 +269,12 @@ def knn_pq(
             ksub=ksub, exclude_self=exclude_self, round_dp=round_dp,
             seed=seed,
         )
-    books = train_pq_codebooks(
-        candidates, id_col, vec_col, m=m, ksub=ksub, seed=seed
-    )
+    try:
+        books = train_pq_codebooks(
+            candidates, id_col, vec_col, m=m, ksub=ksub, seed=seed
+        )
+    except _EmptySample:
+        return _empty_topk(spark)
     coded = pq_encode(candidates, books, id_col, vec_col).toPandas()
     cand_ids = coded["vec_id"].to_numpy(dtype=np.int64)
     codes = np.asarray(list(coded["codes"]), dtype=np.int64)
@@ -257,70 +291,26 @@ def knn_pq(
         import pandas as pd
 
         cids, cds, bks = bc.value
-        mm, kk, dsub = bks.shape
-        # flatten codes once per worker: dist row = lut.flat[off + code]
-        # per-subspace code columns for the accumulating gather below
-        code_cols = [cds[:, j] + j * kk for j in range(mm)]
+        # offset each subspace's codes into the flat lookup table once
+        # per worker, not once per batch
+        kk = bks.shape[1]
+        code_cols = [cds[:, j] + j * kk for j in range(bks.shape[0])]
         for pdf in batches:
             if len(pdf) == 0:
                 continue
             qmat = np.asarray(list(pdf["query_vec"]), dtype=np.float64)
             qids = pdf["query_id"].to_numpy(dtype=np.int64)
-            # ADC lookup tables for the WHOLE batch at once: per
-            # subspace, |q_sub|² - 2 q_sub·c + |c|² → (nq, m·ksub);
-            # then distances for all (query, candidate) pairs are one
-            # fancy-indexed gather + sum — no per-query Python loop in
-            # the LUT build (measured ~2× on the bench tier).
-            lut = np.empty((len(qmat), mm * kk), dtype=np.float64)
-            for j in range(mm):
-                q_sub = qmat[:, j * dsub:(j + 1) * dsub]
-                lut[:, j * kk:(j + 1) * kk] = (
-                    (q_sub * q_sub).sum(axis=1)[:, None]
-                    - 2.0 * (q_sub @ bks[j].T)
-                    + (bks[j] * bks[j]).sum(axis=1)[None, :]
-                )
-            rows = []
-            # 256-query blocks bound the (block, n_cand) gather at
-            # ~2 MB per 1k candidates — batch-vectorized without an
-            # O(nq·nc) allocation spike
-            for lo in range(0, len(qmat), 256):
-                hi = min(lo + 256, len(qmat))
-                # accumulate per subspace: peak memory is ONE
-                # (block, n_cand) array — the fused fancy gather
-                # lut[block, flat_codes] materializes (block, n_cand, m),
-                # m× larger, which at broadcast-tier candidate counts
-                # OOMs the python worker before the broadcast budget
-                # ever binds
-                blk = lut[lo:hi]
-                dist = blk[:, code_cols[0]].copy()
-                for j in range(1, mm):
-                    dist += blk[:, code_cols[j]]
-                if exclude_self:
-                    dist[qids[lo:hi, None] == cids[None, :]] = np.inf
-                dr = np.round(dist, round_dp)
-                for qi in range(hi - lo):
-                    take = min(k, int((dr[qi] < np.inf).sum()))
-                    idx = np.argsort(dr[qi], kind="stable")[:take]
-                    for r, j in enumerate(idx, start=1):
-                        rows.append(
-                            (
-                                int(qids[lo + qi]),
-                                int(cids[j]),
-                                float(dr[qi, j]),
-                                r,
-                            )
-                        )
-            yield pd.DataFrame(
-                rows, columns=["query_id", "cand_id", "distance", "rank"]
+            rows = _adc_topk_rows(
+                qids, qmat, cids, code_cols, bks, k, exclude_self, round_dp
             )
+            yield pd.DataFrame(rows, columns=["query_id", "cand_id", "distance"])
 
     scored = q.mapInPandas(
-        topk, schema="query_id long, cand_id long, distance double, rank int"
+        topk, schema="query_id long, cand_id long, distance double"
     )
-    # rank locally then re-rank declaratively for the standard contract
-    return _ranked_topk(
-        scored.select("query_id", "cand_id", "distance"), k, "l2_sq"
-    )
+    # each worker keeps its local top-k; the declarative window ranks
+    # them for the standard contract
+    return _ranked_topk(scored, k, "l2_sq")
 
 
 def fit_ivf_pq(
@@ -329,11 +319,9 @@ def fit_ivf_pq(
 ):
     """Coarse centroids + RESIDUAL codebooks for the IVF-PQ tier, from
     ONE collected bounded id-sorted seeded sample (a second
-    limit().toPandas() would double the driver collection); Lloyd in
-    the BLAS |x|²-2x·c+|c|² form — the (n, nlist, dim) broadcast
-    difference allocates ~800 MB/iteration at the 100k sample (the
-    exact cost _books_from_mat's comment documents). Deterministic, so
-    the ADC contract check can replay the identical quantization.
+    limit().toPandas() would double the driver collection).
+    Deterministic, so the ADC contract check can replay the identical
+    quantization.
 
     Residual codebooks (FAISS IVF-PQ): quantize x − centroid(cell),
     not x. Residuals are centered and much smaller in norm than raw
@@ -343,39 +331,22 @@ def fit_ivf_pq(
     true distance with strictly less quantization error."""
     import numpy as np
 
-    sample = (
-        c.limit(100_000).toPandas().sort_values("cand_id", kind="mergesort")
-    )
-    mat = np.asarray(list(sample["cand_vec"]), dtype=np.float64)
+    mat = _id_sorted_sample(c, 100_000)
     rng = np.random.RandomState(seed)
-    cents = mat[rng.choice(len(mat), size=min(nlist, len(mat)), replace=False)]
-    mat_sq = (mat * mat).sum(axis=1)[:, None]
-    for _ in range(10):
-        d2 = (
-            mat_sq
-            - 2.0 * (mat @ cents.T)
-            + (cents * cents).sum(axis=1)[None, :]
-        )
-        assign = d2.argmin(axis=1)
-        for j in range(len(cents)):
-            members = mat[assign == j]
-            if len(members):
-                cents[j] = members.mean(axis=0)
-    d2 = (
-        mat_sq - 2.0 * (mat @ cents.T) + (cents * cents).sum(axis=1)[None, :]
-    )
-    books = _books_from_mat(mat - cents[d2.argmin(axis=1)], m, ksub, seed)
-    return cents, books
+    init = mat[rng.choice(len(mat), size=min(nlist, len(mat)), replace=False)]
+    cents = _lloyd(mat, init, 10)
+    residuals = mat - cents[_nearest(mat, cents, 1)[:, 0]]
+    return cents, _books_from_mat(residuals, m, ksub, seed)
 
 
 def ivf_pq_encode(
     candidates: DataFrame, cents, books,
     id_col: str = "vec_id", vec_col: str = "embedding",
 ) -> DataFrame:
-    """Standalone (cand_id, codes, cell) encoder under a FIXED
-    quantizer — the replayable half of the IVF-PQ contract check (and
-    the nightly-index form of the encode knn_ivf_pq performs
-    inline)."""
+    """(cand_id, codes, cell) under a FIXED quantizer: each vector's
+    nearest cell and the PQ codes of its residual to that cell's
+    centroid. The one IVF-PQ encoder — :func:`knn_ivf_pq` builds its
+    cells with it and the contract check replays it."""
     import numpy as np
 
     spark = candidates.sparkSession
@@ -386,27 +357,12 @@ def ivf_pq_encode(
         import pandas as pd
 
         cents_, books_ = bc.value
-        mm, _, dsub = books_.shape
         for pdf in batches:
             if len(pdf) == 0:
                 continue
             vecs = np.asarray(list(pdf["cand_vec"]), dtype=np.float64)
-            d2 = (
-                (vecs * vecs).sum(axis=1)[:, None]
-                - 2.0 * (vecs @ cents_.T)
-                + (cents_ * cents_).sum(axis=1)[None, :]
-            )
-            cell = d2.argmin(axis=1).astype("int32")
-            res = vecs - cents_[cell]
-            codes = np.empty((len(vecs), mm), dtype=np.int64)
-            for j in range(mm):
-                sub = res[:, j * dsub:(j + 1) * dsub]
-                sd2 = (
-                    (sub * sub).sum(axis=1)[:, None]
-                    - 2.0 * (sub @ books_[j].T)
-                    + (books_[j] * books_[j]).sum(axis=1)[None, :]
-                )
-                codes[:, j] = sd2.argmin(axis=1)
+            cell = _nearest(vecs, cents_, 1)[:, 0].astype("int32")
+            codes = _pq_codes(vecs - cents_[cell], books_)
             yield pd.DataFrame(
                 {
                     "cand_id": pdf["cand_id"].to_numpy(dtype=np.int64),
@@ -434,14 +390,11 @@ def ivf_pq_decode(coded: DataFrame, cents, books) -> DataFrame:
         import pandas as pd
 
         cents_, books_ = bc.value
-        mm, _, dsub = books_.shape
         for pdf in batches:
             if len(pdf) == 0:
                 continue
             cs = np.asarray(list(pdf["codes"]), dtype=np.int64)
-            dec = np.empty((len(cs), mm * dsub), dtype=np.float64)
-            for j in range(mm):
-                dec[:, j * dsub:(j + 1) * dsub] = books_[j][cs[:, j]]
+            dec = _pq_reconstruct(cs, books_)
             dec += cents_[pdf["cell"].to_numpy(dtype=np.int64)]
             yield pd.DataFrame(
                 {
@@ -485,115 +438,42 @@ def knn_ivf_pq(
     import pandas as pd
 
     spark = queries.sparkSession
-    c = _prep(candidates, id_col, vec_col, "cand")
-
     if nlist is None:
         # mirror knn_join's explicit-IVF default: cells scale ≈ √n so
         # per-cell ADC work stays bounded as the corpus grows
         nlist = derive_nlist(candidates)
-    cents, books = fit_ivf_pq(c, nlist=nlist, m=m, ksub=ksub, seed=seed)
-    bc = spark.sparkContext.broadcast((cents, np.asarray(books)))
-
-    def encode_and_cell(batches):
-        cents_, books_ = bc.value
-        mm, kk, dsub = books_.shape
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            vecs = np.asarray(list(pdf["cand_vec"]), dtype=np.float64)
-            d2 = (
-                (vecs * vecs).sum(axis=1)[:, None]
-                - 2.0 * (vecs @ cents_.T)
-                + (cents_ * cents_).sum(axis=1)[None, :]
-            )
-            cell = d2.argmin(axis=1).astype("int32")
-            vecs = vecs - cents_[cell]  # residual encoding (see above)
-            codes = np.empty((len(vecs), mm), dtype=np.int64)
-            for j in range(mm):
-                sub = vecs[:, j * dsub:(j + 1) * dsub]
-                sd2 = (
-                    (sub * sub).sum(axis=1)[:, None]
-                    - 2.0 * (sub @ books_[j].T)
-                    + (books_[j] * books_[j]).sum(axis=1)[None, :]
-                )
-                codes[:, j] = sd2.argmin(axis=1)
-            yield pd.DataFrame(
-                {
-                    "cand_id": pdf["cand_id"],
-                    "codes": list(codes),
-                    "cell": cell,
-                }
-            )
-
-    c_cells = c.mapInPandas(
-        encode_and_cell, schema="cand_id long, codes array<int>, cell int"
-    )
-
-    def probe_cells(batches):
-        cents_, _books = bc.value
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            vecs = np.asarray(list(pdf["query_vec"]), dtype=np.float64)
-            d2 = (
-                (vecs * vecs).sum(axis=1)[:, None]
-                - 2.0 * (vecs @ cents_.T)
-                + (cents_ * cents_).sum(axis=1)[None, :]
-            )
-            order = np.argsort(d2, axis=1, kind="stable")[:, :nprobe]
-            out = pdf.copy()
-            out["cells"] = [row.tolist() for row in order]
-            yield out
-
-    q = _prep(queries, id_col, vec_col, "query")
-    q_cells = q.mapInPandas(
-        probe_cells,
-        schema="query_id long, query_vec array<double>, cells array<int>",
+    try:
+        cents, books = fit_ivf_pq(
+            _prep(candidates, id_col, vec_col, "cand"),
+            nlist=nlist, m=m, ksub=ksub, seed=seed,
+        )
+    except _EmptySample:
+        return _empty_topk(spark)
+    c_cells = ivf_pq_encode(candidates, cents, books, id_col, vec_col)
+    q_cells = _assign_cells(
+        _prep(queries, id_col, vec_col, "query"), cents, nprobe
     ).select("query_id", "query_vec", F.explode("cells").alias("cell"))
+    bc = spark.sparkContext.broadcast((cents, books))
 
     def score_cell(key, qpdf, cpdf):
         cols = ["query_id", "cand_id", "distance"]
         if len(qpdf) == 0 or len(cpdf) == 0:
             return pd.DataFrame(columns=cols)
         cents_, books_ = bc.value
-        mm, kk, dsub = books_.shape
         cids = cpdf["cand_id"].to_numpy(dtype=np.int64)
         codes = np.asarray(list(cpdf["codes"]), dtype=np.int64)
         order = np.argsort(cids)
         cids, codes = cids[order], codes[order]
-        code_cols = [codes[:, j] + j * kk for j in range(mm)]
+        kk = books_.shape[1]
+        code_cols = [codes[:, j] + j * kk for j in range(books_.shape[0])]
         qids = qpdf["query_id"].to_numpy(dtype=np.int64)
         qmat = np.asarray(list(qpdf["query_vec"]), dtype=np.float64)
         # the query also moves to THIS cell's residual frame — the
         # cogroup key is the cell id
         qmat = qmat - cents_[int(key[0])][None, :]
-        # batch LUT build (see knn_pq.topk): (nq, m·ksub) in one BLAS
-        # pass per subspace, then a blocked gather over the cell
-        lut = np.empty((len(qmat), mm * kk), dtype=np.float64)
-        for j in range(mm):
-            q_sub = qmat[:, j * dsub:(j + 1) * dsub]
-            lut[:, j * kk:(j + 1) * kk] = (
-                (q_sub * q_sub).sum(axis=1)[:, None]
-                - 2.0 * (q_sub @ books_[j].T)
-                + (books_[j] * books_[j]).sum(axis=1)[None, :]
-            )
-        rows = []
-        for lo in range(0, len(qmat), 256):
-            hi = min(lo + 256, len(qmat))
-            blk = lut[lo:hi]
-            dist = blk[:, code_cols[0]].copy()  # see knn_pq: (block, n_cand) peak
-            for j in range(1, mm):
-                dist += blk[:, code_cols[j]]
-            if exclude_self:
-                dist[qids[lo:hi, None] == cids[None, :]] = np.inf
-            dr = np.round(dist, round_dp)
-            for qi in range(hi - lo):
-                take = min(k, int((dr[qi] < np.inf).sum()))
-                idx = np.argsort(dr[qi], kind="stable")[:take]
-                for j in idx:
-                    rows.append(
-                        (int(qids[lo + qi]), int(cids[j]), float(dr[qi, j]))
-                    )
+        rows = _adc_topk_rows(
+            qids, qmat, cids, code_cols, books_, k, exclude_self, round_dp
+        )
         return pd.DataFrame(rows, columns=cols)
 
     scored = (
@@ -617,16 +497,7 @@ def _exact_rerank(
 ) -> DataFrame:
     """Shared refine stage: re-score a (query_id, cand_id) shortlist
     exactly on the raw vectors (two n·k′-row equi-joins + the
-    declarative L2² fold) and return the standard ranked top-k.
-
-    Round-12 negative result, kept honest: routing this through the
-    pairscore kernel (operators/pairscore.py — a clear win inside the
-    NN-descent rounds) measured a WASH here (interleaved best-of-3 at
-    sf0.1: 3.88 s kernel vs 3.60 s joins on knn_ivf_pq_refine_l2_k10,
-    similar on pca/opq/lloyd) — the shortlist is only n·k·rf rows, so
-    the per-call driver collect of the vector matrix costs what the
-    join + fold saves. The declarative path stays; the kernel remains
-    the NN-descent scorer where the pair volume justifies it."""
+    declarative L2² fold) and return the standard ranked top-k."""
     from semantic_ann_in_data_lake_spark.functions.vectors import l2_sq
 
     qv = queries.select(
@@ -806,14 +677,11 @@ def pq_decode(
         import pandas as pd
 
         bks = bc.value
-        mm, _, dsub = bks.shape
         for pdf in batches:
             if len(pdf) == 0:
                 continue
             cs = np.asarray(list(pdf["codes"]), dtype=np.int64)
-            dec = np.empty((len(cs), mm * dsub), dtype=np.float64)
-            for j in range(mm):
-                dec[:, j * dsub:(j + 1) * dsub] = bks[j][cs[:, j]]
+            dec = _pq_reconstruct(cs, bks)
             yield pd.DataFrame(
                 {
                     "vec_id": pdf[id_col].to_numpy(dtype=np.int64),

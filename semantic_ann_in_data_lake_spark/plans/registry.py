@@ -43,86 +43,6 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return read_table(spark, sf_dir, name)
 
 
-def _load_official_record(
-    root: str | None = None,
-) -> tuple[dict[str, int], frozenset[str]]:
-    """Scan the committed CORRECTNESS_r*.json driver records (repo
-    root) and return (name -> round of most recent GREEN official row,
-    names whose LAST row is red). Self-maintaining: each new round's
-    file re-derives the gate state — no hand-updated literal to forget
-    (the round-5 red rows happened exactly because the static waiter
-    set went stale). Missing/unreadable files degrade to "everything
-    is a debut", which only affects ordering, never membership."""
-    import glob
-    import json
-    import os
-    import re
-
-    if root is None:
-        # plans/registry.py -> plans -> package -> repo root
-        root = os.path.dirname(os.path.dirname(
-            os.path.dirname(os.path.abspath(__file__))))
-    latest: dict[str, tuple[int, bool]] = {}
-    for p in sorted(glob.glob(os.path.join(root, "CORRECTNESS_r*.json"))):
-        m = re.search(r"CORRECTNESS_r(\d+)\.json$", p)
-        if not m:
-            continue
-        rnd = int(m.group(1))
-        try:
-            with open(p) as f:
-                rows = json.load(f)
-        except Exception:
-            continue
-        for name, row in rows.items():
-            # green requires no error AND no False match flag: rounds
-            # 1-3 recorded rows with err=None but hash_match=False
-            # (e.g. deepjoin_eval r01) — those are failures to retry,
-            # not evidence. None flags (rows-only history) don't
-            # disqualify; only an explicit False does.
-            green = isinstance(row, dict) and row.get("err") is None and not any(
-                row.get(k) is False
-                for k in ("rows_match", "schema_match", "hash_match")
-            )
-            prev = latest.get(name)
-            if prev is None or rnd >= prev[0]:
-                latest[name] = (rnd, green)
-    green_round = {n: r for n, (r, g) in latest.items() if g}
-    red_last = frozenset(n for n, (r, g) in latest.items() if not g)
-    return green_round, red_last
-
-
-#: name -> round of its most recent GREEN official driver row, and the
-#: names whose LAST official row is red (floated to the front of the
-#: gate window so the red row is replaced with a green one ASAP).
-#: Derived at import from the committed CORRECTNESS files.
-_GREEN_ROUND, _GATE_RED_RETRY = _load_official_record()
-
-
-def _gate_ordered(names) -> list[str]:
-    """Order the driver-facing gate window (round-agnostic policy):
-
-    1. red-retry names (replace a red official row with a green one);
-    2. debuts — names with no official row yet, oracled ones first
-       (an oracled debut yields a hash-gated row, the strongest
-       evidence; a None-oracle name never reaches the driver at all,
-       see :func:`queries`);
-    3. everything already green, STALEST round first — the driver
-       re-validates the oldest evidence each round instead of
-       re-sampling last round's rows.
-
-    sorted() is stable, so registration order is the free tie-break
-    within each rank.
-    """
-    def rank(n: str) -> tuple:
-        if n in _GATE_RED_RETRY:
-            return (0, 0)
-        if n not in _GREEN_ROUND:
-            return (1, 0 if REGISTRY[n][1] is not None else 1)
-        return (2, _GREEN_ROUND[n])
-
-    return sorted(names, key=rank)
-
-
 def queries() -> dict[str, QueryFn]:
     """Driver-facing query surface: every ORACLED registry entry.
 
@@ -131,29 +51,22 @@ def queries() -> dict[str, QueryFn]:
     so a None-oracle name in its sample window is an unavoidable red
     `no_oracle` row (VERDICT r5 "What's wrong" #1). Each hidden entry's
     correctness is carried by a hash-gated `*_distcheck`/`*_bounds`
-    companion that IS exposed and green.
+    companion that IS exposed and green. Registration order; the
+    entry module (``__spark_entry__.py``) orders its gate window.
     """
-    return {
-        name: REGISTRY[name][0]
-        for name in _gate_ordered(REGISTRY)
-        if REGISTRY[name][1] is not None
-    }
+    return {name: fn for name, (fn, sql) in REGISTRY.items() if sql is not None}
 
 
 def oracle_sql() -> dict[str, str]:
-    return {
-        name: REGISTRY[name][1]
-        for name in _gate_ordered(REGISTRY)
-        if REGISTRY[name][1] is not None
-    }
+    return {name: sql for name, (_, sql) in REGISTRY.items() if sql is not None}
 
 
 # ---------------------------------------------------------------------------
 # Domain modules (split from this file in round 4). Importing them runs
 # their @register decorators, populating REGISTRY; the star re-exports
 # keep `registry.<query_fn>` references (tests, bench, docs) working.
-# Import order is irrelevant to the driver gate: _gate_ordered decides
-# the gate-window priority, not dict insertion.
+# Import order is irrelevant to the gate window: __spark_entry__.py
+# decides the gate-window priority, not dict insertion.
 # ---------------------------------------------------------------------------
 
 from semantic_ann_in_data_lake_spark.plans.q_profile import *  # noqa: E402,F401,F403

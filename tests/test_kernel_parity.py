@@ -92,6 +92,36 @@ def test_exact_kernels_match_declarative_twins(spark, monkeypatch, corpus):
         assert live[kernel] == want, kernel
 
 
+# the quantizer tiers, as knn_join strategy + options
+_QUANTIZER_TIERS = {
+    "ivf": {"strategy": "ivf"},
+    "ivf_int8": {"strategy": "ivf", "compress": "int8"},
+    "pq": {"strategy": "pq"},
+    "pq_refine": {"strategy": "pq_refine"},
+    "ivf_pq": {"strategy": "ivf_pq"},
+    "ivf_pq_refine": {"strategy": "ivf_pq_refine"},
+}
+
+
+@pytest.mark.parametrize("tier", list(_QUANTIZER_TIERS))
+@pytest.mark.parametrize("corpus", ["empty", "n_1", "n_le_k"])
+def test_quantizer_tiers_match_exact_on_tiny_corpora(spark, corpus, tier):
+    """With n ≤ nprobe cells every cell is probed, and with n ≤ ksub
+    every vector is its own codeword, so each approximate tier must
+    return exactly the exact tier's rows — none for an empty frame."""
+    from semantic_ann_in_data_lake_spark.operators.knn import knn_join
+
+    id_type, rows, k, round_dp, _ = CORPORA[corpus]
+    df = spark.createDataFrame(
+        rows, f"vec_id {id_type}, embedding array<double>"
+    )
+    want = _rows(knn_join(df, df, k=k, strategy="exact", round_dp=round_dp))
+    got = _rows(
+        knn_join(df, df, k=k, round_dp=round_dp, **_QUANTIZER_TIERS[tier])
+    )
+    assert got == want
+
+
 def test_gate_declines_string_ids_without_a_spark_job(spark):
     """The id-type check reads the schema only, so a declined call
     runs no Spark job; an admitted call does collect."""

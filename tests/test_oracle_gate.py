@@ -57,27 +57,36 @@ def test_driver_surface_is_fully_oracled():
 
 
 def test_gate_window_prefers_stalest_evidence():
-    """queries() ordering: red-retry, then debuts, then green names by
-    ascending round of their last official row — the 50-name driver
-    window re-validates the oldest evidence each round."""
-    order = list(registry.queries())
+    """The entry module's queries() ordering: red-retry, then debuts,
+    then green names by ascending round of their last official row —
+    the 50-name driver window re-validates the oldest evidence each
+    round."""
+    import __spark_entry__ as entrymod
+
+    green_round, red_retry = entrymod._load_official_record()
+    order = list(entrymod.queries())
+    assert order == list(entrymod.oracle_sql())
+    assert set(order) == set(registry.queries())
     ranks = []
     for n in order:
-        if n in registry._GATE_RED_RETRY:
+        if n in red_retry:
             ranks.append((0, 0))
-        elif n not in registry._GREEN_ROUND:
+        elif n not in green_round:
             ranks.append((1, 0))
         else:
-            ranks.append((2, registry._GREEN_ROUND[n]))
+            ranks.append((2, green_round[n]))
     assert ranks == sorted(ranks)
 
 
 def test_official_record_loader_matches_files(tmp_path):
     """The gate state is DERIVED from the committed CORRECTNESS files
-    at import; pin the loader's semantics: last round wins, err==None
-    is green, red-last names float to retry, unreadable files degrade
-    to debut (never crash queries())."""
+    when the entry module orders its window; pin the loader's
+    semantics: last round wins, err==None is green, red-last names
+    float to retry, unreadable files degrade to debut (never crash
+    queries())."""
     import json
+
+    import __spark_entry__ as entrymod
 
     d = tmp_path
     (d / "CORRECTNESS_r01.json").write_text(json.dumps({
@@ -93,9 +102,9 @@ def test_official_record_loader_matches_files(tmp_path):
     }))
     (d / "CORRECTNESS_r9.json").write_text("not json")
 
-    green, red = registry._load_official_record(root=str(d))
+    green, red = entrymod._load_official_record(root=str(d))
     assert green == {"a": 1, "c": 2, "e": 1}
     assert red == frozenset({"b", "d"})
     # empty dir -> everything is a debut, nothing red
-    green2, red2 = registry._load_official_record(root=str(d / "void"))
+    green2, red2 = entrymod._load_official_record(root=str(d / "void"))
     assert green2 == {} and red2 == frozenset()

@@ -531,3 +531,34 @@ def test_bench_coverage_same_round_rerun_keeps_vintages(tmp_path, monkeypatch):
     # vintages (idempotent within the round)
     bench._save_coverage(["dedup_exact"], 12)
     assert bench._load_coverage(12) == seed
+
+
+def test_registry_import_reads_no_correctness_record():
+    """Importing the registry does no file I/O on the committed
+    CORRECTNESS_r*.json records: gate-window ordering lives in
+    __spark_entry__.py. The import runs in a fresh
+    interpreter under an audit hook that logs every opened path."""
+    import json
+    import os
+    import subprocess
+    import sys
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    probe = (
+        "import json, sys\n"
+        "opened = []\n"
+        "def hook(event, args):\n"
+        "    if event == 'open' and isinstance(args[0], str):\n"
+        "        opened.append(args[0])\n"
+        "sys.addaudithook(hook)\n"
+        "import semantic_ann_in_data_lake_spark.plans.registry as r\n"
+        "assert r.REGISTRY\n"
+        "print(json.dumps(opened))\n"
+    )
+    out = subprocess.run(
+        [sys.executable, "-c", probe], cwd=repo, capture_output=True,
+        text=True, timeout=300, check=True,
+    )
+    opened = json.loads(out.stdout.strip().splitlines()[-1])
+    assert opened, "the audit hook saw no open at all"
+    assert not [p for p in opened if "CORRECTNESS_r" in p]
