@@ -149,6 +149,4 @@ def incremental_cc_foreach_batch(
         ).localCheckpoint(eager=True)
         updated.repartition(1).write.mode("overwrite").parquet(labels_path)
 
-    return pairs_stream.writeStream.foreachBatch(scoped_foreach_batch(handle)).trigger(
-        availableNow=True
-    )
+    return scoped_foreach_batch(pairs_stream, handle)

@@ -17,39 +17,26 @@ micro-batch while the batch operator caps it as one (NULL) group —
 the sentinel keeps stream ≡ batch and makes the cap actually bind on
 junk-URL floods.
 
-Incremental-state design (this replaces the per-trigger full-sink
-re-aggregation the first version used):
+State: the admitted sink, one batch-slot partition ``(run_id,
+batch_id)`` per batch (``profile_stream._write_slot``), and a compact
+state table ``<sink>__state`` of per-domain ``(used_pre, used_post)``
+admitted counts plus the ``(max_seen_pre, max_seen_post)`` id
+frontier, one ``epoch = batch_id % 2`` slot per batch. A NULL-domain
+marker row keeps the slot present for an all-rejected batch.
 
-- The admitted sink is partitioned by ``(run_id, batch_id)`` and
-  written with DYNAMIC partition overwrite — a same-lineage replay of
-  batch b recomputes its admitted set from the same pre-b state and
-  rewrites its own partition identically (exactly-once), no id
-  anti-join against the whole sink needed.
-- A compact state table (``<sink>__state``) carries the per-domain
-  cumulative counts and the max-seen-id scalar; it is double-buffered
-  into two ``epoch = batch_id % 2`` partitions so batch b reads the
-  b−1 epoch while dynamically overwriting the b−2 slot — the written
-  partition is never an input of the writing job.
-- Steady-state per-trigger reads are therefore STATE-sized (two
-  epochs ≤ 2·(n_domains+1) rows), independent of how many batches the
-  stream has run — the property ``test_streaming_domain_cap_state_
-  sized_reads`` pins by spying on the bootstrap hook.
-- The full admitted sink is scanned ONLY when the run identity
-  changes (fresh checkpoint over an existing sink, or a legacy sink
-  without state): counts and max admitted id are rebuilt once, then
-  reads are incremental again. Rows at or below the rebuilt
-  max-seen-id are redeliveries and are dropped; previously REJECTED
-  rows above it re-enter quota math and lose again (their domain is
-  at cap by construction — a domain that rejected a row can never
-  drop below cap, the admitted set is append-only).
-
-Redelivery contract (same as the SCD2/EWMA/sessionize legs'
-lexicographic guard): files arrive in id order, so a row with
-``id <= max_seen`` is an at-least-once redelivery, not new data.
-Cross-restart exactly-once needs a stable ``lineage`` (pass the
-checkpoint path); the default mints a per-incarnation token, which
-still covers in-process retries and fresh-checkpoint re-ingests of an
-already-admitted history (via the max-seen guard + quota).
+Merge: counts ADD. Batch b ranks against the counts after b−1 (its
+``used_post``); the crash replay of a run's first batch, whose own
+slot already landed, ranks against that slot's ``used_pre`` — so a
+replay recomputes the identical admitted set. When neither slot
+exists (fresh checkpoint over an existing sink, legacy sink) the
+counts and max admitted id are rebuilt ONCE from the full sink
+(``_bootstrap_from_sink``); steady-state reads stay state-sized
+(≤ 2·(n_domains+1) rows). Rows at or below the frontier are
+redeliveries (files arrive in id order); previously REJECTED rows
+above a rebuilt frontier re-enter quota math and lose again, since a
+domain that rejected a row is at cap for good (the admitted set is
+append-only). Cross-restart exactly-once needs a stable ``lineage``
+(pass the checkpoint path).
 """
 
 from __future__ import annotations
@@ -61,6 +48,8 @@ from pyspark.sql.window import Window
 from semantic_ann_in_data_lake_spark.streaming.profile_stream import (
     _lineage_token,
     _read_sink_or_none,
+    _state_headers,
+    _write_slot,
     scoped_foreach_batch,
 )
 
@@ -112,39 +101,19 @@ def incremental_domain_cap_foreach_batch(
             ).alias("domain"),
         )
 
-        state = _read_sink_or_none(spark, state_path)
-        base: DataFrame | None = None
-        max_seen = None
-        if state is not None:
-            hdrs = {
-                int(r["as_of_batch"]): r
-                for r in state.where(F.col("run_id") == run_token)
-                .select(
-                    "as_of_batch", "max_seen_pre", "max_seen_post"
-                )
-                .distinct()
-                .collect()
-            }
-        else:
-            hdrs = {}
-        if b - 1 in hdrs:
-            # steady state (and the common replay): counts AFTER b−1
-            base = state.where(
-                (F.col("run_id") == run_token)
-                & (F.col("as_of_batch") == b - 1)
-                & F.col("domain").isNotNull()
-            ).select("domain", F.col("used_post").alias("used"))
-            max_seen = hdrs[b - 1]["max_seen_post"]
-        elif b in hdrs:
-            # crash replay of the run's FIRST batch after its state
-            # write committed: the pre-b snapshot is this epoch's
-            # used_pre column
-            base = state.where(
-                (F.col("run_id") == run_token)
-                & (F.col("as_of_batch") == b)
-                & F.col("domain").isNotNull()
-            ).select("domain", F.col("used_pre").alias("used"))
-            max_seen = hdrs[b]["max_seen_pre"]
+        mine, hdrs = _state_headers(
+            spark, state_path, run_token, ("max_seen_pre", "max_seen_post")
+        )
+        if b - 1 in hdrs or b in hdrs:
+            # steady state (and the common replay) ranks against the
+            # counts AFTER b−1; the crash replay of the run's FIRST
+            # batch, whose own slot already committed, ranks against
+            # that slot's pre-b counts
+            at, side = (b - 1, "post") if b - 1 in hdrs else (b, "pre")
+            base = mine.where(
+                (F.col("as_of_batch") == at) & F.col("domain").isNotNull()
+            ).select("domain", F.col(f"used_{side}").alias("used"))
+            max_seen = hdrs[at][f"max_seen_{side}"]
         else:
             # run identity changed (fresh checkpoint / legacy sink):
             # one full-sink rebuild, then incremental again
@@ -174,15 +143,12 @@ def incremental_domain_cap_foreach_batch(
         admitted = ranked.where(F.col("__rn") <= left).select(
             id_col, "domain"
         )
-        (
+        _write_slot(
             admitted.withColumn("run_id", F.lit(run_token))
-            .withColumn("batch_id", F.lit(b))
-            .repartition(1)
-            .sortWithinPartitions(id_col)
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("run_id", "batch_id")
-            .parquet(sink_path)
+            .withColumn("batch_id", F.lit(b)),
+            sink_path,
+            ("run_id", "batch_id"),
+            sort=(id_col,),
         )
 
         # fold the batch into the state snapshot: used_pre = counts
@@ -220,24 +186,15 @@ def incremental_domain_cap_foreach_batch(
         marker = merged.sparkSession.createDataFrame(
             [(None, 0, 0)], "domain string, used_pre long, used_post long"
         )
-        (
+        _write_slot(
             merged.unionByName(marker)
             .withColumn("run_id", F.lit(run_token))
             .withColumn("as_of_batch", F.lit(b))
-            .withColumn(
-                "max_seen_pre", F.lit(max_seen).cast(id_type)
-            )
-            .withColumn(
-                "max_seen_post", F.lit(post_mx).cast(id_type)
-            )
-            .withColumn("epoch", F.lit(b % 2))
-            .repartition(1)
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("epoch")
-            .parquet(state_path)
+            .withColumn("max_seen_pre", F.lit(max_seen).cast(id_type))
+            .withColumn("max_seen_post", F.lit(post_mx).cast(id_type))
+            .withColumn("epoch", F.lit(b % 2)),
+            state_path,
+            ("epoch",),
         )
 
-    return docs_stream.writeStream.foreachBatch(
-        scoped_foreach_batch(handle)
-    ).trigger(availableNow=True)
+    return scoped_foreach_batch(docs_stream, handle)

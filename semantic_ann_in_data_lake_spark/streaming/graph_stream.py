@@ -13,16 +13,17 @@ order the state equals the batch `triangle_stats` over the full edge
 set ROW-FOR-ROW (the stream ≡ batch pin in
 `tests/test_streaming.py::test_streaming_graph_triangles_equal_batch`).
 
-Exactly-once without an id frontier: edges are CONTENT-addressed — the
-canonical (a, b) pair is its own identity — so redelivered edges are
-eliminated by an anti-join against the edge sink, not by an id-ordered
-arrival guard (duplicate and out-of-order delivery are both harmless).
-Idempotent replay comes from dynamic partition overwrite on BOTH
-writes: batch b's new edges land in partition (run_id, batch_id=b) and
-its state snapshot in (run_id, epoch=b%2) — a same-lineage replay of
-batch b recomputes from partitions batch_id < b and OVERWRITES its own
-slots, byte-identical (the pca_stream double-buffer pattern; as_of
-chain + gap detection shared).
+State: the per-node rows ``(node, degree, triangles)`` on the as_of
+state chain (``profile_stream._prior_state``), plus the canonical edge
+sink, one batch-slot partition ``(run_id, batch_id)`` per batch holding
+that batch's genuinely-new edges. A replay of batch b reads only
+edge slots batch_id < b, so it recomputes the same delta.
+
+Merge: per-node SUM of the degree and triangle deltas. Edges are
+CONTENT-addressed — the canonical (a, b) pair is its own identity — so
+redelivered edges are eliminated by an anti-join against the edge
+sink, not by an id-ordered arrival guard (duplicate and out-of-order
+delivery are both harmless).
 
 Per-trigger cost: the new-edge anti-join and the common-neighbor
 triangle probe are Δ-keyed equi-joins — shuffle work is O(|Δ|·d̄)
@@ -38,7 +39,10 @@ from pyspark.sql import functions as F
 
 from semantic_ann_in_data_lake_spark.streaming.profile_stream import (
     _lineage_token,
+    _prior_state,
+    _read_latest_state,
     _read_sink_or_none,
+    _write_slot,
     scoped_foreach_batch,
 )
 
@@ -52,23 +56,7 @@ def read_graph_state(
     triangles, clustering)`` — the same relation
     `operators/graphrank.triangle_stats` computes in batch (clustering
     derived with the identical expression, so equality is exact)."""
-    state = _read_sink_or_none(spark, state_path)
-    if state is None:
-        raise ValueError(f"no graph state at {state_path!r}")
-    if lineage is not None:
-        state = state.where(F.col("run_id") == lineage)
-    head = (
-        state.groupBy("run_id")
-        .agg(F.max("as_of_batch").alias("as_of"))
-        .orderBy(F.col("run_id").desc())
-        .head(1)
-    )
-    if not head:
-        raise ValueError(f"no graph state rows for run {lineage!r}")
-    run, as_of = head[0]["run_id"], head[0]["as_of"]
-    cur = state.where(
-        (F.col("run_id") == run) & (F.col("as_of_batch") == as_of)
-    )
+    cur = _read_latest_state(spark, state_path, lineage, "graph")
     return cur.select(
         "node",
         "degree",
@@ -100,7 +88,7 @@ def incremental_graph_foreach_batch(
 ):
     """foreachBatch accumulator over a stream of DIRECTED edges: dedup
     into the canonical undirected sink and fold exact degree/triangle
-    deltas into the double-buffered state (see module doc). Returns the
+    deltas into the per-node state (see module doc). Returns the
     writeStream builder (caller sets checkpoint and starts)."""
     run_token = _lineage_token(lineage)
 
@@ -134,25 +122,9 @@ def incremental_graph_foreach_batch(
             delta = cand.join(hist, ["a", "b"], "left_anti")
         delta = delta.localCheckpoint(eager=True)
 
-        # prior state (as_of chain, pca_stream discipline)
-        state = _read_sink_or_none(spark, state_path)
-        pre = None
-        if state is not None:
-            mine = state.where(F.col("run_id") == run_token)
-            as_ofs = {
-                int(r["as_of_batch"])
-                for r in mine.select("as_of_batch").distinct().collect()
-            }
-            if b - 1 in as_ofs:
-                pre = (
-                    mine.where(F.col("as_of_batch") == b - 1)
-                    .select(*_STATE_COLS)
-                    .localCheckpoint(eager=True)
-                )
-            elif as_ofs and min(as_ofs) < b - 1:
-                raise ValueError(
-                    f"graph state gap: batch {b} but no as_of {b - 1}"
-                )
+        pre, _ = _prior_state(
+            spark, state_path, run_token, b, _STATE_COLS, "graph"
+        )
 
         n_delta = delta.count()
         if n_delta == 0 and pre is None:
@@ -220,30 +192,21 @@ def incremental_graph_foreach_batch(
                 )
             )
 
-        (
+        _write_slot(
             merged.withColumn("as_of_batch", F.lit(b))
             .withColumn("run_id", F.lit(run_token))
-            .withColumn("epoch", F.lit(b % 2))
-            .repartition(1)
-            .sortWithinPartitions("node")
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("run_id", "epoch")
-            .parquet(state_path)
+            .withColumn("epoch", F.lit(b % 2)),
+            state_path,
+            ("run_id", "epoch"),
+            sort=("node",),
         )
         if n_delta > 0:
-            (
+            _write_slot(
                 delta.withColumn("run_id", F.lit(run_token))
-                .withColumn("batch_id", F.lit(b))
-                .repartition(1)
-                .sortWithinPartitions("a", "b")
-                .write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy("run_id", "batch_id")
-                .parquet(edges_path)
+                .withColumn("batch_id", F.lit(b)),
+                edges_path,
+                ("run_id", "batch_id"),
+                sort=("a", "b"),
             )
 
-    return (
-        edge_stream.writeStream.foreachBatch(scoped_foreach_batch(handle))
-        .trigger(availableNow=True)
-    )
+    return scoped_foreach_batch(edge_stream, handle)

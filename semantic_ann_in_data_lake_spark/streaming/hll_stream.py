@@ -4,40 +4,29 @@ batch distinct-count sketch (`operators/sketches.py::hll_registers`).
 A crawl ingest wants "distinct pages / users / tokens so far, per
 group" continuously, without re-scanning the log per trigger and
 without a full countDistinct key-space shuffle. HLL registers are the
-textbook answer: the state is ≤ 64 rows per group REGARDLESS of
-cardinality, and the merge is a per-(group, pos) MAX — associative
-AND idempotent, so accumulating per micro-batch is not an
-approximation OF the batch sketch: the streamed register table equals
+textbook answer.
+
+State: the register rows ``(*group_cols, pos, val)`` — ≤ 64 rows per
+group REGARDLESS of cardinality — kept on the as_of state chain
+(``profile_stream._prior_state``) with the id frontier
+``max_seen_post``.
+
+Merge: per-(group, pos) MAX (``sketches.hll_merge``) — associative AND
+idempotent, so accumulating per micro-batch is not an approximation OF
+the batch sketch: the streamed register table equals
 ``hll_registers(full log)`` BIT-FOR-BIT, and every estimate derived
-from it equals the batch estimate exactly (the pca_stream moment
-pin's sibling — hash equality on the state itself).
-
-Incremental-state design (the domain/pca double-buffer convention):
-
-- State = the register rows denormalized with (as_of_batch,
-  max_seen_post), partitioned by (run_id, epoch = batch_id % 2) with
-  dynamic partition overwrite; batch b reads the as_of b−1 rows and
-  overwrites its own epoch slot, so a same-lineage replay of batch b
-  recomputes the identical slot (exactly-once).
-- Per-trigger reads are STATE-sized (≤ 2 · 64 · n_groups rows + the
-  source batch), independent of run length.
-- Redelivery: max-merge is idempotent, so a re-delivered row could
-  not corrupt the registers even without a guard; the shared
-  id-ordered-arrival frontier is kept anyway so redeliveries skip the
-  hash work and the as_of chain semantics match the other legs.
-- A mid-run state gap (as_of < b−1 present but b−1 missing) raises
-  instead of silently under-counting, same contract as pca_stream.
+from it equals the batch estimate exactly. Because max-merge is
+idempotent a redelivered row could not corrupt the registers even
+without the frontier; the frontier only skips its hash work.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 from semantic_ann_in_data_lake_spark.streaming.profile_stream import (
-    _lineage_token,
-    _read_sink_or_none,
-    scoped_foreach_batch,
+    _accumulate_foreach_batch,
+    _read_latest_state,
 )
 
 
@@ -51,23 +40,9 @@ def read_hll_state(
     `sketches.hll_estimate` consumes. Picks the highest ``as_of_batch``
     of the given run (or of the lexicographically-greatest run_id when
     several share the path and none is named)."""
-    state = _read_sink_or_none(spark, state_path)
-    if state is None:
-        raise ValueError(f"no HLL state at {state_path!r}")
-    if lineage is not None:
-        state = state.where(F.col("run_id") == lineage)
-    head = (
-        state.groupBy("run_id")
-        .agg(F.max("as_of_batch").alias("as_of"))
-        .orderBy(F.col("run_id").desc())
-        .head(1)
+    return _read_latest_state(spark, state_path, lineage, "HLL").select(
+        *group_cols, "pos", "val"
     )
-    if not head:
-        raise ValueError(f"no HLL rows for run {lineage!r}")
-    run, as_of = head[0]["run_id"], head[0]["as_of"]
-    return state.where(
-        (F.col("run_id") == run) & (F.col("as_of_batch") == as_of)
-    ).select(*group_cols, "pos", "val")
 
 
 def incremental_hll_foreach_batch(
@@ -79,78 +54,20 @@ def incremental_hll_foreach_batch(
     lineage: str | None = None,
 ):
     """foreachBatch accumulator: sketch each micro-batch's new rows and
-    max-merge into the double-buffered register state (see module doc).
-    Returns the writeStream builder (caller sets checkpoint, starts)."""
+    max-merge into the register state (see module doc). Returns the
+    writeStream builder (caller sets checkpoint, starts)."""
     from semantic_ann_in_data_lake_spark.operators.sketches import (
         hll_merge,
         hll_registers,
     )
 
-    run_token = _lineage_token(lineage)
-    reg_cols = [*group_cols, "pos", "val"]
-
-    def handle(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        b = int(batch_id)
-
-        state = _read_sink_or_none(spark, state_path)
-        pre = None
-        max_seen = None
-        if state is not None:
-            mine = state.where(F.col("run_id") == run_token)
-            hdrs = {
-                int(r["as_of_batch"]): r["max_seen_post"]
-                for r in mine.select("as_of_batch", "max_seen_post")
-                .distinct()
-                .collect()
-            }
-            if b - 1 in hdrs:
-                pre = mine.where(F.col("as_of_batch") == b - 1).select(
-                    *reg_cols
-                )
-                max_seen = hdrs[b - 1]
-            elif hdrs and min(hdrs) < b - 1:
-                raise ValueError(
-                    f"HLL state gap: batch {b} but latest as_of is "
-                    f"{max(hdrs)} with no as_of {b - 1} (state corrupted?)"
-                )
-            # else: crash replay of the run's first batch — like batch 0
-
-        if pre is not None:
-            # the state scan reads both epoch partitions; truncate
-            # lineage before overwriting this batch's slot
-            pre = pre.localCheckpoint(eager=True)
-
-        cand = batch_df
-        if max_seen is not None:
-            cand = cand.where(F.col(id_col) > F.lit(max_seen))
-        batch_max = cand.agg(F.max(id_col).alias("mx")).collect()[0]["mx"]
-        if batch_max is None:
-            if pre is None:
-                return  # nothing at all to record yet
-            merged = pre
-            new_max = max_seen
-        else:
-            bm = hll_registers(cand, key_col, group_cols=group_cols)
-            merged = hll_merge(pre, bm) if pre is not None else bm
-            new_max = (
-                batch_max if max_seen is None else max(max_seen, batch_max)
-            )
-
-        (
-            merged.withColumn("as_of_batch", F.lit(b))
-            .withColumn("max_seen_post", F.lit(new_max).cast("long"))
-            .withColumn("run_id", F.lit(run_token))
-            .withColumn("epoch", F.lit(b % 2))
-            .repartition(1)
-            .sortWithinPartitions(*reg_cols)
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("run_id", "epoch")
-            .parquet(state_path)
-        )
-
-    return (
-        docs_stream.writeStream.foreachBatch(scoped_foreach_batch(handle))
-        .trigger(availableNow=True)
+    return _accumulate_foreach_batch(
+        docs_stream,
+        state_path,
+        id_col,
+        lineage,
+        (*group_cols, "pos", "val"),
+        lambda rows: hll_registers(rows, key_col, group_cols=group_cols),
+        hll_merge,
+        "HLL",
     )

@@ -116,7 +116,4 @@ def stream_refresh_ivf_index(
             if deduped:
                 fresh.unpersist()
 
-    return (
-        emb_stream.writeStream.foreachBatch(scoped_foreach_batch(handle))
-        .trigger(availableNow=True)
-    )
+    return scoped_foreach_batch(emb_stream, handle)

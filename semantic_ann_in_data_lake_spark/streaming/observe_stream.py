@@ -16,19 +16,19 @@ its own sink (max over earlier batches of this lineage), so the
 numbers are deterministic, replayable, and testable against a batch
 fold — no dependency on listener timing.
 
-Scale notes: per batch the job is one aggregate over the micro-batch
-plus a 2-row read of a double-buffered state table
-(``<sink>__state``, ``epoch = batch_id % 2`` partitions) that carries
-the running max event time as (pre-batch, post-batch) scalars — NOT a
-re-scan of all earlier metric rows, so a long-running production
-stream pays O(batch) per trigger regardless of how many triggers have
-fired. A same-lineage replay of batch b finds either the b−1 epoch
-(uses its post value) or its own epoch (uses the pre value) and
-rewrites its metrics partition byte-identically; only a run-identity
-change (fresh checkpoint, legacy sink) falls back to one scan of the
-run's strictly-earlier metric rows to rebuild the state — the same
-lineage-scoped exactly-once discipline as every other foreachBatch
-sink in this package.
+State: the metrics sink, one batch-slot partition ``(run_id,
+batch_id)`` per batch (``profile_stream._write_slot``), and a one-row
+state slot per batch in ``<sink>__state`` (``epoch = batch_id % 2``)
+holding the running max event time as ``(basis_pre, basis_post)``.
+
+Merge: MAX. Batch b takes the b−1 slot's ``basis_post``; the crash
+replay of a batch whose own slot already landed takes that slot's
+``basis_pre`` (a retried batch must not see its own partial through
+the watermark), so a replay rewrites its metrics partition
+byte-identically. Per trigger that is a 2-row state read, not a
+re-scan of all earlier metric rows. Only when neither slot exists
+(fresh checkpoint, legacy sink) is the basis rebuilt once from the
+run's strictly-earlier metric rows (``_bootstrap_basis``).
 """
 
 from __future__ import annotations
@@ -38,10 +38,12 @@ from pyspark.sql import functions as F
 
 from semantic_ann_in_data_lake_spark.functions.dates import epoch_us
 from semantic_ann_in_data_lake_spark.streaming.profile_stream import (
-    scoped_foreach_batch,
     _lineage_token,
     _read_sink_or_none,
+    _state_headers,
+    _write_slot,
     normalize_event_ts,
+    scoped_foreach_batch,
 )
 
 
@@ -115,16 +117,9 @@ def watermark_metrics_foreach_batch(
     def handle(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
         b = int(batch_id)
-        state = _read_sink_or_none(spark, state_path)
-        hdrs: dict[int, dict] = {}
-        if state is not None:
-            hdrs = {
-                int(r["as_of_batch"]): r
-                for r in state.where(F.col("run_id") == run_token)
-                .select("as_of_batch", "basis_pre", "basis_post")
-                .collect()
-            }
-        basis: int | None = None
+        _, hdrs = _state_headers(
+            spark, state_path, run_token, ("basis_pre", "basis_post")
+        )
         if b - 1 in hdrs:
             # steady state (and the common replay): max event time
             # over batches ≤ b−1
@@ -145,37 +140,29 @@ def watermark_metrics_foreach_batch(
         wm_us = None if basis is None else basis - delay_us
         n, mx, late = _batch_metrics(batch_df, wm_us)
         lag = None if (mx is None or wm_us is None) else mx - wm_us
-        (
+        _write_slot(
             spark.createDataFrame(
                 [(n, mx, wm_us, late, lag)],
                 "n_rows long, max_event_us long, watermark_us long,"
                 " late_rows long, lag_us long",
             )
             .withColumn("run_id", F.lit(run_token))
-            .withColumn("batch_id", F.lit(b))
-            .repartition(1)
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("run_id", "batch_id")
-            .parquet(sink_path)
+            .withColumn("batch_id", F.lit(b)),
+            sink_path,
+            ("run_id", "batch_id"),
         )
         post = max((v for v in (basis, mx) if v is not None), default=None)
-        (
+        _write_slot(
             spark.createDataFrame(
                 [(run_token, b, basis, post, b % 2)],
                 "run_id string, as_of_batch long, basis_pre long,"
                 " basis_post long, epoch int",
-            )
-            .repartition(1)
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("epoch")
-            .parquet(state_path)
+            ),
+            state_path,
+            ("epoch",),
         )
 
-    return events_stream.writeStream.foreachBatch(
-        scoped_foreach_batch(handle)
-    ).trigger(availableNow=True)
+    return scoped_foreach_batch(events_stream, handle)
 
 
 def watermark_metrics_replay(

@@ -3,44 +3,29 @@ batch covariance pass (`operators/embedproj.py::embedding_cov_moments`).
 
 A production embedding pipeline wants the ANN rotation (PCA / OPQ)
 fitted over EVERYTHING ingested so far without re-scanning the corpus
-per refresh. Because the moment relation is integer/DECIMAL-exact and
-decimal addition is associative (`merge_cov_moments`), accumulating
-per micro-batch is not an approximation: the streamed state equals the
-batch pass over the full log BIT-FOR-BIT, and
-`pca_fit_from_moments(state)` equals `pca_fit(full corpus)` exactly —
-the strongest stream ≡ batch pin in the suite (hash equality on the
-state itself, not just on derived outputs).
+per refresh.
 
-Incremental-state design (the domain_stream double-buffer pattern):
+State: the d(d+1)/2 exact moment rows ``(i, j, n, sx, sy, sxy)`` —
+the table IS the product — kept on the as_of state chain
+(``profile_stream._prior_state``) with the id frontier
+``max_seen_post``, which keeps a re-delivered file out of the sums.
 
-- The state table IS the product: d(d+1)/2 moment rows denormalized
-  with (as_of_batch, max_seen_post), partitioned by (run_id, epoch =
-  batch_id % 2) with dynamic partition overwrite. Batch b reads the
-  as_of b−1 rows (living in the other epoch), merges its own batch
-  moments, and overwrites its own epoch slot — a same-lineage replay
-  of batch b recomputes the identical slot (exactly-once).
-- Per-trigger reads are STATE-sized (≤ 2·d(d+1)/2 rows + the source
-  batch) — never corpus-sized, never growing with run length.
-- Redelivery contract (the streaming legs' shared id-ordered-arrival
-  guard): rows with id ≤ max_seen_post(b−1) are at-least-once
-  redeliveries and are excluded from the batch moments, so a
-  re-delivered file cannot double-count into the sums.
-- A fresh checkpoint (new lineage) starts a fresh accumulation under
-  its own run_id — the source replays the full log into it, and the
-  final state is equal by the merge property. State for a mid-run
-  batch gap (as_of < b−1 present but b−1 missing) is unrecoverable by
-  construction and raises instead of silently under-counting.
+Merge: ``embedproj.merge_cov_moments``, a DECIMAL-exact sum. Decimal
+addition is associative, so accumulating per micro-batch is not an
+approximation: the streamed state equals the batch pass over the full
+log BIT-FOR-BIT, and `pca_fit_from_moments(state)` equals
+`pca_fit(full corpus)` exactly — the strongest stream ≡ batch pin in
+the suite (hash equality on the state itself, not just on derived
+outputs).
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 from semantic_ann_in_data_lake_spark.streaming.profile_stream import (
-    _lineage_token,
-    _read_sink_or_none,
-    scoped_foreach_batch,
+    _accumulate_foreach_batch,
+    _read_latest_state,
 )
 
 _MOMENT_COLS = ("i", "j", "n", "sx", "sy", "sxy")
@@ -53,23 +38,9 @@ def read_cov_moments_state(
     `pca_fit_from_moments` consumes. Picks the highest ``as_of_batch``
     of the given run (or of the lexicographically-greatest run_id when
     several runs share the path and none is named)."""
-    state = _read_sink_or_none(spark, state_path)
-    if state is None:
-        raise ValueError(f"no moments state at {state_path!r}")
-    if lineage is not None:
-        state = state.where(F.col("run_id") == lineage)
-    head = (
-        state.groupBy("run_id")
-        .agg(F.max("as_of_batch").alias("as_of"))
-        .orderBy(F.col("run_id").desc())
-        .head(1)
+    return _read_latest_state(spark, state_path, lineage, "moments").select(
+        *_MOMENT_COLS
     )
-    if not head:
-        raise ValueError(f"no moments rows for run {lineage!r}")
-    run, as_of = head[0]["run_id"], head[0]["as_of"]
-    return state.where(
-        (F.col("run_id") == run) & (F.col("as_of_batch") == as_of)
-    ).select(*_MOMENT_COLS)
 
 
 def incremental_cov_moments_foreach_batch(
@@ -80,83 +51,20 @@ def incremental_cov_moments_foreach_batch(
     lineage: str | None = None,
 ):
     """foreachBatch accumulator: fold each micro-batch's exact moment
-    relation into the double-buffered state (see module doc). Returns
-    the writeStream builder (caller sets checkpoint and starts)."""
+    relation into the moments state (see module doc). Returns the
+    writeStream builder (caller sets checkpoint and starts)."""
     from semantic_ann_in_data_lake_spark.operators.embedproj import (
         embedding_cov_moments,
         merge_cov_moments,
     )
 
-    run_token = _lineage_token(lineage)
-
-    def handle(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        b = int(batch_id)
-
-        state = _read_sink_or_none(spark, state_path)
-        pre = None
-        max_seen = None
-        if state is not None:
-            mine = state.where(F.col("run_id") == run_token)
-            hdrs = {
-                int(r["as_of_batch"]): r["max_seen_post"]
-                for r in mine.select("as_of_batch", "max_seen_post")
-                .distinct()
-                .collect()
-            }
-            if b - 1 in hdrs:
-                pre = mine.where(F.col("as_of_batch") == b - 1).select(
-                    *_MOMENT_COLS
-                )
-                max_seen = hdrs[b - 1]
-            elif hdrs and min(hdrs) < b - 1:
-                raise ValueError(
-                    f"moments state gap: batch {b} but latest as_of is "
-                    f"{max(hdrs)} with no as_of {b - 1} (state corrupted?)"
-                )
-            # else: hdrs empty, or only as_of >= b (crash replay of the
-            # run's first batch) -> pre stays empty, like batch 0
-
-        if pre is not None:
-            # the state scan reads BOTH epoch partitions (as_of is not
-            # the partition key); truncate lineage before overwriting
-            # this batch's epoch slot — state-sized by construction
-            pre = pre.localCheckpoint(eager=True)
-
-        cand = batch_df
-        if max_seen is not None:
-            # id-ordered-arrival redelivery guard: rows at/below the
-            # frontier are already in the sums
-            cand = cand.where(F.col(id_col) > F.lit(max_seen))
-        batch_max = cand.agg(F.max(id_col).alias("mx")).collect()[0]["mx"]
-        if batch_max is None:
-            # nothing new in this batch (pure redelivery / empty): the
-            # as_of chain must still advance so batch b+1 finds b
-            if pre is None:
-                return  # nothing at all to record yet
-            merged = pre
-            new_max = max_seen
-        else:
-            bm = embedding_cov_moments(cand, vec_col)
-            merged = merge_cov_moments(pre, bm) if pre is not None else bm
-            new_max = batch_max if max_seen is None else max(
-                max_seen, batch_max
-            )
-
-        (
-            merged.withColumn("as_of_batch", F.lit(b))
-            .withColumn("max_seen_post", F.lit(new_max).cast("long"))
-            .withColumn("run_id", F.lit(run_token))
-            .withColumn("epoch", F.lit(b % 2))
-            .repartition(1)
-            .sortWithinPartitions("i", "j")
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("run_id", "epoch")
-            .parquet(state_path)
-        )
-
-    return (
-        emb_stream.writeStream.foreachBatch(scoped_foreach_batch(handle))
-        .trigger(availableNow=True)
+    return _accumulate_foreach_batch(
+        emb_stream,
+        state_path,
+        id_col,
+        lineage,
+        _MOMENT_COLS,
+        lambda rows: embedding_cov_moments(rows, vec_col),
+        merge_cov_moments,
+        "moments",
     )

@@ -42,21 +42,28 @@ def _lineage_token(lineage: str | None) -> str:
     return lineage if lineage else uuid.uuid4().hex
 
 
-def scoped_foreach_batch(handle):
-    """Wrap a foreachBatch handler in a cache_scope: several handlers
-    call operators that scoped_persist multi-consumer subtrees
-    (curation_funnel's flags, winnow_fingerprints' fp frame) — outside
-    a scope those blocks live for the SESSION, so a long-running
-    stream accumulates one orphaned cached frame per micro-batch. The
-    handler's writes are actions inside the scope, so the persists are
-    exploited and then released per batch."""
+def _available_now(writer):
+    """Drive ``writer`` over all currently-available input, then stop."""
+    return writer.trigger(availableNow=True)
+
+
+def scoped_foreach_batch(stream: DataFrame, handle):
+    """The availableNow ``foreachBatch`` writer over ``stream`` (the
+    caller sets the checkpoint and starts it), with ``handle`` wrapped
+    in a cache_scope: several handlers call operators that
+    scoped_persist multi-consumer subtrees (curation_funnel's flags,
+    winnow_fingerprints' fp frame) — outside a scope those blocks live
+    for the SESSION, so a long-running stream accumulates one orphaned
+    cached frame per micro-batch. The handler's writes are actions
+    inside the scope, so the persists are exploited and then released
+    per batch."""
     from semantic_ann_in_data_lake_spark.cache import cache_scope
 
     def run(batch_df: DataFrame, batch_id: int) -> None:
         with cache_scope():
             handle(batch_df, batch_id)
 
-    return run
+    return _available_now(stream.writeStream.foreachBatch(run))
 
 
 def events_stream(spark: SparkSession, events_dir: str, schema) -> DataFrame:
@@ -113,7 +120,7 @@ def run_available_now(
     """
     import tempfile
 
-    q = (
+    q = _available_now(
         rollup.writeStream.format("memory")
         .queryName(table_name)
         .outputMode("complete")
@@ -121,9 +128,7 @@ def run_available_now(
             "checkpointLocation",
             checkpoint_dir or tempfile.mkdtemp(prefix="sals_stream_ckpt_"),
         )
-        .trigger(availableNow=True)
-        .start()
-    )
+    ).start()
     q.awaitTermination()
     return q
 
@@ -145,6 +150,172 @@ def _read_sink_or_none(spark, path: str, options: dict | None = None):
         if "PATH_NOT_FOUND" in msg or "Path does not exist" in msg:
             return None
         raise
+
+
+def _write_slot(
+    df: DataFrame, path: str, partition_cols: tuple[str, ...], sort=()
+) -> None:
+    """The one exactly-once write of the streaming legs: REPLACE the
+    partitions of ``path`` that ``df``'s ``partition_cols`` values name
+    (dynamic partition overwrite) and leave every other partition
+    alone. A re-executed micro-batch writes the same partition values,
+    so it overwrites its own earlier attempt instead of adding to it.
+
+    Two layouts use it: the batch-slot sink, one partition per
+    ``(run_id, batch_id)`` (or per touched ``day`` for the rollup), and
+    the as_of state chain, one partition per ``epoch = batch_id % 2``
+    (see ``_prior_state``). One task writes each slot (one file per
+    partition value); ``sort`` orders the rows inside it, so a replay
+    writes the same bytes."""
+    df = df.repartition(1)
+    if sort:
+        df = df.sortWithinPartitions(*sort)
+    (
+        df.write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy(*partition_cols)
+        .parquet(path)
+    )
+
+
+def _state_headers(spark, state_path: str, run_token: str, cols=()):
+    """``(this lineage's state rows, {as_of_batch: header row})`` of the
+    as_of state chain at ``state_path`` — the header row carries
+    ``cols``, the per-slot scalars (frontiers) written next to the
+    state. ``(None, {})`` before the first state write."""
+    state = _read_sink_or_none(spark, state_path)
+    if state is None:
+        return None, {}
+    mine = state.where(F.col("run_id") == run_token)
+    hdrs = {
+        int(r["as_of_batch"]): r
+        for r in mine.select("as_of_batch", *cols).distinct().collect()
+    }
+    return mine, hdrs
+
+
+def _prior_state(
+    spark, state_path: str, run_token: str, b: int, cols, noun: str,
+    header=(),
+):
+    """``(state after batch b−1, its header row)`` of the as_of state
+    chain, or ``(None, None)`` when batch b starts from nothing.
+
+    The chain is the double-buffer contract shared by the accumulating
+    legs (hll, pca, graph):
+
+    - every state row carries ``as_of_batch`` (the batch whose fold it
+      holds) and is written through ``_write_slot`` into partition
+      ``(run_id, epoch = as_of_batch % 2)``. Batch b reads the as_of
+      b−1 rows, which live in the OTHER epoch, and overwrites its own,
+      so the partition a batch writes is never the one it reads;
+    - a same-lineage replay of batch b (write landed, checkpoint commit
+      lost) finds the same b−1 rows and rewrites the identical slot:
+      exactly-once state on at-least-once delivery;
+    - per-trigger reads are state-sized (two generations), never
+      growing with run length;
+    - when the lineage has no state, or only as_of ≥ b (the replay of
+      its first batch), batch b starts from nothing, like batch 0;
+    - a gap (older slots present but b−1 missing) cannot be repaired
+      from state alone and raises instead of silently under-counting.
+
+    The prior rows are eagerly local-checkpointed: the state scan
+    reads both epoch partitions, and the lineage must not reference
+    the slot the batch is about to overwrite."""
+    mine, hdrs = _state_headers(spark, state_path, run_token, header)
+    if b - 1 in hdrs:
+        pre = mine.where(F.col("as_of_batch") == b - 1).select(*cols)
+        return pre.localCheckpoint(eager=True), hdrs[b - 1]
+    if hdrs and min(hdrs) < b - 1:
+        raise ValueError(
+            f"{noun} state gap: batch {b} but latest as_of is "
+            f"{max(hdrs)} with no as_of {b - 1} (state corrupted?)"
+        )
+    return None, None
+
+
+def _read_latest_state(
+    spark, state_path: str, lineage: str | None, noun: str
+) -> DataFrame:
+    """The newest slot of an as_of state chain: the rows of the highest
+    ``as_of_batch`` of run ``lineage`` (or, when none is named, of the
+    lexicographically-greatest run_id sharing the path). Raises when
+    the path or the run has no state."""
+    state = _read_sink_or_none(spark, state_path)
+    if state is None:
+        raise ValueError(f"no {noun} state at {state_path!r}")
+    if lineage is not None:
+        state = state.where(F.col("run_id") == lineage)
+    head = (
+        state.groupBy("run_id")
+        .agg(F.max("as_of_batch").alias("as_of"))
+        .orderBy(F.col("run_id").desc())
+        .head(1)
+    )
+    if not head:
+        raise ValueError(f"no {noun} state rows for run {lineage!r}")
+    return state.where(
+        (F.col("run_id") == head[0]["run_id"])
+        & (F.col("as_of_batch") == head[0]["as_of"])
+    )
+
+
+def _accumulate_foreach_batch(
+    stream: DataFrame,
+    state_path: str,
+    id_col: str,
+    lineage: str | None,
+    state_cols,
+    fold,
+    merge,
+    noun: str,
+):
+    """foreachBatch accumulator over the as_of state chain
+    (``_prior_state``): ``fold(rows)`` summarizes a batch's new rows as
+    ``state_cols`` rows, ``merge(prior, folded)`` combines two such
+    summaries. The slot is sorted by ``state_cols``.
+
+    Redelivery guard (id-ordered arrival): each slot also carries
+    ``max_seen_post``, the largest ``id_col`` folded so far, in the id
+    column's own type. Rows at or below it are at-least-once
+    redeliveries and are not folded again. A batch with nothing new
+    still writes its slot (the prior state, re-stamped) so that batch
+    b+1 finds b. A fresh lineage starts its own chain under its own
+    run_id. Returns the writeStream builder (caller sets the checkpoint
+    and starts)."""
+    run_token = _lineage_token(lineage)
+
+    def handle(batch_df: DataFrame, batch_id: int) -> None:
+        b = int(batch_id)
+        pre, hdr = _prior_state(
+            batch_df.sparkSession, state_path, run_token, b, state_cols,
+            noun, header=("max_seen_post",),
+        )
+        max_seen = None if hdr is None else hdr["max_seen_post"]
+        cand = batch_df
+        if max_seen is not None:
+            cand = cand.where(F.col(id_col) > F.lit(max_seen))
+        # every row left is above max_seen, so this is the new frontier
+        new_max = cand.agg(F.max(id_col).alias("mx")).collect()[0]["mx"]
+        if new_max is not None:
+            folded = fold(cand)
+            merged = folded if pre is None else merge(pre, folded)
+        elif pre is not None:
+            merged, new_max = pre, max_seen
+        else:
+            return  # nothing at all to record yet
+        id_type = batch_df.schema[id_col].dataType.simpleString()
+        _write_slot(
+            merged.withColumn("as_of_batch", F.lit(b))
+            .withColumn("max_seen_post", F.lit(new_max).cast(id_type))
+            .withColumn("run_id", F.lit(run_token))
+            .withColumn("epoch", F.lit(b % 2)),
+            state_path,
+            ("run_id", "epoch"),
+            sort=state_cols,
+        )
+
+    return scoped_foreach_batch(stream, handle)
 
 
 def incremental_embed_foreach_batch(
@@ -178,10 +349,7 @@ def incremental_embed_foreach_batch(
         )
         fresh.write.mode("append").parquet(sink_path)
 
-    return (
-        docs_stream.writeStream.foreachBatch(scoped_foreach_batch(handle))
-        .trigger(availableNow=True)
-    )
+    return scoped_foreach_batch(docs_stream, handle)
 
 
 def incremental_dedup_foreach_batch(docs_stream: DataFrame, sink_path: str,
@@ -218,7 +386,7 @@ def incremental_dedup_foreach_batch(docs_stream: DataFrame, sink_path: str,
             fresh = firsts
         fresh.write.mode("append").parquet(sink_path)
 
-    return docs_stream.writeStream.foreachBatch(scoped_foreach_batch(handle)).trigger(availableNow=True)
+    return scoped_foreach_batch(docs_stream, handle)
 
 
 def incremental_neardup_foreach_batch(
@@ -309,7 +477,7 @@ def incremental_neardup_foreach_batch(
         fresh_bands.write.mode("append").parquet(bands_path)
         banded.unpersist()
 
-    return docs_stream.writeStream.foreachBatch(scoped_foreach_batch(handle)).trigger(availableNow=True)
+    return scoped_foreach_batch(docs_stream, handle)
 
 
 def dedup_stream(
@@ -462,15 +630,9 @@ def incremental_rollup_foreach_batch(
         # it is about to overwrite (Spark rejects self-overwrite on file
         # sources). localCheckpoint truncates the lineage; a table
         # format with MERGE (Delta/Iceberg) replaces this dance 1:1.
-        merged = merged.localCheckpoint(eager=True)
-        (
-            merged.write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("day")
-            .parquet(sink_path)
-        )
+        _write_slot(merged.localCheckpoint(eager=True), sink_path, ("day",))
 
-    return events_stream.writeStream.foreachBatch(scoped_foreach_batch(handle)).trigger(availableNow=True)
+    return scoped_foreach_batch(events_stream, handle)
 
 
 def incremental_cms_foreach_batch(
@@ -506,9 +668,7 @@ def incremental_cms_foreach_batch(
             width=width, run_id=run_token,
         )
 
-    return events_stream.writeStream.foreachBatch(scoped_foreach_batch(handle)).trigger(
-        availableNow=True
-    )
+    return scoped_foreach_batch(events_stream, handle)
 
 
 def cms_partial_write(
@@ -527,13 +687,11 @@ def cms_partial_write(
     from semantic_ann_in_data_lake_spark.operators.sketches import cms_sketch
 
     part = cms_sketch(batch_df, key_col, depth=depth, width=width)
-    (
+    _write_slot(
         part.withColumn("run_id", F.lit(run_id))
-        .withColumn("batch_id", F.lit(batch_id))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("run_id", "batch_id")
-        .parquet(sink_path)
+        .withColumn("batch_id", F.lit(batch_id)),
+        sink_path,
+        ("run_id", "batch_id"),
     )
 
 
@@ -581,9 +739,7 @@ def incremental_bins_foreach_batch(
             run_id=run_token,
         )
 
-    return events_stream.writeStream.foreachBatch(scoped_foreach_batch(handle)).trigger(
-        availableNow=True
-    )
+    return scoped_foreach_batch(events_stream, handle)
 
 
 def bins_partial_write(
@@ -601,13 +757,11 @@ def bins_partial_write(
     from semantic_ann_in_data_lake_spark.operators.drift import bin_counts
 
     part = bin_counts(batch_df, value_col, lo, width, n_bins)
-    (
+    _write_slot(
         part.withColumn("run_id", F.lit(run_id))
-        .withColumn("batch_id", F.lit(batch_id))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("run_id", "batch_id")
-        .parquet(sink_path)
+        .withColumn("batch_id", F.lit(batch_id)),
+        sink_path,
+        ("run_id", "batch_id"),
     )
 
 
@@ -739,9 +893,7 @@ def incremental_winnow_foreach_batch(
         if hist_hits is not None:
             hist_hits.unpersist()
 
-    return docs_stream.writeStream.foreachBatch(scoped_foreach_batch(handle)).trigger(
-        availableNow=True
-    )
+    return scoped_foreach_batch(docs_stream, handle)
 
 
 def incremental_weighted_sample_foreach_batch(
@@ -792,9 +944,7 @@ def incremental_weighted_sample_foreach_batch(
             "overwrite"
         ).parquet(sink_path)
 
-    return docs_stream.writeStream.foreachBatch(scoped_foreach_batch(handle)).trigger(
-        availableNow=True
-    )
+    return scoped_foreach_batch(docs_stream, handle)
 
 
 def incremental_quality_monitor_foreach_batch(
@@ -824,17 +974,12 @@ def incremental_quality_monitor_foreach_batch(
     run_token = _lineage_token(lineage)
 
     def handle(batch_df: DataFrame, batch_id: int) -> None:
-        (
+        _write_slot(
             curation_funnel(batch_df)
             .withColumn("run_id", F.lit(run_token))
-            .withColumn("batch_id", F.lit(int(batch_id)))
-            .repartition(1)
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("run_id", "batch_id")
-            .parquet(sink_path)
+            .withColumn("batch_id", F.lit(int(batch_id))),
+            sink_path,
+            ("run_id", "batch_id"),
         )
 
-    return docs_stream.writeStream.foreachBatch(scoped_foreach_batch(handle)).trigger(
-        availableNow=True
-    )
+    return scoped_foreach_batch(docs_stream, handle)

@@ -1737,3 +1737,126 @@ def test_streaming_graph_triangles_equal_batch(spark, sf_dir, tmp_path):
         for r in read_graph_state(spark, state, "runA").collect()
     }
     assert got2 == want
+
+
+def _stage_parts(parts, tmp_path, name: str, start: int = 0) -> str:
+    """Write each frame as one parquet file into ``tmp_path/name``,
+    named so the file source lists them in order (``start`` offsets
+    the names, so later calls append files that sort after)."""
+    import glob
+
+    d = tmp_path / name
+    d.mkdir(exist_ok=True)
+    for i, part in enumerate(parts, start):
+        tmp = tmp_path / f"_{name}{i}"
+        part.coalesce(1).write.parquet(str(tmp))
+        shutil.copy(
+            glob.glob(str(tmp / "part-*.parquet"))[0],
+            d / f"{chr(97 + i)}.parquet",
+        )
+    return str(d)
+
+
+def test_streaming_hll_string_ids_equal_batch_and_redelivery(
+    spark, sf_dir, tmp_path
+):
+    """The id frontier keeps the id column's own type: an HLL stream
+    over STRING ids (zero-padded, so lexicographic order is arrival
+    order) equals batch `hll_registers` bit-for-bit, and a third file
+    re-delivering rows of the first adds nothing."""
+    from pyspark.sql import functions as F
+
+    from semantic_ann_in_data_lake_spark.operators.sketches import (
+        hll_registers,
+    )
+    from semantic_ann_in_data_lake_spark.streaming.hll_stream import (
+        incremental_hll_foreach_batch,
+        read_hll_state,
+    )
+
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
+        F.format_string("doc-%08d", "doc_id").alias("doc_id"), "text"
+    )
+    want = sorted(map(tuple, hll_registers(docs, "text").collect()))
+    first = docs.where(F.col("doc_id") < "doc-00000250")
+    in_dir = _stage_parts(
+        [first, docs.where(F.col("doc_id") >= "doc-00000250"),
+         first.limit(40)],
+        tmp_path, "hs_in",
+    )
+    state = str(tmp_path / "hs_state")
+    stream = spark.readStream.schema(docs.schema).option(
+        "maxFilesPerTrigger", 1
+    ).parquet(in_dir)
+    q = (
+        incremental_hll_foreach_batch(stream, state, "text", lineage="s")
+        .option("checkpointLocation", str(tmp_path / "hs_ck"))
+        .start()
+    )
+    q.awaitTermination()
+
+    got = read_hll_state(spark, state, lineage="s")
+    assert sorted(map(tuple, got.collect())) == want
+    raw = spark.read.parquet(state)
+    assert dict(raw.dtypes)["max_seen_post"] == "string"
+    # the redelivery batch (as_of 2) re-stamps, it does not fold
+    assert raw.where("as_of_batch = 2").count() == len(want)
+
+
+@pytest.mark.parametrize("leg", ["hll", "pca"])
+def test_state_chain_gap_and_missing_state_raise(
+    spark, sf_dir, tmp_path, leg
+):
+    """The as_of chain's failure paths: reading a missing path or an
+    unknown lineage raises, and after the newest epoch slot is deleted
+    the next trigger raises the state-gap error instead of folding
+    onto older state."""
+    from pyspark.sql import functions as F
+
+    if leg == "hll":
+        from semantic_ann_in_data_lake_spark.streaming.hll_stream import (
+            incremental_hll_foreach_batch as accumulate,
+            read_hll_state as read_state,
+        )
+
+        src = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
+            "doc_id", "text"
+        )
+        id_col, args = "doc_id", ("text",)
+    else:
+        from semantic_ann_in_data_lake_spark.streaming.pca_stream import (
+            incremental_cov_moments_foreach_batch as accumulate,
+            read_cov_moments_state as read_state,
+        )
+
+        src = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+        id_col, args = "vec_id", ()
+    state = str(tmp_path / "gap_state")
+
+    with pytest.raises(ValueError, match="state at"):
+        read_state(spark, state)
+
+    parts = [src.where(F.col(id_col) < 100), src.where(F.col(id_col) >= 100)]
+    in_dir = _stage_parts(parts[:1], tmp_path, "gap_in")
+
+    def run():
+        stream = spark.readStream.schema(src.schema).option(
+            "maxFilesPerTrigger", 1
+        ).parquet(in_dir)
+        return (
+            accumulate(stream, state, *args, lineage="g")
+            .option("checkpointLocation", str(tmp_path / "gap_ck"))
+            .start()
+        )
+
+    run().awaitTermination()  # batch 0 -> epoch 0
+    _stage_parts(parts[1:], tmp_path, "gap_in", start=1)
+    run().awaitTermination()  # batch 1 -> epoch 1
+    assert read_state(spark, state, lineage="g").count() > 0
+    with pytest.raises(ValueError, match="rows for run"):
+        read_state(spark, state, lineage="nope")
+
+    shutil.rmtree(f"{state}/run_id=g/epoch=1")  # the newest slot
+    _stage_parts([parts[1].limit(5)], tmp_path, "gap_in", start=2)
+    with pytest.raises(Exception, match="state gap: batch 2"):
+        run().awaitTermination()  # batch 2 finds as_of 0, not 1
