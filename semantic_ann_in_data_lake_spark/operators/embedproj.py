@@ -96,8 +96,8 @@ def embedding_cov_moments(
         ).alias("q6")
     )
 
-    # Round-11 optimization (guide §4.2): quantization stays a JVM
-    # expression (exact HALF_UP round, one eval per lane), but the
+    # Quantization stays a JVM expression (exact HALF_UP round, one
+    # eval per lane), but the
     # d(d+1)/2 pair terms are accumulated as int64 BLOCK MATMULS in an
     # Arrow-batched kernel instead of exploding 4M struct rows per 2k
     # docs through an interpreted HOF + decimal hash aggregate
@@ -115,8 +115,7 @@ def embedding_cov_moments(
         import pandas as pd
 
         def dense_group(qm: "np.ndarray"):
-            """Int64 fast path over a rectangular no-null group —
-            unchanged from the round-11 kernel (bit-identical)."""
+            """Int64 fast path over a rectangular no-null group."""
             d = qm.shape[1]
             iu, ju = np.triu_indices(d)
             maxq = int(np.abs(qm).max()) or 1

@@ -40,30 +40,175 @@ Dangling nodes (no out-edges) follow the textbook treatment: their
 mass redistributes uniformly. The symmetrized-kNN gate graph has none
 by construction; the hand-graph pytest exercises the path against a
 pure-Python model.
+
+Edge frames: every operator reads its input through `_edge_frame`,
+which drops edges with a NULL endpoint (a NULL id is no node: the
+node-keyed joins cannot match it, so keeping it would leak rank mass)
+and persists the projection. Outside a `cache.cache_scope` that
+persisted frame stays cached for the session, so callers should wrap
+the operator call, and the actions on its result, in
+``cache_scope()``.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.window import Window
 
 from semantic_ann_in_data_lake_spark.cache import scoped_persist
 from semantic_ann_in_data_lake_spark.operators.iterate import (
     iter_checkpoint,
 )
 
-# Round-12 optimization (guide §5, VERDICT r11 item 3): every operator
-# in this module references its (projected) edge frame several times —
-# iterative ones once per ROUND (T+2 plan sites for T rounds), the
-# analytics ones 3-5 times across join branches. Catalyst does not CSE
-# across branches, so without a persist the caller's whole edge-
-# producing subtree (typically an exact-kNN scoring join or an
-# NN-descent window) re-executes at every site — measured 34.9 → ~9 s
-# on pagerank_weighted_knn (5 rounds over a broadcast-kNN edge list).
-# scoped_persist keeps the blocks for the caller's consuming action and
-# releases them with the enclosing cache_scope (bench/oracle runs);
-# output is bit-identical (a persist changes evaluation count, not
-# values).
+
+def _edge_frame(
+    edges: DataFrame,
+    src_col: str,
+    dst_col: str,
+    names: tuple[str, str] = ("src", "dst"),
+    dedup: bool = False,
+    weight_col: str | None = None,
+) -> DataFrame:
+    """The one edge projection of this module: ``edges`` with its
+    endpoint columns renamed to ``names`` (plus ``w``, a double, when
+    ``weight_col`` is given), edges with a NULL endpoint dropped,
+    ``distinct()`` when ``dedup``, persisted.
+
+    Why persisted: every operator references its edge frame several
+    times — iterative ones once per round, the analytics ones 3-5
+    times across join branches — and Catalyst does not CSE across join
+    branches, so without a persist the caller's whole edge-producing
+    subtree (typically an exact-kNN join) re-executes at every
+    reference (measured 34.9 → ~9 s on `pagerank_weighted_knn`). A
+    persist changes evaluation count, not values.
+
+    Lifetime: the frame registers with the innermost
+    `cache.cache_scope` of this thread and is released when that scope
+    exits; outside a scope it stays cached for the session, so callers
+    should wrap the call in ``cache_scope()``."""
+    a, b = names
+    cols = [F.col(src_col).alias(a), F.col(dst_col).alias(b)]
+    if weight_col is not None:
+        cols.append(F.col(weight_col).cast("double").alias("w"))
+    e = edges.select(*cols).where(F.col(a).isNotNull() & F.col(b).isNotNull())
+    return scoped_persist(e.distinct() if dedup else e)
+
+
+def _nodes(e: DataFrame, seeds: DataFrame | None = None) -> DataFrame:
+    """Distinct ``node`` set: both endpoints of ``e``, plus ``seeds``
+    (a ``node`` frame) when given."""
+    src = e.select(F.col("src").alias("node"))
+    nodes = src.unionByName(e.select(F.col("dst").alias("node")))
+    if seeds is not None:
+        nodes = nodes.unionByName(seeds)
+    return nodes.distinct()
+
+
+def _seeds(seeds: DataFrame, seed_col: str) -> DataFrame:
+    """Distinct non-NULL seed ids as a ``node`` frame."""
+    s = seeds.select(F.col(seed_col).alias("node"))
+    return s.where(F.col("node").isNotNull()).distinct()
+
+
+def _degree(e: DataFrame, key: str = "src", name: str = "deg") -> DataFrame:
+    """``(node, <name>)``: edge count per ``key`` endpoint."""
+    return e.groupBy(F.col(key).alias("node")).agg(
+        F.count(F.lit(1)).alias(name)
+    )
+
+
+def _triangles(canon: DataFrame) -> DataFrame:
+    """Every triangle of a canonical (a < b) edge set exactly once, as
+    ``(a, b, c)`` with a < b < c: E(a,b) ⋈ E(b,c) ⋈ E(a,c), each join
+    an equi-shuffle on a node key."""
+    bc = canon.select(F.col("a").alias("b"), F.col("b").alias("c"))
+    ac = canon.select(F.col("a").alias("a2"), F.col("b").alias("c2"))
+    return (
+        canon.join(bc, "b")
+        .join(ac, (F.col("a") == F.col("a2")) & (F.col("c") == F.col("c2")))
+        .select("a", "b", "c")
+    )
+
+
+def _rank_rounds(
+    e: DataFrame,
+    start: DataFrame,
+    init: Column,
+    teleport: Column,
+    dangling_share: Column,
+    damping: float,
+    iters: int,
+    round_dp: int,
+) -> DataFrame:
+    """The one rank-propagation loop of `pagerank` and `trustrank`:
+    rank starts at ``init`` on every ``start`` row, then each of
+    ``iters`` rounds sets, per ``start`` node,
+    ``pr = round(teleport + d·(coalesce(__c, 0) + dangling_share),
+    round_dp)`` — ``__c`` the exact DECIMAL sum of the node's in-edge
+    contributions ``round(pr/deg, 12)`` (``pr·w/strength`` when ``e``
+    carries a weight ``w``), ``__dm`` the exact rank mass of the nodes
+    without out-edges. ``teleport`` and ``dangling_share`` may read
+    any ``start`` column. Returns ``(node, pr)``."""
+    if "w" in e.columns:
+        # exact decimal strength; NULL (not 0) when a node only has
+        # zero-weight out-edges, so it rides the dangling path instead
+        # of dividing by zero
+        outdeg = (
+            e.groupBy(F.col("src").alias("node"))
+            .agg(
+                F.sum(F.col("w").cast("decimal(38,12)"))
+                .cast("double")
+                .alias("deg")
+            )
+            .withColumn("deg", F.when(F.col("deg") > 0, F.col("deg")))
+        )
+        per_edge = F.col("pr") * F.col("w") / F.col("deg")
+    else:
+        outdeg = _degree(e)
+        per_edge = F.col("pr") / F.col("deg")
+    outdeg = outdeg.transform(iter_checkpoint)
+    dec = f"decimal(38,{round_dp})"
+    r = start.select("node", init.alias("pr")).transform(iter_checkpoint)
+    for _ in range(iters):
+        rd = r.join(outdeg, "node", "left")
+        # exact decimal accumulation: parallel double sums are
+        # order-nondeterministic; DECIMAL sums are not
+        contrib = (
+            rd.where(F.col("deg").isNotNull())
+            .join(e, rd["node"] == e["src"])
+            .groupBy(F.col("dst").alias("node"))
+            .agg(
+                F.sum(
+                    F.round(per_edge, 12).cast("decimal(38,12)")
+                ).alias("__c")
+            )
+        )
+        # pr is round_dp-dp exact by construction, so the scale-matched
+        # cast is a no-op grid-snap
+        dangling = rd.where(F.col("deg").isNull()).agg(
+            F.coalesce(
+                F.sum(F.col("pr").cast(dec)), F.lit(0).cast(dec)
+            ).alias("__dm")
+        )
+        r = (
+            start.join(contrib, "node", "left")
+            .crossJoin(F.broadcast(dangling))
+            .select(
+                "node",
+                F.round(
+                    teleport
+                    + F.lit(damping)
+                    * (
+                        F.coalesce(F.col("__c").cast("double"), F.lit(0.0))
+                        + dangling_share
+                    ),
+                    round_dp,
+                ).alias("pr"),
+            )
+            .transform(iter_checkpoint)
+        )
+    return r
 
 
 def pagerank(
@@ -93,91 +238,21 @@ def pagerank(
     follow the dangling path."""
     if iters < 0:
         raise ValueError("iters >= 0 required")
-    cols = [F.col(src_col).alias("src"), F.col(dst_col).alias("dst")]
-    if weight_col is not None:
-        cols.append(F.col(weight_col).cast("double").alias("w"))
-    # persisted: referenced by nodes/outdeg plus once per round (the
-    # contrib join) — see module-level round-12 note
-    e = scoped_persist(edges.select(*cols))
-    nodes = (
-        e.select(F.col("src").alias("node"))
-        .unionByName(e.select(F.col("dst").alias("node")))
-        .distinct()
-        .transform(iter_checkpoint)
-    )
+    e = _edge_frame(edges, src_col, dst_col, weight_col=weight_col)
+    nodes = _nodes(e).transform(iter_checkpoint)
     n = nodes.count()
     if n == 0:
         return nodes.select("node", F.lit(0.0).alias("pr"))
-    if weight_col is None:
-        outdeg = e.groupBy(F.col("src").alias("node")).agg(
-            F.count(F.lit(1)).alias("deg")
-        )
-    else:
-        # exact decimal strength; NULL (not 0) when a node only has
-        # zero-weight out-edges, so it rides the dangling path instead
-        # of dividing by zero
-        outdeg = (
-            e.groupBy(F.col("src").alias("node"))
-            .agg(
-                F.sum(F.col("w").cast("decimal(38,12)"))
-                .cast("double")
-                .alias("deg")
-            )
-            .withColumn(
-                "deg", F.when(F.col("deg") > 0, F.col("deg"))
-            )
-        )
-    outdeg = outdeg.transform(iter_checkpoint)
-    base = (1.0 - damping) / n
-
-    r = nodes.select("node", F.round(F.lit(1.0 / n), round_dp).alias("pr"))
-    r = r.transform(iter_checkpoint)
-
-    for _ in range(iters):
-        rd = r.join(outdeg, "node", "left")
-        # exact decimal accumulation: parallel double sums are
-        # order-nondeterministic; DECIMAL sums are not
-        per_edge = (
-            F.col("pr") / F.col("deg")
-            if weight_col is None
-            else F.col("pr") * F.col("w") / F.col("deg")
-        )
-        contrib = (
-            rd.where(F.col("deg").isNotNull())
-            .join(e, rd["node"] == e["src"])
-            .groupBy(F.col("dst").alias("node"))
-            .agg(
-                F.sum(
-                    F.round(per_edge, 12).cast("decimal(38,12)")
-                ).alias("__c")
-            )
-        )
-        # pr is round_dp-dp exact by construction, so the scale-matched
-        # cast is a no-op grid-snap
-        dangling = rd.where(F.col("deg").isNull()).agg(
-            F.coalesce(
-                F.sum(F.col("pr").cast(f"decimal(38,{round_dp})")),
-                F.lit(0).cast(f"decimal(38,{round_dp})"),
-            ).alias("__dm")
-        )
-        r = (
-            nodes.join(contrib, "node", "left")
-            .crossJoin(F.broadcast(dangling))
-            .select(
-                "node",
-                F.round(
-                    F.lit(base)
-                    + F.lit(damping)
-                    * (
-                        F.coalesce(F.col("__c").cast("double"), F.lit(0.0))
-                        + F.col("__dm").cast("double") / F.lit(float(n))
-                    ),
-                    round_dp,
-                ).alias("pr"),
-            )
-            .transform(iter_checkpoint)
-        )
-    return r
+    return _rank_rounds(
+        e,
+        nodes,
+        init=F.round(F.lit(1.0 / n), round_dp),
+        teleport=F.lit((1.0 - damping) / n),
+        dangling_share=F.col("__dm").cast("double") / F.lit(float(n)),
+        damping=damping,
+        iters=iters,
+        round_dp=round_dp,
+    )
 
 
 def symmetrize(knn: DataFrame, src_col: str = "query_id", dst_col: str = "cand_id") -> DataFrame:
@@ -216,34 +291,14 @@ def triangle_stats(
     with celebrity nodes — the same discipline every distributed
     triangle counter (e.g. Cohen's MapReduce construction) documents.
     """
-    # dedup the directed edge set up front: triangle/common counts are
-    # computed over distinct edges, so degrees must be too — a
-    # duplicated input edge would otherwise inflate degree and skew
-    # clustering (ADVICE r9). Persisted: deg + the three join legs of
-    # the triangle enumeration are 4 plan sites (module round-12 note).
-    e = scoped_persist(
-        edges.select(
-            F.col(src_col).alias("a"), F.col(dst_col).alias("b")
-        ).distinct()
-    )
-    canon = e.where(F.col("a") < F.col("b"))
-    deg = (
-        e.groupBy(F.col("a").alias("node"))
-        .agg(F.count(F.lit(1)).alias("degree"))
-    )
-    ab = canon
-    bc = canon.select(F.col("a").alias("b"), F.col("b").alias("c"))
-    ac = canon.select(F.col("a").alias("a2"), F.col("b").alias("c2"))
-    tri = (
-        ab.join(bc, "b")
-        .join(
-            ac,
-            (F.col("a") == F.col("a2")) & (F.col("c") == F.col("c2")),
-        )
-        .select("a", "b", "c")
-    )
+    # dedup the directed edge set up front: triangle counts are over
+    # distinct edges, so degrees must be too — a duplicated input edge
+    # would otherwise inflate degree and skew clustering
+    e = _edge_frame(edges, src_col, dst_col, ("a", "b"), dedup=True)
+    deg = _degree(e, "a", "degree")
     per_node = (
-        tri.select(F.explode(F.array("a", "b", "c")).alias("node"))
+        _triangles(e.where(F.col("a") < F.col("b")))
+        .select(F.explode(F.array("a", "b", "c")).alias("node"))
         .groupBy("node")
         .agg(F.count(F.lit(1)).alias("triangles"))
     )
@@ -295,20 +350,12 @@ def lpa_communities(
     the label frame is lineage-truncated per round."""
     if iters < 0:
         raise ValueError("iters >= 0 required")
-    # persisted: one plan site per round (see module round-12 note)
-    e = scoped_persist(
-        edges.select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst"))
+    e = _edge_frame(edges, src_col, dst_col)
+    lab = (
+        _nodes(e)
+        .select("node", F.col("node").alias("community"))
+        .transform(iter_checkpoint)
     )
-    nodes = (
-        e.select(F.col("src").alias("node"))
-        .unionByName(e.select(F.col("dst").alias("node")))
-        .distinct()
-    )
-    lab = nodes.select("node", F.col("node").alias("community")).localCheckpoint(
-        eager=True
-    )
-    from pyspark.sql.window import Window
-
     for _ in range(iters):
         counts = (
             e.join(lab.withColumnRenamed("node", "src"), "src")
@@ -351,8 +398,6 @@ def community_dedup(
     friendly shape `operators/semdedup.py` established; filter on
     ``kept`` for the survivor view. One window over the community key.
     """
-    from pyspark.sql.window import Window
-
     w = Window.partitionBy(community_col)
     return labels.select(
         F.col(node_col).alias("node"),
@@ -389,18 +434,10 @@ def kcore(
     trajectory is deterministic."""
     if k < 1:
         raise ValueError("k >= 1 required")
-    e = edges.select(
-        F.col(src_col).alias("src"), F.col(dst_col).alias("dst")
-    ).transform(iter_checkpoint)
-
-    def degrees(ed: DataFrame) -> DataFrame:
-        return ed.groupBy(F.col("src").alias("node")).agg(
-            F.count(F.lit(1)).alias("degree")
-        )
-
+    e = _edge_frame(edges, src_col, dst_col)
     t = 0
     while True:
-        deg = degrees(e)
+        deg = _degree(e, name="degree")
         keep = deg.where(F.col("degree") >= k).select("node")
         if rounds is None:
             # fixpoint mode: stop when nothing was peeled this round
@@ -419,7 +456,7 @@ def kcore(
             break
         if rounds is None and t > 10_000:  # unreachable backstop
             raise RuntimeError("kcore failed to converge")
-    return degrees(e)
+    return _degree(e, name="degree")
 
 
 def hits(
@@ -450,17 +487,8 @@ def hits(
     state frame is lineage-truncated per round."""
     if iters < 0:
         raise ValueError("iters >= 0 required")
-    # persisted: TWO plan sites per round (both half-steps) — see
-    # module round-12 note
-    e = scoped_persist(
-        edges.select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst"))
-    )
-    nodes = (
-        e.select(F.col("src").alias("node"))
-        .unionByName(e.select(F.col("dst").alias("node")))
-        .distinct()
-        .transform(iter_checkpoint)
-    )
+    e = _edge_frame(edges, src_col, dst_col)
+    nodes = _nodes(e).transform(iter_checkpoint)
     n = nodes.count()
     if n == 0:
         return nodes.select(
@@ -543,22 +571,14 @@ def trustrank(
     """
     if iters < 0:
         raise ValueError("iters >= 0 required")
-    # persisted: one plan site per round (see module round-12 note)
-    e = scoped_persist(
-        edges.select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst"))
-    )
-    s = seeds.select(F.col(seed_col).alias("node")).distinct()
-    nodes = (
-        e.select(F.col("src").alias("node"))
-        .unionByName(e.select(F.col("dst").alias("node")))
-        .unionByName(s)
-        .distinct()
-    )
+    e = _edge_frame(edges, src_col, dst_col)
+    s = _seeds(seeds, seed_col)
     n_seeds = s.count()
     if n_seeds == 0:
         raise ValueError("trustrank requires a non-empty seed set")
     tv = (
-        nodes.join(s.withColumn("__is", F.lit(True)), "node", "left")
+        _nodes(e, s)
+        .join(s.withColumn("__is", F.lit(True)), "node", "left")
         .select(
             "node",
             F.when(
@@ -570,50 +590,16 @@ def trustrank(
         )
         .transform(iter_checkpoint)
     )
-    outdeg = (
-        e.groupBy(F.col("src").alias("node"))
-        .agg(F.count(F.lit(1)).alias("deg"))
-        .transform(iter_checkpoint)
+    r = _rank_rounds(
+        e,
+        tv,
+        init=F.col("__t"),
+        teleport=F.lit(1.0 - damping) * F.col("__t"),
+        dangling_share=F.col("__dm").cast("double") * F.col("__t"),
+        damping=damping,
+        iters=iters,
+        round_dp=round_dp,
     )
-
-    r = tv.select("node", F.col("__t").alias("pr")).transform(iter_checkpoint)
-    for _ in range(iters):
-        rd = r.join(outdeg, "node", "left")
-        contrib = (
-            rd.where(F.col("deg").isNotNull())
-            .join(e, rd["node"] == e["src"])
-            .groupBy(F.col("dst").alias("node"))
-            .agg(
-                F.sum(
-                    F.round(F.col("pr") / F.col("deg"), 12).cast(
-                        "decimal(38,12)"
-                    )
-                ).alias("__c")
-            )
-        )
-        dangling = rd.where(F.col("deg").isNull()).agg(
-            F.coalesce(
-                F.sum(F.col("pr").cast(f"decimal(38,{round_dp})")),
-                F.lit(0).cast(f"decimal(38,{round_dp})"),
-            ).alias("__dm")
-        )
-        r = (
-            tv.join(contrib, "node", "left")
-            .crossJoin(F.broadcast(dangling))
-            .select(
-                "node",
-                F.round(
-                    F.lit(1.0 - damping) * F.col("__t")
-                    + F.lit(damping)
-                    * (
-                        F.coalesce(F.col("__c").cast("double"), F.lit(0.0))
-                        + F.col("__dm").cast("double") * F.col("__t")
-                    ),
-                    round_dp,
-                ).alias("pr"),
-            )
-            .transform(iter_checkpoint)
-        )
     return r.select("node", F.col("pr").alias("trust"))
 
 
@@ -652,19 +638,11 @@ def bfs_layers(
     diameter."""
     if rounds < 0:
         raise ValueError("rounds >= 0 required")
-    # persisted: one plan site per round (see module round-12 note)
-    e = scoped_persist(
-        edges.select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst"))
-    )
-    s = seeds.select(F.col(seed_col).alias("node")).distinct()
-    nodes = (
-        e.select(F.col("src").alias("node"))
-        .unionByName(e.select(F.col("dst").alias("node")))
-        .unionByName(s)
-        .distinct()
-    )
+    e = _edge_frame(edges, src_col, dst_col)
+    s = _seeds(seeds, seed_col)
     dist = (
-        nodes.join(s.withColumn("__s", F.lit(True)), "node", "left")
+        _nodes(e, s)
+        .join(s.withColumn("__s", F.lit(True)), "node", "left")
         .select(
             "node",
             F.when(F.col("__s"), F.lit(0))
@@ -726,18 +704,10 @@ def neighborhood_jaccard(
     is Σ deg(v)² over pivot nodes — same hub-cap discipline as
     `triangle_stats`."""
     # distinct first: common counts are deduped by construction, so
-    # degrees (and the co-neighbor pivot) must see each edge once too.
-    # Persisted: canon + deg + both pivot legs are 4 plan sites
-    # (module round-12 note).
-    e = scoped_persist(
-        edges.select(
-            F.col(src_col).alias("a"), F.col(dst_col).alias("b")
-        ).distinct()
-    )
+    # degrees (and the co-neighbor pivot) must see each edge once too
+    e = _edge_frame(edges, src_col, dst_col, ("a", "b"), dedup=True)
     canon = e.where(F.col("a") < F.col("b"))
-    deg = e.groupBy(F.col("a").alias("node")).agg(
-        F.count(F.lit(1)).alias("deg")
-    )
+    deg = _degree(e, "a")
     # common neighbors of (a, b): pivot c adjacent to both
     adj = e.select(F.col("a").alias("c"), F.col("b").alias("n"))
     pairs_via_c = (
@@ -807,17 +777,9 @@ def degree_assortativity(
     hash-exact. Degenerate variance (regular graphs) returns 0.0 by
     convention."""
     # distinct first: a duplicated input edge would inflate both the
-    # per-edge moment sums and the endpoint degrees. Persisted: the
-    # moment join references e + both degree sides (module round-12
-    # note).
-    e = scoped_persist(
-        edges.select(
-            F.col(src_col).alias("a"), F.col(dst_col).alias("b")
-        ).distinct()
-    )
-    deg = e.groupBy(F.col("a").alias("node")).agg(
-        F.count(F.lit(1)).alias("deg")
-    )
+    # per-edge moment sums and the endpoint degrees
+    e = _edge_frame(edges, src_col, dst_col, ("a", "b"), dedup=True)
+    deg = _degree(e, "a")
     j = (
         e.join(deg.select(F.col("node").alias("a"), F.col("deg").alias("da")), "a")
         .join(deg.select(F.col("node").alias("b"), F.col("deg").alias("db")), "b")
@@ -865,22 +827,27 @@ def graph_datacard(
     so DECIMAL(38,6) accumulates it without information loss);
     assortativity comes from `degree_assortativity`. Single row,
     hash-exact cross-engine."""
-    # persisted: triangle_stats and degree_assortativity each derive
-    # their own deduped frame from the same caller subtree — one
-    # upstream evaluation instead of two (module round-12 note)
-    edges = scoped_persist(edges)
-    ts = triangle_stats(edges, src_col, dst_col)
+    # one upstream evaluation for both triangle_stats and
+    # degree_assortativity, which each dedup their own copy
+    e = _edge_frame(edges, src_col, dst_col)
+    ts = triangle_stats(e)
     agg = ts.agg(
         F.count(F.lit(1)).cast("long").alias("n_nodes"),
         F.sum(F.col("degree").cast("decimal(38,0)")).alias("__sdeg"),
         F.sum(F.col("triangles").cast("decimal(38,0)")).alias("__stri"),
         F.sum(F.col("clustering").cast("decimal(38,6)")).alias("__sclu"),
     )
-    a = degree_assortativity(edges, src_col, dst_col)
+    a = degree_assortativity(e)
+
+    def count_over(col: str, per: int) -> Column:
+        # a sum over no rows is NULL; the count it stands for is 0
+        total = F.coalesce(F.col(col).cast("long"), F.lit(0))
+        return (total / F.lit(per)).cast("long")
+
     return agg.crossJoin(F.broadcast(a)).select(
         "n_nodes",
-        (F.col("__sdeg").cast("long") / F.lit(2)).cast("long").alias("n_edges"),
-        (F.col("__stri").cast("long") / F.lit(3)).cast("long").alias("n_triangles"),
+        count_over("__sdeg", 2).alias("n_edges"),
+        count_over("__stri", 3).alias("n_triangles"),
         F.round(
             F.col("__sdeg").cast("double")
             / F.col("n_nodes").cast("double"),
@@ -923,10 +890,8 @@ def triangle_count_doulion(
     whose cube divides 1000³ to stay on integers."""
     if not (0 < p_mille <= 1000):
         raise ValueError("p_mille in (0, 1000] required")
-    e = edges.select(F.col(src_col).alias("a"), F.col(dst_col).alias("b"))
-    # persisted: the sampled checkpoint and the n_edges count are two
-    # plan sites over the same dedup (module round-12 note)
-    canon = scoped_persist(e.where(F.col("a") < F.col("b")).distinct())
+    e = _edge_frame(edges, src_col, dst_col, ("a", "b"), dedup=True)
+    canon = e.where(F.col("a") < F.col("b"))
     coin = F.pmod(
         F.conv(
             F.substring(
@@ -947,17 +912,8 @@ def triangle_count_doulion(
         F.lit(1000),
     )
     sampled = canon.where(coin < F.lit(p_mille)).transform(iter_checkpoint)
-    tri = (
-        sampled.alias("ab")
-        .join(
-            sampled.select(F.col("a").alias("b"), F.col("b").alias("c")).alias("bc"),
-            "b",
-        )
-        .join(
-            sampled.select(F.col("a").alias("a2"), F.col("b").alias("c2")),
-            (F.col("a") == F.col("a2")) & (F.col("c") == F.col("c2")),
-        )
-        .agg(F.count(F.lit(1)).cast("long").alias("tri_sampled"))
+    tri = _triangles(sampled).agg(
+        F.count(F.lit(1)).cast("long").alias("tri_sampled")
     )
     counts = canon.agg(
         F.count(F.lit(1)).cast("long").alias("n_edges")
@@ -1009,15 +965,8 @@ def hyperanf(
     if rounds < 0:
         raise ValueError("rounds >= 0 required")
     m, alpha = 16, 0.673
-    # persisted: one plan site per round (see module round-12 note)
-    e = scoped_persist(
-        edges.select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst"))
-    )
-    nodes = (
-        e.select(F.col("src").alias("node"))
-        .unionByName(e.select(F.col("dst").alias("node")))
-        .distinct()
-    )
+    e = _edge_frame(edges, src_col, dst_col)
+    nodes = _nodes(e)
     h = F.conv(
         F.substring(
             F.md5(F.concat(F.lit(f"{seed}:"), F.col("node").cast("string"))),
@@ -1057,11 +1006,16 @@ def hyperanf(
                 / F.expr("shiftleft(cast(1 as bigint), val)")
             ).alias("__z")
         )
+        dec = "decimal(38,6)"
         return per_node.agg(
-            F.sum(
-                F.round(
-                    F.lit(alpha) * F.lit(float(m * m)) / F.col("__z"), 6
-                ).cast("decimal(38,6)")
+            # coalesce: N(t) of an empty graph is 0, not NULL
+            F.coalesce(
+                F.sum(
+                    F.round(
+                        F.lit(alpha) * F.lit(float(m * m)) / F.col("__z"), 6
+                    ).cast(dec)
+                ),
+                F.lit(0).cast(dec),
             ).alias("__s")
         ).select(
             F.lit(t).cast("int").alias("t"),

@@ -115,8 +115,8 @@ def melt_columns(
     The wide-table profiling primitive: ONE scan and one Generate node
     regardless of column count, so driver-side plan size is O(1) in
     n_columns — a per-column loop compiles n_columns plan branches and
-    schedules n_columns jobs (the round-2 shape; a 2,000-column lake
-    table pays plan compilation per column). Row count amplifies
+    schedules n_columns jobs (a 2,000-column lake table would pay
+    plan compilation per column). Row count amplifies
     n_columns×, but each emitted row is a short (name, value) pair and
     every consumer below immediately pre-aggregates map-side, so the
     shuffle payload stays |distinct values|, not |rows·cols|.

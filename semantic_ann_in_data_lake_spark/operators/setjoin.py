@@ -66,7 +66,7 @@ def jaccard_prefix_join(
         .where(F.col("sz") > 0)
     )
 
-    # Round-11 optimization: the prefix filter is powerless exactly
+    # The prefix filter is powerless exactly
     # when the vocabulary is far smaller than the corpus (every token
     # is hot, every posting list is ~n — the sf0.1 fixture is 31
     # tokens over 5000 docs, where the prefix path cost 159 s for an
@@ -243,8 +243,8 @@ def _bitmask_exact_jaccard(toks: DataFrame, threshold: float):
         pos = {int(i): p for p, i in enumerate(cids)}
         # block rows so the popcount scratch (B·n·w·8 uint8 lookups)
         # stays ~32 MB per task instead of scaling with the pair
-        # budget: at n near the 1e10-pair budget the former fixed
-        # blk=256 materialized a multi-GB int64 scratch (ADVICE r11)
+        # budget: at n near the 1e10-pair budget a fixed
+        # blk=256 would materialize a multi-GB int64 scratch
         blk = max(1, int((32 << 20) // max(len(cids) * w * 8, 1)))
         for pdf in batches:
             if len(pdf) == 0:
@@ -317,7 +317,7 @@ def containment_prefix_join(
     Returns ``(id_contained, id_container, containment)`` (6 dp).
     Empty shingle sets never pair.
 
-    Shape (round-11 optimization): count-based inverted index. C ≥ τ
+    Shape: count-based inverted index. C ≥ τ
     with τ > 0 requires sharing ≥ 1 shingle, so the shingle postings
     self-joined on the shingle enumerate every candidate ordered pair
     once per SHARED shingle and the per-pair group count IS |A ∩ B|

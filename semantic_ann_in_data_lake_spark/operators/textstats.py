@@ -213,9 +213,9 @@ def _skew_safe_term_join(tf: DataFrame, dfreq: DataFrame,
     """``tf ⋈ dfreq`` on ``term``, resilient to stopword skew.
 
     A shuffle join on raw ``term`` sends every (doc, "the") row to one
-    reducer — the skew that made tfidf 13.9× at sf1 (VERDICT r5 item
-    3). Split the vocabulary at its head instead: the ``max_hot``
-    heaviest terms with df > ``hot_df_floor`` (stopwords) join via a
+    reducer — the skew that made tfidf 13.9× at sf1. Split the
+    vocabulary at its head instead: the ``max_hot`` heaviest terms
+    with df > ``hot_df_floor`` (stopwords) join via a
     bounded broadcast — their tf rows never shuffle at all — and the
     cold tail is anti-joined against the same broadcast, then joined
     on a now-unskewed shuffle. Output rows are identical to the plain

@@ -82,7 +82,7 @@ def winnow_fingerprints(
     if k > len(_POLY_POWS):
         raise ValueError(f"k must be <= {len(_POLY_POWS)}")
 
-    # Round-11 optimization (guide §4.2): the gram hashing + window
+    # The gram hashing + window
     # minima are pure INTEGER math over char codes, so the per-row
     # work moves from interpreted higher-order lambdas (the k-term
     # polynomial re-evaluated through element_at per gram) to

@@ -1365,7 +1365,7 @@ def knn_ivf_pq_refine_l2(spark, sf_dir):
 
 
 # ---------------------------------------------------------------------------
-# Recall meta-gates for the IVF and PQ ladders (round-8; mirrors
+# Recall meta-gates for the IVF and PQ ladders (mirrors
 # lsh_recall_report's design): the approximation ERROR itself is a
 # hash-gated number, not a pytest assertion. The production fits
 # (sample-Lloyd / k-means||) are not SQL-expressible, so the reports run
@@ -1378,6 +1378,14 @@ def knn_ivf_pq_refine_l2(spark, sf_dir):
 # recall as an official number (reference intent:
 # SemLink/join_discoverer.py:425-451 quality reporting).
 # ---------------------------------------------------------------------------
+
+
+def _md5_first16(frame):
+    """The 16 rows of ``frame`` with the smallest (md5(vec_id), vec_id):
+    the hash-picked fit or seed set both engines can select."""
+    by_hash = frame.orderBy(F.md5(F.col("vec_id").cast("string")), "vec_id")
+    return by_hash.limit(16)
+
 
 _EXACT_TOPK_CTE = f"""
     exact AS (
@@ -1452,10 +1460,8 @@ def ivf_recall_report(spark, sf_dir):
     e = emb.select(
         "vec_id", F.col("embedding").cast("array<double>").alias("v")
     )
-    cents = (
-        e.orderBy(F.md5(F.col("vec_id").cast("string")), "vec_id")
-        .limit(16)
-        .select(F.col("vec_id").alias("cid"), F.col("v").alias("cv"))
+    cents = _md5_first16(e).select(
+        F.col("vec_id").alias("cid"), F.col("v").alias("cv")
     )
     return _ivf_candidate_recall(emb, e, cents)
 
@@ -1628,10 +1634,8 @@ def ivf_lloyd_recall_report(spark, sf_dir):
     e = emb.select(
         "vec_id", F.col("embedding").cast("array<double>").alias("v")
     )
-    cents = (
-        e.orderBy(F.md5(F.col("vec_id").cast("string")), "vec_id")
-        .limit(16)
-        .select(F.col("vec_id").alias("cid"), F.col("v").alias("cv"))
+    cents = _md5_first16(e).select(
+        F.col("vec_id").alias("cid"), F.col("v").alias("cv")
     )
     for _ in range(2):
         assign = (
@@ -1781,10 +1785,8 @@ def pq_recall_report(spark, sf_dir):
     e = emb.select(
         "vec_id", F.col("embedding").cast("array<double>").alias("v")
     )
-    cw = (
-        e.orderBy(F.md5(F.col("vec_id").cast("string")), "vec_id")
-        .limit(16)
-        .select(F.col("vec_id").alias("wid"), F.col("v").alias("wv"))
+    cw = _md5_first16(e).select(
+        F.col("vec_id").alias("wid"), F.col("v").alias("wv")
     )
     ss = F.explode(F.sequence(F.lit(0), F.lit(3))).alias("s")
     sub = e.select("vec_id", "v", ss).select(
@@ -2453,7 +2455,7 @@ def graph_search_recall_report(spark, sf_dir):
 
 
 # ---------------------------------------------------------------------------
-# Graph centrality over the mutual-kNN graph (round 9): PageRank as a
+# Graph centrality over the mutual-kNN graph: PageRank as a
 # curation signal (dense-region/representativity scoring). The gate
 # graph is the EXACT top-5 kNN graph symmetrized (SQL-replicable), so
 # the oracle replays the whole pipeline: graph build, out-degrees, and
@@ -2461,6 +2463,18 @@ def graph_search_recall_report(spark, sf_dir):
 # ---------------------------------------------------------------------------
 
 _PR_DAMPING, _PR_ITERS, _PR_DP = 0.85, 5, 9
+
+
+def _sym_knn_edges(spark, sf_dir):
+    """The gate graph of the graph entries: the exact top-5 kNN graph
+    of the corpus embeddings, symmetrized (`_SYM_KNN_EDGES_CTES` is
+    its DuckDB twin)."""
+    from semantic_ann_in_data_lake_spark.operators.graphrank import (
+        symmetrize,
+    )
+
+    emb = _t(spark, sf_dir, "embeddings")
+    return symmetrize(knn_join(emb, emb, k=5, strategy="broadcast"))
 
 
 def _pagerank_oracle_sql(damping: float, iters: int, dp: int, k: int = 5) -> str:
@@ -2543,13 +2557,9 @@ def pagerank_knn_graph(spark, sf_dir):
     dangling-node path has no traffic here (a symmetrized kNN graph
     has out-degree ≥ k everywhere); it is pinned against a pure-Python
     model in pytest (`tests/test_graphrank.py`)."""
-    from semantic_ann_in_data_lake_spark.operators.graphrank import (
-        pagerank,
-        symmetrize,
-    )
+    from semantic_ann_in_data_lake_spark.operators.graphrank import pagerank
 
-    emb = _t(spark, sf_dir, "embeddings")
-    edges = symmetrize(knn_join(emb, emb, k=5, strategy="broadcast"))
+    edges = _sym_knn_edges(spark, sf_dir)
     return pagerank(
         edges, damping=_PR_DAMPING, iters=_PR_ITERS, round_dp=_PR_DP
     ).select(F.col("node").alias("vec_id"), "pr")
@@ -2599,12 +2609,10 @@ def knn_graph_triangles(spark, sf_dir):
     corner explode; integer counts + one rounded IEEE division keep the
     row hash exact."""
     from semantic_ann_in_data_lake_spark.operators.graphrank import (
-        symmetrize,
         triangle_stats,
     )
 
-    emb = _t(spark, sf_dir, "embeddings")
-    edges = symmetrize(knn_join(emb, emb, k=5, strategy="broadcast"))
+    edges = _sym_knn_edges(spark, sf_dir)
     return triangle_stats(edges).select(
         F.col("node").alias("vec_id"), "degree", "triangles", "clustering"
     )
@@ -2654,11 +2662,9 @@ def lpa_communities_knn(spark, sf_dir):
     recovery is pinned in pytest."""
     from semantic_ann_in_data_lake_spark.operators.graphrank import (
         lpa_communities,
-        symmetrize,
     )
 
-    emb = _t(spark, sf_dir, "embeddings")
-    edges = symmetrize(knn_join(emb, emb, k=5, strategy="broadcast"))
+    edges = _sym_knn_edges(spark, sf_dir)
     return lpa_communities(edges, iters=_LPA_ITERS).select(
         F.col("node").alias("vec_id"), "community"
     )
@@ -2684,11 +2690,9 @@ def community_dedup_knn(spark, sf_dir):
     from semantic_ann_in_data_lake_spark.operators.graphrank import (
         community_dedup,
         lpa_communities,
-        symmetrize,
     )
 
-    emb = _t(spark, sf_dir, "embeddings")
-    edges = symmetrize(knn_join(emb, emb, k=5, strategy="broadcast"))
+    edges = _sym_knn_edges(spark, sf_dir)
     labels = lpa_communities(edges, iters=_LPA_ITERS)
     return community_dedup(labels).select(
         F.col("node").alias("vec_id"), "community", "kept"
@@ -2730,13 +2734,9 @@ def kcore_knn_graph(spark, sf_dir):
     Fixpoint-mode semantics (unique k-core, convergence detection) are
     pinned in pytest against a pure-Python model and on clique-
     structured graphs where the core is non-empty."""
-    from semantic_ann_in_data_lake_spark.operators.graphrank import (
-        kcore,
-        symmetrize,
-    )
+    from semantic_ann_in_data_lake_spark.operators.graphrank import kcore
 
-    emb = _t(spark, sf_dir, "embeddings")
-    edges = symmetrize(knn_join(emb, emb, k=5, strategy="broadcast"))
+    edges = _sym_knn_edges(spark, sf_dir)
     return kcore(edges, k=6, rounds=2).select(
         F.col("node").alias("vec_id"), "degree"
     )
@@ -3018,18 +3018,11 @@ def trustrank_knn_graph(spark, sf_dir):
     neighborhoods). Oracle replays all 5 rounds; python-model parity
     (incl. dangling-to-seeds) and seed-proximity monotonicity in
     pytest."""
-    from semantic_ann_in_data_lake_spark.operators.graphrank import (
-        symmetrize,
-        trustrank,
-    )
+    from semantic_ann_in_data_lake_spark.operators.graphrank import trustrank
 
     emb = _t(spark, sf_dir, "embeddings")
-    seeds = (
-        emb.orderBy(F.md5(F.col("vec_id").cast("string")), "vec_id")
-        .limit(16)
-        .select(F.col("vec_id").alias("node"))
-    )
-    edges = symmetrize(knn_join(emb, emb, k=5, strategy="broadcast"))
+    seeds = _md5_first16(emb).select(F.col("vec_id").alias("node"))
+    edges = _sym_knn_edges(spark, sf_dir)
     return trustrank(
         edges, seeds, damping=_PR_DAMPING, iters=_PR_ITERS, round_dp=_PR_DP
     ).select(F.col("node").alias("vec_id"), "trust")
@@ -3090,18 +3083,11 @@ def bfs_layers_knn(spark, sf_dir):
     near-dup of a near-dup; radius-based quarantine instead of
     whole-component removal, and an exact-integer cross-check of
     TrustRank's decay. Integer-only; the oracle replays every round."""
-    from semantic_ann_in_data_lake_spark.operators.graphrank import (
-        bfs_layers,
-        symmetrize,
-    )
+    from semantic_ann_in_data_lake_spark.operators.graphrank import bfs_layers
 
     emb = _t(spark, sf_dir, "embeddings")
-    seeds = (
-        emb.orderBy(F.md5(F.col("vec_id").cast("string")), "vec_id")
-        .limit(16)
-        .select(F.col("vec_id").alias("node"))
-    )
-    edges = symmetrize(knn_join(emb, emb, k=5, strategy="broadcast"))
+    seeds = _md5_first16(emb).select(F.col("vec_id").alias("node"))
+    edges = _sym_knn_edges(spark, sf_dir)
     return bfs_layers(edges, seeds, rounds=_BFS_ROUNDS).select(
         F.col("node").alias("vec_id"), "hops"
     )
@@ -3141,11 +3127,9 @@ def edge_jaccard_knn(spark, sf_dir):
     Jaccard and not Adamic-Adar)."""
     from semantic_ann_in_data_lake_spark.operators.graphrank import (
         neighborhood_jaccard,
-        symmetrize,
     )
 
-    emb = _t(spark, sf_dir, "embeddings")
-    edges = symmetrize(knn_join(emb, emb, k=5, strategy="broadcast"))
+    edges = _sym_knn_edges(spark, sf_dir)
     return neighborhood_jaccard(edges)
 
 
@@ -3182,11 +3166,9 @@ def assortativity_knn(spark, sf_dir):
     the single row is hash-exact cross-engine."""
     from semantic_ann_in_data_lake_spark.operators.graphrank import (
         degree_assortativity,
-        symmetrize,
     )
 
-    emb = _t(spark, sf_dir, "embeddings")
-    edges = symmetrize(knn_join(emb, emb, k=5, strategy="broadcast"))
+    edges = _sym_knn_edges(spark, sf_dir)
     return degree_assortativity(edges)
 
 
@@ -3247,11 +3229,9 @@ def graph_datacard_knn(spark, sf_dir):
     through DECIMAL sums of already-rounded values, hash-exact."""
     from semantic_ann_in_data_lake_spark.operators.graphrank import (
         graph_datacard,
-        symmetrize,
     )
 
-    emb = _t(spark, sf_dir, "embeddings")
-    edges = symmetrize(knn_join(emb, emb, k=5, strategy="broadcast"))
+    edges = _sym_knn_edges(spark, sf_dir)
     return graph_datacard(edges)
 
 
@@ -3296,10 +3276,8 @@ def prototype_prune_emb(spark, sf_dir):
     e = emb.select(
         "vec_id", F.col("embedding").cast("array<double>").alias("v")
     )
-    cents = (
-        e.orderBy(F.md5(F.col("vec_id").cast("string")), "vec_id")
-        .limit(16)
-        .select(F.col("vec_id").alias("cid"), F.col("v").alias("cv"))
+    cents = _md5_first16(e).select(
+        F.col("vec_id").alias("cid"), F.col("v").alias("cv")
     )
     return prototype_prune(emb, cents, keep_num=7, keep_den=10)
 
@@ -3334,12 +3312,10 @@ def triangles_doulion_knn(spark, sf_dir):
     hash-exact in both engines; estimator accuracy vs the exact count
     is pinned in pytest on a triangle-rich corpus."""
     from semantic_ann_in_data_lake_spark.operators.graphrank import (
-        symmetrize,
         triangle_count_doulion,
     )
 
-    emb = _t(spark, sf_dir, "embeddings")
-    edges = symmetrize(knn_join(emb, emb, k=5, strategy="broadcast"))
+    edges = _sym_knn_edges(spark, sf_dir)
     return triangle_count_doulion(edges, p_mille=500, seed=42)
 
 
@@ -3401,11 +3377,7 @@ def hyperanf_knn(spark, sf_dir):
     the exact power-of-two estimator; a pure-Python HLL model matches
     EXACTLY in pytest (the mechanism is deterministic — accuracy bands
     vs true ball sizes are the model's job, not the gate's)."""
-    from semantic_ann_in_data_lake_spark.operators.graphrank import (
-        hyperanf,
-        symmetrize,
-    )
+    from semantic_ann_in_data_lake_spark.operators.graphrank import hyperanf
 
-    emb = _t(spark, sf_dir, "embeddings")
-    edges = symmetrize(knn_join(emb, emb, k=5, strategy="broadcast"))
+    edges = _sym_knn_edges(spark, sf_dir)
     return hyperanf(edges, rounds=_HYPERANF_ROUNDS)

@@ -504,7 +504,7 @@ def fuzzy_join_part_names(spark, sf_dir):
 )
 def dedup_then_jaccard_join(spark, sf_dir):
     """The PRODUCTION posture for exact similarity self-joins on
-    duplicate-heavy corpora (PERF.md round-4): collapse exact-duplicate
+    duplicate-heavy corpora (see PERF.md): collapse exact-duplicate
     texts to min-id representatives FIRST, then prefix-join the
     representatives at high τ — the all-pairs-within-a-duplicate-group
     quadratic never materializes. Composition of dedup_exact's groupBy

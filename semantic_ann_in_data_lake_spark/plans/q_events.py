@@ -545,8 +545,8 @@ def value_outliers_per_user(spark, sf_dir):
 )
 def resample_interpolate_15m(spark, sf_dir):
     """Multi-unit interval twin of resample_interpolate_user_value
-    (regression surface for the date_trunc bug the round-4 review
-    caught): 15-minute epoch-floor buckets, hash-checked cross-engine
+    (regression surface for the multi-unit date_trunc bucketing
+    bug): 15-minute epoch-floor buckets, hash-checked cross-engine
     — the oracle floors epoch microseconds exactly like the operator."""
     from semantic_ann_in_data_lake_spark.operators.timeseries import (
         resample_interpolate,

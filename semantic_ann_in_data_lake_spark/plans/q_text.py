@@ -328,7 +328,7 @@ def quality_filter_docs(spark, sf_dir):
     standard keep/drop decision a pretraining ingest applies per
     document.
 
-    Shape (round-11 optimization): posexplode the words ONCE, build
+    Shape: posexplode the words ONCE, build
     shingles with lead() windows, and compute all four stats in one
     doc-keyed aggregate — the minhash_signatures shape. The former
     "one row-local projection" composed the words expression into TEN

@@ -49,7 +49,7 @@ def queries() -> dict[str, QueryFn]:
     None-oracle entries stay in REGISTRY (bench + pytest still run
     them) but are not exposed here: the driver has no rows-only mode,
     so a None-oracle name in its sample window is an unavoidable red
-    `no_oracle` row (VERDICT r5 "What's wrong" #1). Each hidden entry's
+    `no_oracle` row. Each hidden entry's
     correctness is carried by a hash-gated `*_distcheck`/`*_bounds`
     companion that IS exposed and green. Registration order; the
     entry module (``__spark_entry__.py``) orders its gate window.

@@ -47,10 +47,9 @@ def register_derived_views(spark: SparkSession, sf_dir: str) -> list[str]:
     dedup.minhash_signatures(docs).createOrReplaceTempView("minhash_signatures")
     names.append("minhash_signatures")
 
-    # round-3 operators as SQL relations: quality scores and the
-    # token-budget packing assignment — the two a downstream SQL user
-    # composes most (JOIN scores for filtering, GROUP BY bin_id for
-    # batch assembly)
+    # quality scores and the token-budget packing assignment as SQL
+    # relations — the two a downstream SQL user composes most (JOIN
+    # scores for filtering, GROUP BY bin_id for batch assembly)
     from semantic_ann_in_data_lake_spark.annotate.scoring import score_documents
     from semantic_ann_in_data_lake_spark.operators.packing import pack_sequences
 

@@ -71,7 +71,7 @@ def stream_refresh_ivf_index(
     # THIS closure (same token), while a restarted stream builds a new
     # writer (new token) — so a prior run's log rows, whose batch ids
     # restart at 0 under a fresh checkpoint, can never short-circuit
-    # a batch that carries new data (ADVICE r6: bare-batch_id keying
+    # a batch that carries new data (bare-batch_id keying
     # silently lost such rows)
     run_token = uuid.uuid4().hex
 

@@ -28,7 +28,7 @@ def _lineage_token(lineage: str | None) -> str:
     a fresh checkpoint restarts them at 0, so a guard keyed on the
     bare batch id either silently skips a colliding batch that carries
     new rows (data loss) or clobbers a prior run's partial with an
-    unrelated one (ADVICE r6 — the IVF ingest log had exactly this
+    unrelated one (the IVF ingest log once had exactly this
     hole). Callers that restart streams should pass something stable
     per checkpoint — the checkpoint path itself is ideal: same
     checkpoint → same token → cross-restart replays of an uncommitted
@@ -569,7 +569,7 @@ def incremental_rollup_foreach_batch(
     checkpoint path for cross-restart retry coverage; a restarted
     stream under a NEW lineage folds its batches normally instead of
     mistaking them for replays of a prior run's colliding batch ids —
-    the silent-loss mode ADVICE r6 flagged in the IVF ingest log."""
+    the silent-loss mode the IVF ingest log once had."""
     run_token = _lineage_token(lineage)
 
     def handle(batch_df: DataFrame, batch_id: int) -> None:

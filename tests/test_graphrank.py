@@ -820,3 +820,83 @@ def test_hyperanf_matches_python_model_exactly(spark):
     assert got == sorted(want)
     ests = [v for _, v in got]
     assert ests == sorted(ests)  # balls only grow
+
+
+# name → (edges, seed ids, the datacard's (n_edges, n_triangles))
+_EDGE_CORPORA = {
+    "empty": ([], [1], (0, 0)),
+    "mutual": ([(1, 2), (2, 1)], [1], (1, 0)),
+    "null_endpoint": (
+        [(1, 2), (2, 1), (2, None), (None, 1)], [1, None], (1, 0)
+    ),
+    "duplicated": (
+        [(1, 2), (2, 1), (2, 3), (3, 2), (1, 3), (3, 1), (1, 2), (2, 3)],
+        [1],
+        (3, 1),
+    ),
+}
+
+
+@pytest.mark.parametrize("corpus", sorted(_EDGE_CORPORA))
+def test_graph_ops_edge_corpora(spark, corpus):
+    """Every graph operator on the edge corpora the gate graph never
+    has. An edge with a NULL endpoint is absent and a NULL seed is
+    dropped: no operator emits a NULL node, and no rank leaks through
+    one. PageRank and TrustRank mass sums to 1 wherever the graph has
+    nodes; every node-keyed operator emits the same node set (the
+    seeded ones add their seed); counts over the empty graph read 0,
+    while its means, over 0 nodes, stay NULL."""
+    from semantic_ann_in_data_lake_spark.cache import cache_scope
+    from semantic_ann_in_data_lake_spark.operators import graphrank as g
+
+    rows, seed_ids, (n_edges, n_triangles) = _EDGE_CORPORA[corpus]
+    nodes = {v for s, d in rows if None not in (s, d) for v in (s, d)}
+    edges = spark.createDataFrame(rows, "src bigint, dst bigint")
+    seeds = spark.createDataFrame([(v,) for v in seed_ids], "node bigint")
+
+    def node_set(df):
+        return {r["node"] for r in df.collect()}
+
+    with cache_scope():
+        pr = {r["node"]: r["pr"] for r in g.pagerank(edges, iters=2).collect()}
+        trust = {
+            r["node"]: r["trust"]
+            for r in g.trustrank(edges, seeds, iters=2).collect()
+        }
+        keyed = {
+            "pagerank": set(pr),
+            "hits": node_set(g.hits(edges, iters=2)),
+            "lpa": node_set(g.lpa_communities(edges, iters=2)),
+            "kcore": node_set(g.kcore(edges, k=1, rounds=None)),
+            "triangle_stats": node_set(g.triangle_stats(edges)),
+            "jaccard": {
+                v
+                for r in g.neighborhood_jaccard(edges).collect()
+                for v in (r["a"], r["b"])
+            },
+        }
+        seeded = {
+            "trustrank": set(trust),
+            "bfs": node_set(g.bfs_layers(edges, seeds, 2)),
+        }
+        card = g.graph_datacard(edges).collect()[0]
+        anf = sorted(tuple(r) for r in g.hyperanf(edges, rounds=2).collect())
+        doulion = g.triangle_count_doulion(edges).collect()[0]
+        assort = g.degree_assortativity(edges).collect()[0]
+
+    for name, got in keyed.items():
+        assert got == nodes, name
+    for name, got in seeded.items():
+        assert got == nodes | {1}, name
+    if nodes:
+        assert sum(pr.values()) == pytest.approx(1.0, abs=1e-6)
+    assert sum(trust.values()) == pytest.approx(1.0, abs=1e-6)
+    assert card["n_nodes"] == len(nodes)
+    assert (card["n_edges"], card["n_triangles"]) == (n_edges, n_triangles)
+    assert assort["n_dir_edges"] == 2 * n_edges
+    assert doulion["n_edges"] == n_edges
+    if not nodes:
+        assert card["mean_degree"] is None
+        assert card["mean_clustering"] is None
+        assert anf == [(0, 0.0), (1, 0.0), (2, 0.0)]
+        assert tuple(doulion) == (0, 0, 0, 0)
