@@ -5,33 +5,38 @@ query session (``DeepJoin/annIndex.py:21-40`` saves/loads an hnswlib
 graph; SURVEY §4.3 redesigns persistence as Parquet). The per-run IVF
 strategy in ``operators/knn.py`` refits centroids on every call —
 right for one-shot joins, wasteful for a standing index over a
-growing corpus. This module is the standing form:
+growing corpus. This module is the standing form, stored as
+``<path>/centroids`` (``cell`` 0..nlist-1, ``centroid``) and
+``<path>/cells`` (``vec_id``, ``embedding``; hive-partitioned by
+``cell``):
 
 - ``build_ivf_index``: fit centroids once (shared
   ``knn.fit_ivf_centroids`` — sample or distributed k-means||),
-  assign every vector to its nearest cell, persist BOTH as Parquet:
-  ``<path>/centroids`` (nlist rows) and ``<path>/cells`` (hive-
-  partitioned by cell id).
+  assign every vector to its nearest cell, persist both tables.
 - ``refresh_ivf_index``: assign ONLY the new vectors against the
   stored centroids and append their cell partitions — ingesting a
   day's embeddings touches no existing data and costs O(new·nlist).
   Centroids drift as the corpus grows (FAISS guidance: retrain when
   recall sags); ``build`` is the retrain, ``refresh`` the fast path.
-- ``search_ivf_index``: probe ``nprobe`` nearest cells per query; the
-  cell equi-join prunes the candidate set to ~nprobe/nlist of the
-  corpus, partition-pruned by the hive layout. Distances are exact
-  recomputes over the pruned set (the reference's own ANN contract:
-  approximate NEIGHBORS, exact DISTANCES), so results are
-  deterministic and invariant-checkable.
+- ``search_ivf_index``: the per-run IVF tier's own query path
+  (``knn._ivf_scored``) over the stored cells — probe the ``nprobe``
+  nearest cells per query, score each probed cell with BLAS and a
+  local top-k, merge. Distances are exact recomputes over the probed
+  cells (the reference's own ANN contract: approximate NEIGHBORS,
+  exact DISTANCES), so results are deterministic and
+  invariant-checkable.
 - ``index_assignment_violations``: the standing invariant — every
-  stored vector sits in the cell of its nearest centroid (6-dp-rounded
-  distance, cell-id tie-break). Empty iff build+refresh agree with a
-  from-scratch recompute; the oracle is ``WHERE FALSE``.
+  stored vector sits in the cell of its nearest centroid. Empty iff
+  build+refresh agree with a from-scratch recompute; the oracle is
+  ``WHERE FALSE``.
 
-Assignment is pure JVM (broadcast the nlist-row centroid table, one
-``l2_sq`` per (vector, centroid), argmin via min-of-struct) — no
-Python boundary, deterministic under any partitioning, and the same
-expression the violation check replays.
+Build, refresh and the violation check assign with the declarative
+nearest-centroid rule (``knn._nearest_cells_declarative``: 6-dp-rounded
+L2², lowest cell id on ties), because the stored assignment must stay
+replayable by the violation check and the DuckDB oracles. The search
+probes with the tier's numpy rule (``knn._assign_cells``); a probe that
+breaks a near-tie the other way changes which cells are scanned, never
+a reported distance.
 """
 
 from __future__ import annotations
@@ -39,9 +44,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from semantic_ann_in_data_lake_spark.functions.vectors import l2_sq
 from semantic_ann_in_data_lake_spark.operators.knn import (
-    _prep, _ranked_topk, derive_nlist, fit_ivf_centroids,
+    _check_metric, _ivf_scored, _nearest_cells_declarative, _prep,
+    _ranked_topk, derive_nlist, fit_ivf_centroids,
 )
 
 
@@ -50,26 +55,22 @@ def _centroids_df(spark: SparkSession, centroids) -> DataFrame:
     return spark.createDataFrame(rows, "cell int, centroid array<double>")
 
 
+def _stored_vectors(emb: DataFrame, id_col: str, vec_col: str) -> DataFrame:
+    return _prep(emb, id_col, vec_col, "cand").select(
+        F.col("cand_id").alias("vec_id"), F.col("cand_vec").alias("embedding")
+    )
+
+
 def assign_cells_jvm(
     vecs: DataFrame, centroids: DataFrame, n_cells: int = 1
 ) -> DataFrame:
-    """Nearest ``n_cells`` centroid ids per vector — broadcast cross
-    join over the nlist-row centroid table + argmin window. Returns
-    ``(vec_id, embedding, cell[, cell_rank])``; deterministic: 6-dp
-    distance, cell-id tie-break."""
-    from pyspark.sql.window import Window
-
-    d = F.round(l2_sq("embedding", "centroid"), 6)
-    w = Window.partitionBy("vec_id").orderBy(
-        F.col("__d").asc(), F.col("cell").asc()
-    )
-    out = (
-        vecs.crossJoin(F.broadcast(centroids))
-        .withColumn("__d", d)
-        .withColumn("cell_rank", F.row_number().over(w))
-        .where(F.col("cell_rank") <= n_cells)
-        .drop("centroid", "__d")
-    )
+    """Nearest ``n_cells`` centroid ids per vector under the declarative
+    rule (broadcast cross join over the nlist-row centroid table +
+    argmin window). Returns ``(vec_id, embedding, cell[, cell_rank])``;
+    deterministic: 6-dp distance, cell-id tie-break."""
+    out = _nearest_cells_declarative(
+        vecs, centroids, "embedding", n_cells
+    ).drop("distance")
     return out.drop("cell_rank") if n_cells == 1 else out
 
 
@@ -89,14 +90,11 @@ def build_ivf_index(
         nlist = derive_nlist(emb)
     prepped = _prep(emb, id_col, vec_col, "cand")
     cents = fit_ivf_centroids(prepped, nlist=nlist, seed=seed, fit=fit)
-    c = prepped.select(
-        F.col("cand_id").alias("vec_id"), F.col("cand_vec").alias("embedding")
-    )
     cdf = _centroids_df(emb.sparkSession, cents)
     cdf.write.mode("overwrite").parquet(f"{path}/centroids")
-    assign_cells_jvm(c, cdf).write.mode("overwrite").partitionBy(
-        "cell"
-    ).parquet(f"{path}/cells")
+    assign_cells_jvm(_stored_vectors(emb, id_col, vec_col), cdf).write.mode(
+        "overwrite"
+    ).partitionBy("cell").parquet(f"{path}/cells")
 
 
 def refresh_ivf_index(
@@ -110,12 +108,9 @@ def refresh_ivf_index(
     touch of existing cells (the new rows land as extra files inside
     their cell partitions)."""
     cdf = spark.read.parquet(f"{path}/centroids")
-    c = _prep(new_emb, id_col, vec_col, "cand").select(
-        F.col("cand_id").alias("vec_id"), F.col("cand_vec").alias("embedding")
-    )
-    assign_cells_jvm(c, cdf).write.mode("append").partitionBy(
-        "cell"
-    ).parquet(f"{path}/cells")
+    assign_cells_jvm(_stored_vectors(new_emb, id_col, vec_col), cdf).write.mode(
+        "append"
+    ).partitionBy("cell").parquet(f"{path}/cells")
 
 
 def search_ivf_index(
@@ -130,42 +125,32 @@ def search_ivf_index(
     exclude_self: bool = True,
     round_dp: int = 6,
 ) -> DataFrame:
-    """Top-k per query over the persisted cells. The hive partition
-    column makes the cell equi-join directory-prunable; scoring is the
-    declarative exact-distance + top-k window (deterministic; for a
-    BLAS-batched hot path over a LOADED index, feed the cells frame to
-    ``knn_join`` — same artifact, either engine tier)."""
-    from semantic_ann_in_data_lake_spark.functions.vectors import cosine_sim
+    """Top-k per query over the persisted cells, through the IVF tier's
+    probe-and-score path. The stored centroid ids must be 0..nlist-1
+    (the layout ``build_ivf_index`` writes): the probe names cells by
+    centroid row. Ids must be integral, as in every numpy kNN tier. A
+    re-ingested id may sit in two cells, so pairs are deduplicated
+    before ranking."""
+    import numpy as np
+    from pyspark.sql.types import IntegralType
 
-    cdf = spark.read.parquet(f"{path}/centroids")
+    _check_metric(metric)
+    cents = spark.read.parquet(f"{path}/centroids").orderBy("cell").collect()
+    if [r["cell"] for r in cents] != list(range(len(cents))):
+        raise ValueError(f"centroid ids at {path} are not 0..nlist-1")
     cells = spark.read.parquet(f"{path}/cells").select(
         F.col("vec_id").alias("cand_id"),
         F.col("embedding").alias("cand_vec"),
         "cell",
     )
     q = _prep(queries, id_col, vec_col, "query")
-    probes = assign_cells_jvm(
-        q.select(
-            F.col("query_id").alias("vec_id"),
-            F.col("query_vec").alias("embedding"),
-        ),
-        cdf,
-        n_cells=nprobe,
-    ).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("query_vec"),
-        "cell",
-    )
-    joined = probes.join(cells, "cell")
-    if exclude_self:
-        joined = joined.where(F.col("query_id") != F.col("cand_id"))
-    dist = (
-        F.round(cosine_sim("query_vec", "cand_vec"), round_dp)
-        if metric == "cosine"
-        else F.round(l2_sq("query_vec", "cand_vec"), round_dp)
-    )
-    scored = joined.select(
-        "query_id", "cand_id", dist.alias("distance")
+    if not all(isinstance(df.schema[0].dataType, IntegralType) for df in (q, cells)):
+        raise ValueError("search_ivf_index needs integral query and stored ids")
+    scored = _ivf_scored(
+        q,
+        cells,
+        np.asarray([r["centroid"] for r in cents], dtype=np.float64),
+        nprobe, k, metric, exclude_self, round_dp,
     ).dropDuplicates(["query_id", "cand_id"])
     return _ranked_topk(scored, k, metric)
 

@@ -30,6 +30,11 @@ picks broadcast, pq, ivf or graph from measured sizes:
 The IVF and PQ tiers share one quantizer core kept in this module:
 :func:`_sq_l2` (Gram-form squared L2), :func:`_id_sorted_sample`,
 :func:`_lloyd` and :func:`_nearest`.
+The standing index (``operators/ivf_index.py``) searches through the
+IVF tier's query path, :func:`_ivf_scored`, and every declarative
+nearest-centroid assignment (the index's build, refresh and violation
+check, ``operators/prototypes.py``, the IVF recall gates) goes through
+:func:`_nearest_cells_declarative`.
 
 Distances are SQUARED L2 internally, exactly like FAISS ``IndexFlatL2``
 (the reference thresholds ``dist**0.5 <= tau``,
@@ -146,6 +151,13 @@ def _over_budget(
     return "; ".join(reasons) or None
 
 
+def _check_metric(metric: str) -> None:
+    """Reject a metric no tier computes: a typo would otherwise fall
+    through to whichever branch a tier takes for "not l2_sq"."""
+    if metric not in ("l2_sq", "cosine"):
+        raise ValueError(f"unknown metric {metric!r}; use 'l2_sq' or 'cosine'")
+
+
 def _prep(df: DataFrame, id_col: str, vec_col: str, side: str) -> DataFrame:
     return df.select(
         F.col(id_col).alias(f"{side}_id"),
@@ -235,8 +247,16 @@ def knn_join(
     strategy) or 8× smaller cell shuffle + cache-resident cells (ivf).
     Workers dequantize (qvec·scale) and score as usual; distances are
     then approximate (quantization error ~scale/2 per lane), so results
-    are near- but not hash-exact.
+    are near- but not hash-exact. Any other explicit strategy raises
+    ``ValueError`` when given ``compress``, as does a ``metric`` other
+    than ``l2_sq``/``cosine``.
     """
+    _check_metric(metric)
+    if compress is not None and strategy not in ("auto", "broadcast", "ivf"):
+        raise ValueError(
+            f"strategy={strategy!r} never uses compress; only 'broadcast', "
+            "'ivf' and 'auto' take it"
+        )
     known_n_cand = known_n_query = None
     if (
         strategy == "auto"
@@ -440,11 +460,6 @@ def knn_join(
             raise ValueError(
                 "strategy='nndescent_refine' always excludes self pairs"
             )
-        if compress is not None:
-            raise ValueError(
-                "strategy='nndescent_refine' scores raw vectors on the "
-                "refine pass; compress is not supported"
-            )
         from semantic_ann_in_data_lake_spark.operators.embedproj import (
             knn_nndescent_refine,
         )
@@ -472,11 +487,6 @@ def knn_join(
             raise ValueError(
                 "strategy='nndescent' always excludes self pairs"
             )
-        if compress is not None:
-            raise ValueError(
-                "strategy='nndescent' scores raw vectors; compress is "
-                "not supported"
-            )
         from semantic_ann_in_data_lake_spark.operators.nndescent import (
             nndescent_knn_graph,
         )
@@ -501,11 +511,6 @@ def knn_join(
             )
         if metric != "l2_sq":
             raise ValueError("strategy='graph' supports metric='l2_sq' only")
-        if compress is not None:
-            raise ValueError(
-                "strategy='graph' scores raw vectors; compress is not "
-                "supported"
-            )
         from semantic_ann_in_data_lake_spark.operators.graphsearch import (
             graph_search,
         )
@@ -1065,16 +1070,15 @@ def _knn_ivf(
        centroids (small, broadcastable);
     2. every candidate is assigned to its nearest centroid (one cell);
     3. every query probes its ``nprobe`` nearest cells;
-    4. equi-join on cell id + exact distance + top-k window.
+    4. each probed cell is scored with a local top-k
+       (:func:`_ivf_scored`), and one window merges the survivors.
 
-    The join is a plain shuffle on cell id, so BOTH sides scale out —
+    The cogroup is a plain shuffle on cell id, so BOTH sides scale out —
     unlike the broadcast strategy (candidate side must fit memory) —
     and recall degrades gracefully with nprobe/nlist instead of
     falling off a bucket cliff like LSH. Recall < 1 by design: the
     true neighbor may live in an unprobed cell.
     """
-    import numpy as np
-
     spark = queries.sparkSession
     if compress not in (None, "int8"):
         raise ValueError(f"unknown compress {compress!r}")
@@ -1095,16 +1099,33 @@ def _knn_ivf(
         *c.columns, F.col("cells")[0].alias("cell")
     )
     q = _prep(queries, id_col, vec_col, "query")
+    scored = _ivf_scored(
+        q, c_cells, centroids, nprobe, k, metric, exclude_self, round_dp
+    )
+    return _ranked_topk(scored, k, metric)
+
+
+def _ivf_scored(
+    q, c_cells, centroids, nprobe, k, metric, exclude_self, round_dp
+) -> DataFrame:
+    """The IVF query path shared by :func:`_knn_ivf` and the standing
+    index (``operators/ivf_index.py``): each prepped query probes its
+    ``nprobe`` nearest ``centroids`` (:func:`_assign_cells`), and every
+    probed cell of ``c_cells`` (``cand_id``, its vectors, ``cell``) is
+    scored by BLAS with a local top-k. Returns UNRANKED ``(query_id,
+    cand_id, distance)`` rows, at most ``nprobe·k`` per query."""
+    import numpy as np
+
     q_cells = _assign_cells(q, centroids, nprobe).select(
         "query_id", "query_vec", F.explode("cells").alias("cell")
     )
 
-    # Per-cell BLAS scoring with a LOCAL top-k, then a global merge over
-    # ≤ nprobe·k survivors per query — the classic IVF merge. The naive
-    # alternative (equi-join on cell + per-pair distance + one global
-    # window) materializes |Q|·nprobe·(n/nlist) pairs and funnels them
-    # all through the ranking shuffle (measured 13 s vs ~2 s at sf0.1);
-    # here the shuffle after scoring carries only nprobe·k rows/query.
+    # Per-cell BLAS scoring with a LOCAL top-k, then the caller's global
+    # merge over ≤ nprobe·k survivors per query — the classic IVF merge.
+    # Joining probes to cells and ranking every (query, candidate) pair
+    # in one global window would instead push |Q|·nprobe·(n/nlist) pairs
+    # through the ranking shuffle (measured 13 s vs ~2 s at sf0.1); here
+    # the shuffle after scoring carries only nprobe·k rows/query.
     # Each cogroup holds one cell (~n/nlist candidates + its probing
     # queries) — nlist grows with n, keeping cells worker-sized.
     # A query's global top-k over probed cells is contained in the union
@@ -1119,6 +1140,11 @@ def _knn_ivf(
         cmat = _vectors(cpdf)
         order = np.argsort(cids)
         cids, cmat = cids[order], cmat[order]
+        # a standing index re-ingests: an id stored twice in one cell is
+        # scored once, so it neither fills two local top-k slots nor
+        # escapes the self-pair exclusion
+        first = np.r_[True, cids[1:] != cids[:-1]]
+        cids, cmat = cids[first], cmat[first]
         qids = qpdf["query_id"].to_numpy(dtype=np.int64)
         qmat = np.asarray(list(qpdf["query_vec"]), dtype=np.float64)
         rows = _np_topk_rows(
@@ -1127,12 +1153,37 @@ def _knn_ivf(
         )
         return pd.DataFrame(rows, columns=cols)
 
-    scored = (
+    return (
         q_cells.groupBy("cell")
         .cogroup(c_cells.groupBy("cell"))
         .applyInPandas(score_cell, schema="query_id long, cand_id long, distance double")
     )
-    return _ranked_topk(scored, k, metric)
+
+
+def _nearest_cells_declarative(
+    vecs: DataFrame,
+    centroids: DataFrame,
+    vec_col: str,
+    n_cells: int = 1,
+    round_dp: int = DEFAULT_ROUND_DP,
+) -> DataFrame:
+    """The declarative nearest-centroid rule: ``vecs`` (keyed by
+    ``vec_id``) against the broadcast ``(cell, centroid)`` table,
+    ``round(l2_sq, round_dp)`` per pair, lowest cell id on ties — the
+    form the DuckDB oracles and the index's violation check replay.
+    Returns ``vecs``' columns plus ``cell``, ``distance`` and
+    ``cell_rank`` (1 = nearest) for each vector's ``n_cells`` nearest
+    cells."""
+    w = Window.partitionBy("vec_id").orderBy(
+        F.col("distance").asc(), F.col("cell").asc()
+    )
+    return (
+        vecs.crossJoin(F.broadcast(centroids))
+        .withColumn("distance", F.round(l2_sq(vec_col, "centroid"), round_dp))
+        .withColumn("cell_rank", F.row_number().over(w))
+        .where(F.col("cell_rank") <= n_cells)
+        .drop("centroid")
+    )
 
 
 def threshold_join(knn: DataFrame, tau: float) -> DataFrame:

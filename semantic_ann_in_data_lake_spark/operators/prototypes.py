@@ -7,9 +7,9 @@ marginal information at large data scale, so pruning them beats
 random pruning (and at small scale the rule inverts, which is why the
 keep fraction is a knob, not a constant).
 
-Mechanics mirror the IVF tier's discipline (`operators/knn.py`,
-`plans/q_ann.py::ivf_recall_report`): assignment on round(L2², 6)
-with centroid-id tie-breaks; the oracle-gated entry runs the
+Assignment is the IVF tier's declarative nearest-centroid rule
+(`operators/knn.py::_nearest_cells_declarative`: round(L2², 6) with
+centroid-id tie-breaks); the oracle-gated entry runs the
 mechanism over the md5-hash-picked centroid fit both engines can
 select, while production fits (sample-Lloyd / k-means||) plug into
 the same ``centroids`` parameter and stay pinned by pytest.
@@ -27,7 +27,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from semantic_ann_in_data_lake_spark.functions.vectors import l2_sq
+from semantic_ann_in_data_lake_spark.operators.knn import _nearest_cells_declarative
 
 
 def prototype_prune(
@@ -56,21 +56,11 @@ def prototype_prune(
         F.col(vec_col).cast("array<double>").alias("__v"),
     )
     c = centroids.select(
-        F.col(centroid_id_col).alias("__cid"),
-        F.col(centroid_vec_col).cast("array<double>").alias("__cv"),
+        F.col(centroid_id_col).alias("cell"),
+        F.col(centroid_vec_col).cast("array<double>").alias("centroid"),
     )
-    ad = v.crossJoin(F.broadcast(c)).select(
-        "vec_id",
-        "__cid",
-        F.round(l2_sq("__v", "__cv"), round_dp).alias("__d"),
-    )
-    w_assign = Window.partitionBy("vec_id").orderBy(
-        F.col("__d").asc(), F.col("__cid").asc()
-    )
-    assigned = (
-        ad.withColumn("__r", F.row_number().over(w_assign))
-        .where(F.col("__r") == 1)
-        .select("vec_id", F.col("__cid").alias("cluster"), F.col("__d").alias("dist"))
+    assigned = _nearest_cells_declarative(v, c, "__v", 1, round_dp).select(
+        "vec_id", F.col("cell").alias("cluster"), F.col("distance").alias("dist")
     )
     w_rank = Window.partitionBy("cluster").orderBy(
         F.col("dist").desc(), F.col("vec_id").asc()

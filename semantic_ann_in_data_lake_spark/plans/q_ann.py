@@ -18,7 +18,9 @@ from semantic_ann_in_data_lake_spark.functions.vectors import (
 from semantic_ann_in_data_lake_spark.operators.evaluation import (
     symmetric_truth,
 )
-from semantic_ann_in_data_lake_spark.operators.knn import knn_join, threshold_join
+from semantic_ann_in_data_lake_spark.operators.knn import (
+    _nearest_cells_declarative, knn_join, threshold_join,
+)
 from semantic_ann_in_data_lake_spark.annotate.embedder import (
     hash_embedding_expr, hash_embedding_sql,
 )
@@ -1461,7 +1463,7 @@ def ivf_recall_report(spark, sf_dir):
         "vec_id", F.col("embedding").cast("array<double>").alias("v")
     )
     cents = _md5_first16(e).select(
-        F.col("vec_id").alias("cid"), F.col("v").alias("cv")
+        F.col("vec_id").alias("cell"), F.col("v").alias("centroid")
     )
     return _ivf_candidate_recall(emb, e, cents)
 
@@ -1470,34 +1472,18 @@ def _ivf_candidate_recall(emb, e, cents, nprobe: int = 4):
     """Shared report arithmetic of the IVF recall gates: probe
     geometry, cell assignment, exact-top-5 hit join, and the
     population-sum candidate count (never materializing the
-    Θ(n²·nprobe/nlist) candidate set — see ivf_recall_report)."""
-    from pyspark.sql.window import Window as _Win
-
-    from semantic_ann_in_data_lake_spark.functions.vectors import l2_sq
-
+    Θ(n²·nprobe/nlist) candidate set — see ivf_recall_report).
+    ``cents`` is the ``(cell, centroid)`` table."""
     ad = scoped_persist(
-        e.crossJoin(F.broadcast(cents))
-        .select(
-            "vec_id",
-            "cid",
-            F.round(l2_sq("v", "cv"), 6).alias("d"),
-        )
-        .withColumn(
-            "rnk",
-            F.row_number().over(
-                _Win.partitionBy("vec_id").orderBy(
-                    F.col("d").asc(), F.col("cid").asc()
-                )
-            ),
+        _nearest_cells_declarative(e, cents, "v", nprobe).select(
+            "vec_id", "cell", "cell_rank"
         )
     )
-    assign = ad.filter(F.col("rnk") == 1).select(
-        F.col("vec_id").alias("cand_id"), F.col("cid").alias("cell")
+    assign = ad.filter(F.col("cell_rank") == 1).select(
+        F.col("vec_id").alias("cand_id"), "cell"
     )
     probes = scoped_persist(
-        ad.filter(F.col("rnk") <= int(nprobe)).select(
-            F.col("vec_id").alias("query_id"), F.col("cid").alias("cell")
-        )
+        ad.select(F.col("vec_id").alias("query_id"), "cell")
     )
     # candidate COUNT without materializing the Θ(n²·nprobe/nlist)
     # candidate-pair set: population sum over probed cells minus the n
@@ -1626,37 +1612,18 @@ def ivf_lloyd_recall_report(spark, sf_dir):
     Lloyd mechanism's recall as the official trained-fit number.
     Quadratic only in the exact baseline; candidate counts via
     population sums (shared `_ivf_candidate_recall` tail)."""
-    from pyspark.sql.window import Window as _Win
-
-    from semantic_ann_in_data_lake_spark.functions.vectors import l2_sq
-
     emb = _t(spark, sf_dir, "embeddings")
     e = emb.select(
         "vec_id", F.col("embedding").cast("array<double>").alias("v")
     )
     cents = _md5_first16(e).select(
-        F.col("vec_id").alias("cid"), F.col("v").alias("cv")
+        F.col("vec_id").alias("cell"), F.col("v").alias("centroid")
     )
     for _ in range(2):
-        assign = (
-            e.crossJoin(F.broadcast(cents))
-            .select(
-                "vec_id", "v", "cid",
-                F.round(l2_sq("v", "cv"), 6).alias("d"),
-            )
-            .withColumn(
-                "rnk",
-                F.row_number().over(
-                    _Win.partitionBy("vec_id").orderBy(
-                        F.col("d").asc(), F.col("cid").asc()
-                    )
-                ),
-            )
-            .filter(F.col("rnk") == 1)
-        )
+        assign = _nearest_cells_declarative(e, cents, "v")
         means = (
-            assign.select("cid", F.posexplode("v").alias("i", "x"))
-            .groupBy("cid", "i")
+            assign.select("cell", F.posexplode("v").alias("i", "x"))
+            .groupBy("cell", "i")
             .agg(
                 F.round(
                     (
@@ -1670,16 +1637,16 @@ def ivf_lloyd_recall_report(spark, sf_dir):
                 ).alias("mx")
             )
         )
-        newc = means.groupBy("cid").agg(
+        newc = means.groupBy("cell").agg(
             F.transform(
                 F.array_sort(F.collect_list(F.struct("i", "mx"))),
                 lambda s: s["mx"],
-            ).alias("cv")
+            ).alias("centroid")
         )
         cents = (
-            cents.select("cid", F.col("cv").alias("__old"))
-            .join(newc, "cid", "left")
-            .select("cid", F.coalesce("cv", "__old").alias("cv"))
+            cents.select("cell", F.col("centroid").alias("__old"))
+            .join(newc, "cell", "left")
+            .select("cell", F.coalesce("centroid", "__old").alias("centroid"))
         )
     return _ivf_candidate_recall(emb, e, cents)
 

@@ -1,7 +1,7 @@
 """SparkSession factory.
 
-Defaults are tuned so the same code is correct on ``local[32]`` test runs
-and sensible on a large cluster: AQE on (runtime coalescing + skew-join
+Defaults are tuned so the same code is correct on local test runs and
+sensible on a large cluster: AQE on (runtime coalescing + skew-join
 splitting), Arrow on (fast pandas interchange for the few Pandas-UDF
 stages), UTC session timezone (so timestamp results are engine-portable),
 and a shuffle-partition count matched to local cores rather than the
@@ -24,9 +24,10 @@ def get_spark(
     """Build (or reuse) a SparkSession with scale-aware defaults.
 
     On a real cluster, pass ``master=None`` with an externally configured
-    session; locally this defaults to ``local[$SPARK_GRAFT_CPUS]``.
+    session; locally this defaults to ``local[$SPARK_GRAFT_CPUS]``, or
+    one task slot per machine core when that is unset.
     """
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = os.environ.get("SPARK_GRAFT_CPUS", str(os.cpu_count() or 1))
     master = master or f"local[{cpus}]"
     shuffle_partitions = shuffle_partitions or int(cpus)
 

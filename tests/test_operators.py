@@ -4403,6 +4403,83 @@ def test_ivf_index_detects_planted_misassignment(spark, sf_dir, tmp_path):
     assert len(v) == 1 and v[0]["vec_id"] >= 10_000_000
 
 
+def test_ivf_index_search_edge_corpora(spark, sf_dir, tmp_path):
+    """Edge inputs of the standing index's search: an empty query
+    frame, ids re-ingested into the index, self matches kept, cosine,
+    an unknown metric, string ids and a centroid table that is not
+    0..n-1."""
+    import shutil
+
+    from semantic_ann_in_data_lake_spark.operators.checks import (
+        knn_invariant_violations,
+    )
+    from semantic_ann_in_data_lake_spark.operators.ivf_index import (
+        build_ivf_index, refresh_ivf_index, search_ivf_index,
+    )
+    from semantic_ann_in_data_lake_spark.sources.readers import read_table
+
+    emb = read_table(spark, sf_dir, "embeddings")
+    q = emb.where(F.col("vec_id") % 25 == 0)
+    qids = sorted(r["vec_id"] for r in q.collect())
+    path = str(tmp_path / "ix")
+    build_ivf_index(emb, path, nlist=8)
+    assert search_ivf_index(spark, path, q.limit(0), k=3).count() == 0
+
+    # refreshed twice: each query id is stored three times in its cell
+    refresh_ivf_index(spark, path, q)
+    refresh_ivf_index(spark, path, q)
+    res = search_ivf_index(spark, path, q, k=5, nprobe=2)
+    pairs = [(r["query_id"], r["cand_id"]) for r in res.collect()]
+    assert len(pairs) == len(set(pairs)) == 5 * len(qids)
+    assert knn_invariant_violations(res, emb).count() == 0
+
+    own = search_ivf_index(
+        spark, path, q, k=3, nprobe=2, exclude_self=False
+    ).where(F.col("rank") == 1)
+    assert sorted(map(tuple, own.select("query_id", "cand_id", "distance")
+                      .collect())) == [(i, i, 0.0) for i in qids]
+
+    cos = search_ivf_index(spark, path, q, k=3, metric="cosine")
+    assert cos.count() == 3 * len(qids)
+    assert knn_invariant_violations(cos, emb, metric="cosine").count() == 0
+
+    with pytest.raises(ValueError, match="metric"):
+        search_ivf_index(spark, path, q, metric="l2")
+    with pytest.raises(ValueError, match="integral"):
+        search_ivf_index(
+            spark, path, q.withColumn("vec_id", F.col("vec_id").cast("string"))
+        )
+
+    bad = str(tmp_path / "bad")
+    shutil.copytree(path + "/cells", bad + "/cells")
+    spark.read.parquet(path + "/centroids").select(
+        (F.col("cell") + 1).alias("cell"), "centroid"
+    ).write.parquet(bad + "/centroids")
+    with pytest.raises(ValueError, match="0..nlist-1"):
+        search_ivf_index(spark, bad, q)
+
+
+@pytest.mark.parametrize(
+    "strategy",
+    ["exact", "broadcast", "ivf", "lsh", "pq", "pq_refine", "ivf_pq",
+     "ivf_pq_refine", "opq_refine", "pca_refine"],
+)
+def test_knn_join_rejects_unknown_metric_and_unused_compress(
+    spark, sf_dir, strategy
+):
+    """A mistyped metric raises on every tier instead of silently
+    scoring cosine or L2; ``compress`` raises on every explicit tier
+    that would drop it."""
+    from semantic_ann_in_data_lake_spark.operators.knn import knn_join
+
+    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+    with pytest.raises(ValueError, match="metric"):
+        knn_join(emb, emb, k=3, metric="l2", strategy=strategy)
+    if strategy not in ("broadcast", "ivf"):
+        with pytest.raises(ValueError, match="compress"):
+            knn_join(emb, emb, k=3, strategy=strategy, compress="int8")
+
+
 def test_table_diff_classifies_and_validates(spark):
     import pyspark.sql.functions as F
 
