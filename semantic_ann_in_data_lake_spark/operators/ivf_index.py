@@ -14,8 +14,9 @@ growing corpus. This module is the standing form, stored as
   ``knn.fit_ivf_centroids`` — sample or distributed k-means||),
   assign every vector to its nearest cell, persist both tables.
 - ``refresh_ivf_index``: assign ONLY the new vectors against the
-  stored centroids and append their cell partitions — ingesting a
-  day's embeddings touches no existing data and costs O(new·nlist).
+  stored centroids and append one file to each cell they touch,
+  written by parallel tasks — ingesting a day's embeddings touches no
+  existing data and costs O(new·nlist).
   Centroids drift as the corpus grows (FAISS guidance: retrain when
   recall sags); ``build`` is the retrain, ``refresh`` the fast path.
 - ``search_ivf_index``: the per-run IVF tier's own query path
@@ -46,7 +47,7 @@ from pyspark.sql import functions as F
 
 from semantic_ann_in_data_lake_spark.operators.knn import (
     _check_metric, _ivf_scored, _nearest_cells_declarative, _prep,
-    _ranked_topk, derive_nlist, fit_ivf_centroids,
+    _ranked_topk, _require_integral_ids, derive_nlist, fit_ivf_centroids,
 )
 
 
@@ -58,6 +59,18 @@ def _centroids_df(spark: SparkSession, centroids) -> DataFrame:
 def _stored_vectors(emb: DataFrame, id_col: str, vec_col: str) -> DataFrame:
     return _prep(emb, id_col, vec_col, "cand").select(
         F.col("cand_id").alias("vec_id"), F.col("cand_vec").alias("embedding")
+    )
+
+
+def _write_cells(df: DataFrame, path: str, mode: str) -> None:
+    """Write assigned ``(vec_id, embedding, cell)`` rows into the
+    hive-partitioned ``<path>/cells``: one file per touched cell, from
+    parallel tasks. Hashing by cell puts each cell in exactly one task;
+    the explicit partition count keeps AQE from coalescing the shuffle
+    into a single task that writes every cell file in turn."""
+    n = df.sparkSession.sparkContext.defaultParallelism
+    df.repartition(n, "cell").write.mode(mode).partitionBy("cell").parquet(
+        f"{path}/cells"
     )
 
 
@@ -92,9 +105,9 @@ def build_ivf_index(
     cents = fit_ivf_centroids(prepped, nlist=nlist, seed=seed, fit=fit)
     cdf = _centroids_df(emb.sparkSession, cents)
     cdf.write.mode("overwrite").parquet(f"{path}/centroids")
-    assign_cells_jvm(_stored_vectors(emb, id_col, vec_col), cdf).write.mode(
-        "overwrite"
-    ).partitionBy("cell").parquet(f"{path}/cells")
+    _write_cells(
+        assign_cells_jvm(_stored_vectors(emb, id_col, vec_col), cdf), path, "overwrite"
+    )
 
 
 def refresh_ivf_index(
@@ -105,12 +118,12 @@ def refresh_ivf_index(
     vec_col: str = "embedding",
 ) -> None:
     """Append new vectors under the STORED centroids — no refit, no
-    touch of existing cells (the new rows land as extra files inside
-    their cell partitions)."""
+    touch of existing cells (each cell the new rows touch gains one
+    file, written by parallel tasks)."""
     cdf = spark.read.parquet(f"{path}/centroids")
-    assign_cells_jvm(_stored_vectors(new_emb, id_col, vec_col), cdf).write.mode(
-        "append"
-    ).partitionBy("cell").parquet(f"{path}/cells")
+    _write_cells(
+        assign_cells_jvm(_stored_vectors(new_emb, id_col, vec_col), cdf), path, "append"
+    )
 
 
 def search_ivf_index(
@@ -132,10 +145,13 @@ def search_ivf_index(
     re-ingested id may sit in two cells, so pairs are deduplicated
     before ranking."""
     import numpy as np
-    from pyspark.sql.types import IntegralType
 
     _check_metric(metric)
-    cents = spark.read.parquet(f"{path}/centroids").orderBy("cell").collect()
+    # at most nlist rows: sort on the driver, not with a range-sampled
+    # distributed sort on every search
+    cents = sorted(
+        spark.read.parquet(f"{path}/centroids").collect(), key=lambda r: r["cell"]
+    )
     if [r["cell"] for r in cents] != list(range(len(cents))):
         raise ValueError(f"centroid ids at {path} are not 0..nlist-1")
     cells = spark.read.parquet(f"{path}/cells").select(
@@ -144,8 +160,7 @@ def search_ivf_index(
         "cell",
     )
     q = _prep(queries, id_col, vec_col, "query")
-    if not all(isinstance(df.schema[0].dataType, IntegralType) for df in (q, cells)):
-        raise ValueError("search_ivf_index needs integral query and stored ids")
+    _require_integral_ids(q, cells)
     scored = _ivf_scored(
         q,
         cells,

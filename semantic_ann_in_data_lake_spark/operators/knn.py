@@ -165,6 +165,25 @@ def _prep(df: DataFrame, id_col: str, vec_col: str, side: str) -> DataFrame:
     )
 
 
+def _integral_ids(*frames: DataFrame) -> bool:
+    """Whether the id column (the first column of a ``_prep``-ed frame)
+    of every frame is integral. Reads the schema only: no Spark job."""
+    from pyspark.sql.types import IntegralType
+
+    return all(isinstance(df.schema[0].dataType, IntegralType) for df in frames)
+
+
+def _require_integral_ids(*frames: DataFrame) -> None:
+    """The numpy tiers score ids as int64: reject any other id type
+    before a probe or a worker meets it."""
+    if not _integral_ids(*frames):
+        raise ValueError(
+            "this kNN path scores ids as int64 and needs integral query "
+            "and candidate ids; knn_join(strategy='exact') answers other "
+            "id types"
+        )
+
+
 def _empty_topk(spark) -> DataFrame:
     """The standard ``knn_join`` result with no rows."""
     return spark.createDataFrame(
@@ -272,6 +291,13 @@ def knn_join(
         # needs none of the row-count/dim probes below, so dispatch
         # before paying them
         strategy = "graph"
+    if strategy == "auto" and not _integral_ids(
+        _prep(queries, id_col, vec_col, "query"),
+        _prep(candidates, id_col, vec_col, "cand"),
+    ):
+        # every rung below scores ids as int64; only exact answers
+        # string (or other non-integral) ids
+        strategy = "exact"
     if strategy == "auto":
         # SURVEY §4.2's optional dispatch: broadcast the candidate index
         # when it fits comfortably in executor memory, else fall back to
@@ -343,14 +369,10 @@ def knn_join(
             max_bucket_size=max_bucket_size,
         )
     if strategy == "ivf":
-        if nlist is None:
-            # explicit-tier default mirrors the auto degrade path:
-            # derive cells from the candidate count instead of a fixed
-            # 16 that stops partitioning the corpus at scale
-            nlist = derive_nlist(candidates, known_n=known_n_cand)
         return _knn_ivf(
             queries, candidates, id_col, vec_col, k, metric, exclude_self, round_dp,
             nlist=nlist, nprobe=nprobe, fit=ivf_fit, compress=compress,
+            known_n_cand=known_n_cand,
         )
     if strategy == "pq":
         # product-quantization / ADC tier (operators/pq.py): m uint8
@@ -694,6 +716,9 @@ def _knn_broadcast(
     """
     import numpy as np
 
+    q = _prep(queries, id_col, vec_col, "query")
+    c = _prep(candidates, id_col, vec_col, "cand")
+    _require_integral_ids(q, c)
     spark = queries.sparkSession
     dim = _vec_dim(candidates, vec_col) if known_dim is None else known_dim
     n_cand = _row_count(candidates) if known_n_cand is None else known_n_cand
@@ -731,9 +756,7 @@ def _knn_broadcast(
         # 6.1 s cold → 1.5 s with reused workers + cached rebuild.
         payload = (qmat_i8[order], scales[order])
     elif compress is None:
-        cand_rows = (
-            _prep(candidates, id_col, vec_col, "cand").toPandas()
-        )
+        cand_rows = c.toPandas()
         cand_ids = np.asarray(cand_rows["cand_id"].to_numpy(), dtype=np.int64)
         cand_mat = np.asarray(list(cand_rows["cand_vec"]), dtype=np.float64)
         # Pre-sort candidates by id so numpy's stable argsort tie-break
@@ -745,7 +768,6 @@ def _knn_broadcast(
         raise ValueError(f"unknown compress {compress!r}")
     bc = spark.sparkContext.broadcast((cand_ids, payload, compress))
 
-    q = _prep(queries, id_col, vec_col, "query")
     # a single-file parquet source arrives as ONE partition → the whole
     # top-k would run on one task; spread queries across the executors
     # (narrow rows, one extra shuffle — negligible next to the scoring)
@@ -1060,8 +1082,8 @@ def fit_ivf_centroids(
 
 def _knn_ivf(
     queries, candidates, id_col, vec_col, k, metric, exclude_self, round_dp,
-    nlist: int = 16, nprobe: int = 4, seed: int = 42, fit: str = "sample",
-    compress: str | None = None,
+    nlist: int | None = None, nprobe: int = 4, seed: int = 42,
+    fit: str = "sample", compress: str | None = None, known_n_cand=None,
 ) -> DataFrame:
     """Strategy (d): IVF-style partitioned search (FAISS IVF-Flat's
     shape, distributed).
@@ -1083,6 +1105,13 @@ def _knn_ivf(
     if compress not in (None, "int8"):
         raise ValueError(f"unknown compress {compress!r}")
     c = _prep(candidates, id_col, vec_col, "cand")
+    q = _prep(queries, id_col, vec_col, "query")
+    _require_integral_ids(q, c)
+    if nlist is None:
+        # derive cells from the candidate count (the auto ladder passes
+        # the count it already paid for) instead of a fixed 16 that
+        # stops partitioning the corpus at scale
+        nlist = derive_nlist(candidates, known_n=known_n_cand)
     try:
         centroids = fit_ivf_centroids(c, nlist=nlist, seed=seed, fit=fit)
     except _EmptySample:
@@ -1098,7 +1127,6 @@ def _knn_ivf(
     c_cells = _assign_cells(c, centroids, 1).select(
         *c.columns, F.col("cells")[0].alias("cell")
     )
-    q = _prep(queries, id_col, vec_col, "query")
     scored = _ivf_scored(
         q, c_cells, centroids, nprobe, k, metric, exclude_self, round_dp
     )

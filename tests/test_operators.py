@@ -4459,6 +4459,122 @@ def test_ivf_index_search_edge_corpora(spark, sf_dir, tmp_path):
         search_ivf_index(spark, bad, q)
 
 
+def _job_ids(spark, group, action):
+    """Ids of the Spark jobs ``action`` starts, by job group."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        action()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return list(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_local_session_lists_partition_directories_on_the_driver(
+    spark, tmp_path
+):
+    """A ``local[...]`` session from ``get_spark`` lists a table's
+    partition directories on the driver: past Spark's default threshold
+    of 32 paths a read would otherwise start a listing job (the standing
+    IVF index reads 200+ ``cell=<c>`` directories on every search). The
+    explicit schema keeps schema inference's own job out of the count."""
+    path = str(tmp_path / "parts")
+    spark.range(80, numPartitions=1).select(
+        "id", (F.col("id") % 40).alias("part")
+    ).write.partitionBy("part").parquet(path)
+
+    def read():
+        df = spark.read.schema("id long, part int").parquet(path)
+        assert len(df.inputFiles()) == 40
+
+    assert _job_ids(spark, "driver-side-listing", read) == []
+
+
+def test_ivf_index_writes_one_file_per_touched_cell(spark, sf_dir, tmp_path):
+    """Build writes exactly one parquet file per cell; a refresh adds
+    exactly one file to each cell its rows land in and none elsewhere.
+    The assignment stays valid, and search answers the same rows as
+    the same cells written in a single task."""
+    import os
+    import shutil
+
+    from semantic_ann_in_data_lake_spark.operators.ivf_index import (
+        build_ivf_index, index_assignment_violations, refresh_ivf_index,
+        search_ivf_index,
+    )
+    from semantic_ann_in_data_lake_spark.sources.readers import read_table
+
+    def files_per_cell(path):
+        root = os.path.join(path, "cells")
+        return {
+            int(d.split("=", 1)[1]): sum(
+                f.endswith(".parquet") for f in os.listdir(os.path.join(root, d))
+            )
+            for d in os.listdir(root) if d.startswith("cell=")
+        }
+
+    emb = read_table(spark, sf_dir, "embeddings")
+    delta = emb.where(F.col("vec_id") % 50 == 0)
+    path = str(tmp_path / "ix")
+    # at scale AQE keeps the assignment's shuffle partitions apart, and
+    # each of them would write its own file into every cell
+    coalesce = "spark.sql.adaptive.coalescePartitions.enabled"
+    was = spark.conf.get(coalesce)
+    spark.conf.set(coalesce, "false")
+    try:
+        build_ivf_index(emb.where(F.col("vec_id") % 50 != 0), path, nlist=8)
+        built = files_per_cell(path)
+        refresh_ivf_index(spark, path, delta)
+    finally:
+        spark.conf.set(coalesce, was)
+    assert set(built.values()) == {1}
+    delta_ids = [r["vec_id"] for r in delta.collect()]
+    touched = {
+        r["cell"] for r in spark.read.parquet(path + "/cells")
+        .where(F.col("vec_id").isin(delta_ids)).select("cell").distinct().collect()
+    }
+    after = files_per_cell(path)
+    assert 0 < len(touched) < len(built)
+    assert after == {c: n + (c in touched) for c, n in built.items()}
+    assert index_assignment_violations(spark, path).count() == 0
+
+    one_task = str(tmp_path / "one_task")
+    shutil.copytree(path + "/centroids", one_task + "/centroids")
+    spark.read.parquet(path + "/cells").coalesce(1).write.partitionBy(
+        "cell"
+    ).parquet(one_task + "/cells")
+    q = emb.where(F.col("vec_id") % 10 == 0)
+    got, want = (
+        sorted(map(tuple, search_ivf_index(spark, p, q, k=5, nprobe=2).collect()))
+        for p in (path, one_task)
+    )
+    assert got == want and len(got) == 5 * q.count()
+
+
+def test_knn_join_string_ids_decline_to_exact(spark, sf_dir):
+    """The numpy tiers score ids as int64: on string ids the explicit
+    broadcast and ivf strategies raise a ValueError naming the exact
+    strategy before any Spark job, and auto answers with exact's
+    rows."""
+    from semantic_ann_in_data_lake_spark.operators.knn import knn_join
+    from semantic_ann_in_data_lake_spark.sources.readers import read_table
+
+    emb = read_table(spark, sf_dir, "embeddings").withColumn(
+        "vec_id", F.concat(F.lit("v"), F.col("vec_id").cast("string"))
+    )
+    for strategy in ("broadcast", "ivf"):
+        def call():
+            with pytest.raises(ValueError, match="strategy='exact'"):
+                knn_join(emb, emb, k=3, strategy=strategy)
+
+        assert _job_ids(spark, f"string-ids-{strategy}", call) == []
+    auto, exact = (
+        sorted(map(tuple, knn_join(emb, emb, k=3, strategy=s).collect()))
+        for s in ("auto", "exact")
+    )
+    assert auto == exact and len(exact) == 3 * emb.count()
+
+
 @pytest.mark.parametrize(
     "strategy",
     ["exact", "broadcast", "ivf", "lsh", "pq", "pq_refine", "ivf_pq",
