@@ -44,8 +44,10 @@ Scale design:
   arrays would put m·d Catalyst nodes on the analysis/codegen path;
   see ``_model_frame``).
 - ``knn_pca_refine`` = IVF shortlist in the reduced space + exact
-  re-rank on raw vectors (`pq._exact_rerank`): the standard
-  rotate→compress→refine production ladder, never quadratic.
+  re-rank on raw vectors (``knn._rescore_pairs`` then
+  ``knn._ranked_topk``, the refine stage every refine tier shares):
+  the standard rotate→compress→refine production ladder, never
+  quadratic.
 """
 
 from __future__ import annotations
@@ -58,6 +60,9 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from semantic_ann_in_data_lake_spark.functions.vectors import dot
+from semantic_ann_in_data_lake_spark.operators.knn import (
+    _empty_topk, _ranked_topk, _rescore_pairs, knn_join,
+)
 
 #: micro-unit quantization of the covariance inputs (see module doc).
 COV_QUANT_DP = 6
@@ -600,6 +605,20 @@ def jl_sql(
     return f"SELECT {id_col}, {lst} AS proj FROM {table}"
 
 
+def _refine_model(
+    df: DataFrame, vec_col: str, m: int | None = None
+) -> PCAModel | None:
+    """The refine tiers' PCA fit over ``df``: ``m`` clamped to the
+    corpus dimension (:func:`_dim` — a corpus under ``m`` dimensions
+    gets a full-rank rotation; ``None`` fits full rank), or ``None``
+    when ``df`` has no rows, where the tier returns the empty top-k."""
+    if df.isEmpty():
+        return None
+    if m is not None:
+        m = min(m, _dim(df, vec_col))
+    return pca_fit(df, m=m, vec_col=vec_col)
+
+
 def knn_pca_refine(
     queries: DataFrame,
     candidates: DataFrame,
@@ -626,17 +645,17 @@ def knn_pca_refine(
     exactly like the LSH/IVF/refine ones. Recall floors stay in pytest.
     Cost: one covariance pass (unless ``model`` is supplied), two
     projection maps, the m-dim IVF probe, and an O(n·k·refine_factor·d)
-    re-rank — nothing quadratic.
+    re-rank — nothing quadratic. A corpus under ``m`` dimensions gets
+    a full-rank rotation, and an empty one the empty top-k.
     """
-    from semantic_ann_in_data_lake_spark.operators.knn import knn_join
-    from semantic_ann_in_data_lake_spark.operators.pq import _exact_rerank
-
     from semantic_ann_in_data_lake_spark.cache import scoped_persist
 
     if refine_factor < 1:
         raise ValueError(f"refine_factor must be >= 1, got {refine_factor}")
     if model is None:
-        model = pca_fit(candidates, m=m, vec_col=vec_col)
+        model = _refine_model(candidates, vec_col, m)
+        if model is None:
+            return _empty_topk(candidates.sparkSession)
     # persist the projections: the IVF probe references its input more
     # than once (cell assignment + scoring), and recomputing the
     # rotation per reference doubles the map work for nothing
@@ -659,10 +678,11 @@ def knn_pca_refine(
         nprobe=nprobe,
         exclude_self=exclude_self,
         round_dp=round_dp,
-    ).select("query_id", "cand_id")
-    return _exact_rerank(
-        shortlist, queries, candidates, id_col, vec_col, k, round_dp
     )
+    rescored = _rescore_pairs(
+        shortlist, queries, candidates, id_col, vec_col, round_dp
+    )
+    return _ranked_topk(rescored, k, "l2_sq")
 
 
 def knn_nndescent_refine(
@@ -702,19 +722,13 @@ def knn_nndescent_refine(
     from semantic_ann_in_data_lake_spark.operators.nndescent import (
         nndescent_knn_graph,
     )
-    from semantic_ann_in_data_lake_spark.operators.pq import _exact_rerank
 
     if refine_factor < 1:
         raise ValueError(f"refine_factor must be >= 1, got {refine_factor}")
     if model is None:
-        # clamp m to the corpus dimension (one head(): low-d corpora
-        # under the default m=32 just get a full-rank rotation)
-        head = emb.select(vec_col).head()
-        if head is None:
-            raise ValueError("knn_nndescent_refine on an empty frame")
-        model = pca_fit(
-            emb, m=min(m, len(head[0])), vec_col=vec_col
-        )
+        model = _refine_model(emb, vec_col, m)
+        if model is None:
+            return _empty_topk(emb.sparkSession)
     red = scoped_persist(pca_transform(emb, model, id_col, vec_col))
     shortlist = nndescent_knn_graph(
         red,
@@ -726,10 +740,9 @@ def knn_nndescent_refine(
         reverse_cap=reverse_cap,
         round_dp=round_dp,
         min_update_frac=min_update_frac,
-    ).select("query_id", "cand_id")
-    return _exact_rerank(
-        shortlist, emb, emb, id_col, vec_col, k, round_dp
     )
+    rescored = _rescore_pairs(shortlist, emb, emb, id_col, vec_col, round_dp)
+    return _ranked_topk(rescored, k, "l2_sq")
 
 
 def opq_axis_interleave(model: PCAModel, m_pq: int) -> PCAModel:
@@ -789,15 +802,14 @@ def knn_opq_refine(
     the IVF-PQ probe, the n·k·refine_factor exact re-rank.
     """
     from semantic_ann_in_data_lake_spark.cache import scoped_persist
-    from semantic_ann_in_data_lake_spark.operators.pq import (
-        _exact_rerank,
-        knn_ivf_pq,
-    )
+    from semantic_ann_in_data_lake_spark.operators.pq import knn_ivf_pq
 
     if refine_factor < 1:
         raise ValueError(f"refine_factor must be >= 1, got {refine_factor}")
     if model is None:
-        model = pca_fit(candidates, vec_col=vec_col)
+        model = _refine_model(candidates, vec_col)
+        if model is None:
+            return _empty_topk(candidates.sparkSession)
     rot = opq_axis_interleave(model, m_pq)
     # persist the full-rank rotation: the IVF-PQ probe walks its input
     # several times (codebook fit sample, cell assignment, ADC scan)
@@ -811,10 +823,11 @@ def knn_opq_refine(
         rq, rc, id_col, "proj", k=k * refine_factor,
         nlist=nlist, nprobe=nprobe, m=m_pq, ksub=ksub,
         exclude_self=exclude_self, round_dp=round_dp,
-    ).select("query_id", "cand_id")
-    return _exact_rerank(
-        shortlist, queries, candidates, id_col, vec_col, k, round_dp
     )
+    rescored = _rescore_pairs(
+        shortlist, queries, candidates, id_col, vec_col, round_dp
+    )
+    return _ranked_topk(rescored, k, "l2_sq")
 
 
 def pca_whiten_model(model: PCAModel, eps: float = 1e-9) -> PCAModel:

@@ -18,15 +18,17 @@ Algorithm — bounded-hop distributed beam search:
    HNSW's single global entry point — recall starts near the query.
 2. **T hops**: each round takes the current per-query beam (top
    ``beam`` visited by rounded distance, id tie-break), expands it one
-   hop along the SYMMETRIZED edge list, scores the unseen neighbors
-   exactly against the query vector, and folds them into the visited
-   set. Each round is one edge join (shuffle by node) + one vector
-   join + one per-query window — all relational, no pointer chasing;
+   hop along the SYMMETRIZED edge list, re-scores the unseen
+   neighbors exactly against the query vector (``knn._rescore_pairs``,
+   the verify step the refine and NN-descent tiers share), and folds
+   them into the visited set. Each round is one edge join (shuffle by
+   node) + the re-score's two vector joins + one per-query window
+   (``knn._ranked_topk``) — all relational, no pointer chasing;
    per-round candidate volume is ≤ |queries|·beam·2k, independent of
    n. Round state is lineage-truncated (`operators/iterate.py`).
-3. **Result**: top-k of the visited set per query, with EXACT rounded
-   L2² distances and consecutive ranks — the same approximate-
-   neighbors/exact-distances contract as every other tier
+3. **Result**: the ranked top-k of the visited set per query, with
+   EXACT rounded L2² distances and consecutive ranks — the same
+   approximate-neighbors/exact-distances contract as every other tier
    (`operators/checks.knn_invariant_violations`).
 
 Fixed ``hops`` keeps the plan data-independent, which is what lets the
@@ -61,22 +63,13 @@ import math
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window
 
 from semantic_ann_in_data_lake_spark.functions.hashing import portable_hash64
-from semantic_ann_in_data_lake_spark.functions.vectors import l2_sq
 from semantic_ann_in_data_lake_spark.operators.iterate import iter_checkpoint
-
-
-def _topq(df: DataFrame, per: int, col: str = "d") -> DataFrame:
-    w = Window.partitionBy("query_id").orderBy(
-        F.col(col).asc(), F.col("cand_id").asc()
-    )
-    return (
-        df.withColumn("__r", F.row_number().over(w))
-        .where(F.col("__r") <= per)
-        .drop("__r")
-    )
+from semantic_ann_in_data_lake_spark.operators.knn import (
+    _ranked_topk,
+    _rescore_pairs,
+)
 
 
 def graph_search(
@@ -104,16 +97,10 @@ def graph_search(
     """
     if k < 1 or beam < 1 or hops < 0 or entry_k < 1:
         raise ValueError("k, beam, entry_k >= 1 and hops >= 0 required")
-    q = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).cast("array<double>").alias("__qv"),
-    )
-    c = corpus.select(
-        F.col(id_col).alias("cand_id"),
-        F.col(vec_col).cast("array<double>").alias("__cv"),
-    )
+    qids = queries.select(F.col(id_col).alias("query_id"))
+    cids = corpus.select(F.col(id_col).alias("cand_id"))
     if n_entry is None:
-        n_entry = max(1, math.isqrt(c.count() - 1) + 1)
+        n_entry = math.isqrt(max(cids.count() - 1, 0)) + 1
 
     # symmetrized bounded-degree edge list (≤ 2k per node)
     und = (
@@ -129,32 +116,27 @@ def graph_search(
     # entry sample: hash-order head of the corpus ids (deterministic on
     # any cluster layout; the √n "centroid" stand-ins)
     sample = (
-        c.select("cand_id")
-        .withColumn("__h", portable_hash64(F.col("cand_id").cast("string"),
-                                           seed=f"gs{seed}:"))
+        cids.withColumn("__h", portable_hash64(F.col("cand_id").cast("string"),
+                                               seed=f"gs{seed}:"))
         .orderBy(F.col("__h").asc(), F.col("cand_id").asc())
         .limit(n_entry)
         .drop("__h")
     )
 
-    def score(cands: DataFrame) -> DataFrame:
+    def score(pairs: DataFrame) -> DataFrame:
         """(query_id, cand_id) -> + exact rounded distance."""
-        return (
-            cands.join(c, "cand_id")
-            .join(q, "query_id")
-            .select(
-                "query_id",
-                "cand_id",
-                F.round(l2_sq("__qv", "__cv"), round_dp).alias("d"),
-            )
-        )
+        return _rescore_pairs(pairs, queries, corpus, id_col, vec_col, round_dp)
 
-    visited = _topq(
-        score(q.select("query_id").crossJoin(F.broadcast(sample))), entry_k
-    ).transform(iter_checkpoint)
+    visited = (
+        _ranked_topk(
+            score(qids.crossJoin(F.broadcast(sample))), entry_k, "l2_sq"
+        )
+        .drop("rank")
+        .transform(iter_checkpoint)
+    )
 
     for _ in range(hops):
-        frontier = _topq(visited, beam)
+        frontier = _ranked_topk(visited, beam, "l2_sq")
         expanded = (
             frontier.join(und, frontier.cand_id == und.src)
             .select("query_id", F.col("dst").alias("cand_id"))
@@ -165,13 +147,4 @@ def graph_search(
             visited.unionByName(score(expanded)).transform(iter_checkpoint)
         )
 
-    out = _topq(visited, k)
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("d").asc(), F.col("cand_id").asc()
-    )
-    return out.select(
-        "query_id",
-        "cand_id",
-        F.col("d").alias("distance"),
-        F.row_number().over(w).alias("rank"),
-    )
+    return _ranked_topk(visited, k, "l2_sq")

@@ -51,9 +51,19 @@ from semantic_ann_in_data_lake_spark.operators.knn import (
 )
 
 
+#: the stored ``<path>/centroids`` layout
+_CENTROIDS_SCHEMA = "cell int, centroid array<double>"
+
+
 def _centroids_df(spark: SparkSession, centroids) -> DataFrame:
     rows = [(i, [float(x) for x in ctr]) for i, ctr in enumerate(centroids)]
-    return spark.createDataFrame(rows, "cell int, centroid array<double>")
+    return spark.createDataFrame(rows, _CENTROIDS_SCHEMA)
+
+
+def _read_centroids(spark: SparkSession, path: str) -> DataFrame:
+    """The stored centroid table, read with its known schema: no
+    schema-inference job on every search, refresh and check."""
+    return spark.read.schema(_CENTROIDS_SCHEMA).parquet(f"{path}/centroids")
 
 
 def _stored_vectors(emb: DataFrame, id_col: str, vec_col: str) -> DataFrame:
@@ -120,7 +130,7 @@ def refresh_ivf_index(
     """Append new vectors under the STORED centroids — no refit, no
     touch of existing cells (each cell the new rows touch gains one
     file, written by parallel tasks)."""
-    cdf = spark.read.parquet(f"{path}/centroids")
+    cdf = _read_centroids(spark, path)
     _write_cells(
         assign_cells_jvm(_stored_vectors(new_emb, id_col, vec_col), cdf), path, "append"
     )
@@ -150,7 +160,7 @@ def search_ivf_index(
     # at most nlist rows: sort on the driver, not with a range-sampled
     # distributed sort on every search
     cents = sorted(
-        spark.read.parquet(f"{path}/centroids").collect(), key=lambda r: r["cell"]
+        _read_centroids(spark, path).collect(), key=lambda r: r["cell"]
     )
     if [r["cell"] for r in cents] != list(range(len(cents))):
         raise ValueError(f"centroid ids at {path} are not 0..nlist-1")
@@ -175,7 +185,7 @@ def index_assignment_violations(spark: SparkSession, path: str) -> DataFrame:
     centroids — empty iff the index (after any number of refreshes)
     matches a from-scratch assignment. The checks.py posture: a
     distributed property with a ``WHERE FALSE`` oracle."""
-    cdf = spark.read.parquet(f"{path}/centroids")
+    cdf = _read_centroids(spark, path)
     cells = spark.read.parquet(f"{path}/cells")
     want = assign_cells_jvm(
         cells.select("vec_id", "embedding"), cdf

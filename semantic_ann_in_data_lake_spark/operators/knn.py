@@ -27,6 +27,11 @@ picks broadcast, pq, ivf or graph from measured sizes:
   and ``graph`` (beam search over a candidate graph,
   ``operators/graphsearch.py`` — the hnswlib ``knn_query`` role).
 
+Every tier that re-scores (query, candidate) pairs on the raw vectors
+— the five refine tiers, NN-descent's declarative path, graph search —
+verifies through :func:`_rescore_pairs`, and every declarative
+per-query top-k is :func:`_ranked_topk`.
+
 The IVF and PQ tiers share one quantizer core kept in this module:
 :func:`_sq_l2` (Gram-form squared L2), :func:`_id_sorted_sample`,
 :func:`_lloyd` and :func:`_nearest`.
@@ -149,6 +154,15 @@ def _over_budget(
             "(SPARK_GRAFT_KNN_PAIR_BUDGET)"
         )
     return "; ".join(reasons) or None
+
+
+#: strategies that score squared L2 only
+_L2_ONLY = frozenset({
+    "pq", "pq_refine", "ivf_pq", "ivf_pq_refine", "opq_refine",
+    "pca_refine", "nndescent", "nndescent_refine", "graph",
+})
+#: strategies that build a self kNN graph over one corpus
+_SELF_ONLY = frozenset({"nndescent", "nndescent_refine"})
 
 
 def _check_metric(metric: str) -> None:
@@ -276,6 +290,20 @@ def knn_join(
             f"strategy={strategy!r} never uses compress; only 'broadcast', "
             "'ivf' and 'auto' take it"
         )
+    if metric != "l2_sq" and strategy in _L2_ONLY:
+        raise ValueError(f"strategy={strategy!r} supports metric='l2_sq' only")
+    if strategy in _SELF_ONLY and queries is not candidates:
+        raise ValueError(
+            f"strategy={strategy!r} builds a self kNN graph: pass the same "
+            "DataFrame object as queries and candidates"
+        )
+    if strategy in _SELF_ONLY and not exclude_self:
+        raise ValueError(f"strategy={strategy!r} always excludes self pairs")
+    if strategy == "graph" and queries is candidates:
+        raise ValueError(
+            "strategy='graph' answers OUT-OF-CORPUS queries; for a "
+            "self kNN graph use strategy='nndescent'"
+        )
     known_n_cand = known_n_query = None
     if (
         strategy == "auto"
@@ -377,10 +405,7 @@ def knn_join(
     if strategy == "pq":
         # product-quantization / ADC tier (operators/pq.py): m uint8
         # codes per vector in the broadcast instead of dim float64 —
-        # the memory end-game past int8. l2_sq only (ADC estimates
-        # squared L2 directly).
-        if metric != "l2_sq":
-            raise ValueError("strategy='pq' supports metric='l2_sq' only")
+        # the memory end-game past int8 (ADC estimates squared L2).
         from semantic_ann_in_data_lake_spark.operators.pq import knn_pq
 
         return knn_pq(
@@ -391,10 +416,6 @@ def knn_join(
     if strategy == "pq_refine":
         # broadcast-ADC shortlist + exact re-rank (the refine stage of
         # the IVF-PQ variant applied to the broadcast tier)
-        if metric != "l2_sq":
-            raise ValueError(
-                "strategy='pq_refine' supports metric='l2_sq' only"
-            )
         from semantic_ann_in_data_lake_spark.operators.pq import (
             knn_pq_refine,
         )
@@ -409,11 +430,7 @@ def knn_join(
         # shuffle carrying m uint8 codes; "_refine" re-scores an ADC
         # shortlist of k·refine_factor exactly on the raw vectors
         # (FAISS IndexRefineFlat shape) — exact distances, better
-        # recall, still sub-quadratic. l2_sq only.
-        if metric != "l2_sq":
-            raise ValueError(
-                f"strategy={strategy!r} supports metric='l2_sq' only"
-            )
+        # recall, still sub-quadratic.
         from semantic_ann_in_data_lake_spark.operators.pq import (
             knn_ivf_pq,
             knn_ivf_pq_refine,
@@ -433,11 +450,7 @@ def knn_join(
     if strategy == "opq_refine":
         # OPQ shape (operators/embedproj.py): energy-interleaved
         # full-rank rotation, IVF-PQ shortlist on rotated vectors,
-        # exact re-rank on raw. Exact distances, l2_sq only.
-        if metric != "l2_sq":
-            raise ValueError(
-                "strategy='opq_refine' supports metric='l2_sq' only"
-            )
+        # exact re-rank on raw. Exact distances.
         from semantic_ann_in_data_lake_spark.operators.embedproj import (
             knn_opq_refine,
         )
@@ -451,11 +464,7 @@ def knn_join(
         # rotate→compress→refine (operators/embedproj.py): IVF
         # shortlist in the top-m principal subspace (m-dim fold cost),
         # exact re-rank on raw vectors — FAISS PCAMatrix +
-        # IndexRefineFlat shape. Exact distances, l2_sq only.
-        if metric != "l2_sq":
-            raise ValueError(
-                "strategy='pca_refine' supports metric='l2_sq' only"
-            )
+        # IndexRefineFlat shape. Exact distances.
         from semantic_ann_in_data_lake_spark.operators.embedproj import (
             knn_pca_refine,
         )
@@ -467,21 +476,8 @@ def knn_join(
         )
     if strategy == "nndescent_refine":
         # graph-ANN in the top-m principal subspace, exact re-rank on
-        # raw (operators/embedproj.py) — self-join, l2_sq only, same
-        # guards as plain nndescent plus the refine knob
-        if queries is not candidates:
-            raise ValueError(
-                "strategy='nndescent_refine' builds a self kNN graph: "
-                "pass the same DataFrame object as queries and candidates"
-            )
-        if metric != "l2_sq":
-            raise ValueError(
-                "strategy='nndescent_refine' supports metric='l2_sq' only"
-            )
-        if not exclude_self:
-            raise ValueError(
-                "strategy='nndescent_refine' always excludes self pairs"
-            )
+        # raw (operators/embedproj.py) — self-join, plain nndescent's
+        # guards plus the refine knob
         from semantic_ann_in_data_lake_spark.operators.embedproj import (
             knn_nndescent_refine,
         )
@@ -495,20 +491,7 @@ def knn_join(
     if strategy == "nndescent":
         # graph-ANN tier (operators/nndescent.py): index-free iterated
         # co-neighbor refinement — a SELF-join construction (the graph
-        # is over one corpus), exact distances, l2_sq only.
-        if queries is not candidates:
-            raise ValueError(
-                "strategy='nndescent' builds a self kNN graph: pass the "
-                "same DataFrame object as queries and candidates"
-            )
-        if metric != "l2_sq":
-            raise ValueError(
-                "strategy='nndescent' supports metric='l2_sq' only"
-            )
-        if not exclude_self:
-            raise ValueError(
-                "strategy='nndescent' always excludes self pairs"
-            )
+        # is over one corpus), exact distances.
         from semantic_ann_in_data_lake_spark.operators.nndescent import (
             nndescent_knn_graph,
         )
@@ -526,13 +509,6 @@ def knn_join(
         # prebuilt/persisted edge list via ``graph=`` to amortize the
         # build across query batches. Self-join calls should use
         # strategy='nndescent': the graph IS the self answer.
-        if queries is candidates:
-            raise ValueError(
-                "strategy='graph' answers OUT-OF-CORPUS queries; for a "
-                "self kNN graph use strategy='nndescent'"
-            )
-        if metric != "l2_sq":
-            raise ValueError("strategy='graph' supports metric='l2_sq' only")
         from semantic_ann_in_data_lake_spark.operators.graphsearch import (
             graph_search,
         )
@@ -555,6 +531,10 @@ def knn_join(
 
 
 def _ranked_topk(scored: DataFrame, k: int, metric: str) -> DataFrame:
+    """The one per-query top-k: ``scored`` ``(query_id, cand_id,
+    distance)`` rows ranked by (distance asc, cand_id asc) for ``l2_sq``
+    and (distance desc, cand_id asc) for ``cosine``; returns the first
+    ``k`` as ``(query_id, cand_id, distance, rank)``."""
     order = (
         [F.col("distance").asc(), F.col("cand_id").asc()]
         if metric == "l2_sq"
@@ -565,6 +545,33 @@ def _ranked_topk(scored: DataFrame, k: int, metric: str) -> DataFrame:
         scored.withColumn("rank", F.row_number().over(w))
         .where(F.col("rank") <= k)
         .select("query_id", "cand_id", "distance", "rank")
+    )
+
+
+def _rescore_pairs(
+    pairs: DataFrame,
+    queries: DataFrame,
+    candidates: DataFrame,
+    id_col: str,
+    vec_col: str,
+    round_dp: int,
+) -> DataFrame:
+    """The one exact re-score of ``(query_id, cand_id)`` pairs: fetch
+    both raw vectors by two inner joins (a pair whose id is absent on
+    either side drops out) and return ``(query_id, cand_id,
+    distance)`` with ``distance = round(l2_sq, round_dp)`` — the
+    verify step of every shortlist-then-refine tier, NN-descent's
+    candidate scoring and graph search's hops. The declarative twin of
+    ``pairscore.exact_l2_pair_scorer``."""
+    return (
+        pairs.select("query_id", "cand_id")
+        .join(_prep(queries, id_col, vec_col, "query"), "query_id")
+        .join(_prep(candidates, id_col, vec_col, "cand"), "cand_id")
+        .select(
+            "query_id",
+            "cand_id",
+            F.round(l2_sq("query_vec", "cand_vec"), round_dp).alias("distance"),
+        )
     )
 
 

@@ -62,12 +62,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from pyspark.sql.window import Window
-
 from semantic_ann_in_data_lake_spark.cache import scoped_persist
-from semantic_ann_in_data_lake_spark.functions.vectors import l2_sq
 from semantic_ann_in_data_lake_spark.operators.iterate import (
     iter_checkpoint,
+)
+from semantic_ann_in_data_lake_spark.operators.knn import (
+    _ranked_topk,
+    _rescore_pairs,
 )
 
 
@@ -156,37 +157,17 @@ def nndescent_knn_graph(
     scorer = exact_l2_pair_scorer(v, v, "__id", "__v")
 
     def scored_topk(pairs: DataFrame) -> DataFrame:
-        """(query_id, cand_id) -> top-k (query_id, cand_id, d)."""
+        """(query_id, cand_id) -> ranked top-k (query_id, cand_id,
+        distance, rank)."""
         if scorer is not None:
             s = scorer(pairs, "query_id", "cand_id").select(
                 "query_id",
                 "cand_id",
-                F.round(F.col("d"), round_dp).alias("d"),
+                F.round(F.col("d"), round_dp).alias("distance"),
             )
         else:
-            s = (
-                pairs.join(
-                    v.select(F.col("__id").alias("query_id"), F.col("__v").alias("__qv")),
-                    "query_id",
-                )
-                .join(
-                    v.select(F.col("__id").alias("cand_id"), F.col("__v").alias("__cv")),
-                    "cand_id",
-                )
-                .select(
-                    "query_id",
-                    "cand_id",
-                    F.round(l2_sq("__qv", "__cv"), round_dp).alias("d"),
-                )
-            )
-        w = Window.partitionBy("query_id").orderBy(
-            F.col("d").asc(), F.col("cand_id").asc()
-        )
-        return (
-            s.withColumn("__rnk", F.row_number().over(w))
-            .where(F.col("__rnk") <= k)
-            .select("query_id", "cand_id", "d")
-        )
+            s = _rescore_pairs(pairs, v, v, "__id", "__v", round_dp)
+        return _ranked_topk(s, k, "l2_sq")
 
     # --- init: J=2 overlaid hash-bucket cliques at mean size k+1 ----------
     init_parts = []
@@ -241,23 +222,15 @@ def nndescent_knn_graph(
     # --- descent rounds ----------------------------------------------------
     for _ in range(iters):
         prev = g
-        rev = (
+        rev = _ranked_topk(
             g.select(
                 F.col("cand_id").alias("query_id"),
                 F.col("query_id").alias("cand_id"),
-                "d",
-            )
-            .withColumn(
-                "__rnk",
-                F.row_number().over(
-                    Window.partitionBy("query_id").orderBy(
-                        F.col("d").asc(), F.col("cand_id").asc()
-                    )
-                ),
-            )
-            .where(F.col("__rnk") <= rk)
-            .select("query_id", "cand_id")
-        )
+                "distance",
+            ),
+            rk,
+            "l2_sq",
+        ).select("query_id", "cand_id")
         und = (
             g.select("query_id", "cand_id")
             .unionByName(rev)
@@ -291,15 +264,8 @@ def nndescent_knn_graph(
             if changed < min_update_frac * n * k:
                 break
 
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("d").asc(), F.col("cand_id").asc()
-    )
-    return g.select(
-        "query_id",
-        "cand_id",
-        F.col("d").alias("distance"),
-        F.row_number().over(w).alias("rank"),
-    )
+    # the last round's top-k already carries the (distance, cand_id) rank
+    return g
 
 
 def nndescent_recall_vs_exact(

@@ -8,6 +8,13 @@ per pair (``aggregate(zip_with(...))`` is not codegen'd). These kernels
 broadcast the (id → vector) matrices and compute the UNROUNDED L2² in
 numpy.
 
+The twins: :func:`exact_l2_pair_scorer` is NN-descent's gated kernel,
+and ``knn._rescore_pairs`` — the one declarative re-score, which also
+verifies the refine tiers' shortlists and graph search's hops — is its
+declarative twin; :func:`exact_l2_topk_superset` stands in for the
+exact tier's crossJoin. Both twins round in the JVM and rank through
+``knn._ranked_topk``.
+
 Bit-identity argument (what lets the hash-gated callers keep their
 oracle hashes): the kernels are vectorized over ROWS but SEQUENTIAL
 over LANES —

@@ -48,6 +48,7 @@ from semantic_ann_in_data_lake_spark.operators.knn import (
     _over_budget,
     _prep,
     _ranked_topk,
+    _rescore_pairs,
     _row_count,
     _sq_l2,
     _vec_dim,
@@ -486,40 +487,6 @@ def knn_ivf_pq(
     return _ranked_topk(scored, k, "l2_sq")
 
 
-def _exact_rerank(
-    shortlist: DataFrame,
-    queries: DataFrame,
-    candidates: DataFrame,
-    id_col: str,
-    vec_col: str,
-    k: int,
-    round_dp: int,
-) -> DataFrame:
-    """Shared refine stage: re-score a (query_id, cand_id) shortlist
-    exactly on the raw vectors (two n·k′-row equi-joins + the
-    declarative L2² fold) and return the standard ranked top-k."""
-    from semantic_ann_in_data_lake_spark.functions.vectors import l2_sq
-
-    qv = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).cast("array<double>").alias("__qv"),
-    )
-    cv = candidates.select(
-        F.col(id_col).alias("cand_id"),
-        F.col(vec_col).cast("array<double>").alias("__cv"),
-    )
-    rescored = (
-        shortlist.join(qv, "query_id")
-        .join(cv, "cand_id")
-        .select(
-            "query_id",
-            "cand_id",
-            F.round(l2_sq("__qv", "__cv"), round_dp).alias("distance"),
-        )
-    )
-    return _ranked_topk(rescored, k, "l2_sq")
-
-
 def knn_pq_refine(
     queries: DataFrame,
     candidates: DataFrame,
@@ -547,10 +514,11 @@ def knn_pq_refine(
         queries, candidates, id_col, vec_col, k=k * refine_factor,
         m=m, ksub=ksub, exclude_self=exclude_self, round_dp=round_dp,
         seed=seed,
-    ).select("query_id", "cand_id")
-    return _exact_rerank(
-        shortlist, queries, candidates, id_col, vec_col, k, round_dp
     )
+    rescored = _rescore_pairs(
+        shortlist, queries, candidates, id_col, vec_col, round_dp
+    )
+    return _ranked_topk(rescored, k, "l2_sq")
 
 
 def knn_ivf_pq_refine(
@@ -586,11 +554,12 @@ def knn_ivf_pq_refine(
       shortlist captures survives the exact re-rank by definition.
 
     Scale design: the shortlist is n_query·k·refine_factor rows of
-    (query_id, cand_id) — two equi-joins fetch the raw vectors (the
-    candidate-side join is the only one touching the full corpus, and
-    it ships exactly the shortlisted vectors), the exact distance is
-    the declarative fold, and the re-rank is the shared WindowGroupLimit
-    top-k. Nothing here is quadratic; the refine stage costs
+    (query_id, cand_id), re-scored by the shared ``knn._rescore_pairs``
+    (two equi-joins fetch the raw vectors — the candidate-side join is
+    the only one touching the full corpus, and it ships exactly the
+    shortlisted vectors — then the declarative fold) and re-ranked by
+    the shared ``knn._ranked_topk`` WindowGroupLimit top-k. Nothing
+    here is quadratic; the refine stage costs
     O(n_query·k·refine_factor·dim) on top of the IVF-PQ probe.
     """
     if refine_factor < 1:
@@ -599,10 +568,11 @@ def knn_ivf_pq_refine(
         queries, candidates, id_col, vec_col, k=k * refine_factor,
         nlist=nlist, nprobe=nprobe, m=m, ksub=ksub,
         exclude_self=exclude_self, round_dp=round_dp, seed=seed,
-    ).select("query_id", "cand_id")
-    return _exact_rerank(
-        shortlist, queries, candidates, id_col, vec_col, k, round_dp
     )
+    rescored = _rescore_pairs(
+        shortlist, queries, candidates, id_col, vec_col, round_dp
+    )
+    return _ranked_topk(rescored, k, "l2_sq")
 
 
 def build_pq_index(

@@ -19,7 +19,8 @@ from semantic_ann_in_data_lake_spark.operators.evaluation import (
     symmetric_truth,
 )
 from semantic_ann_in_data_lake_spark.operators.knn import (
-    _nearest_cells_declarative, knn_join, threshold_join,
+    _nearest_cells_declarative, _ranked_topk, _rescore_pairs, knn_join,
+    threshold_join,
 )
 from semantic_ann_in_data_lake_spark.annotate.embedder import (
     hash_embedding_expr, hash_embedding_sql,
@@ -1808,35 +1809,11 @@ def pq_recall_report(spark, sf_dir):
             "query_id", "cand_id"
         )
     )
-    # exact re-rank of the shortlist (the refine tier's mechanism,
-    # n·15 pairs — not quadratic): fetch raw vectors for both ends,
-    # true L2², top-5
-    refined = (
-        short.select("query_id", "cand_id")
-        .join(
-            e.select(
-                F.col("vec_id").alias("query_id"), F.col("v").alias("__qv")
-            ),
-            "query_id",
-        )
-        .join(
-            e.select(
-                F.col("vec_id").alias("cand_id"), F.col("v").alias("__cv")
-            ),
-            "cand_id",
-        )
-        .withColumn("__d", F.round(l2_sq("__qv", "__cv"), 6))
-        .withColumn(
-            "__rr",
-            F.row_number().over(
-                _Win.partitionBy("query_id").orderBy(
-                    F.col("__d").asc(), F.col("cand_id").asc()
-                )
-            ),
-        )
-        .where(F.col("__rr") <= 5)
-        .select("query_id", "cand_id")
-    )
+    # exact re-rank of the shortlist (the refine tier's own re-score
+    # and top-k, n·15 pairs — not quadratic)
+    refined = _ranked_topk(
+        _rescore_pairs(short, e, e, "vec_id", "v", 6), 5, "l2_sq"
+    ).select("query_id", "cand_id")
     hit = exact.join(approx, ["query_id", "cand_id"])
     hit_s = exact.join(
         short.select("query_id", "cand_id"), ["query_id", "cand_id"]

@@ -122,6 +122,44 @@ def test_quantizer_tiers_match_exact_on_tiny_corpora(spark, corpus, tier):
     assert got == want
 
 
+# the re-scoring tiers on tiny corpora, as (strategy, corpus); graph
+# search answers a distinct query frame and keeps self matches
+_RESCORE_CASES = [
+    (tier, corpus)
+    for tier in ("nndescent", "nndescent_refine", "pca_refine", "graph")
+    for corpus in ("empty", "n_1", "n_le_k")
+] + [("opq_refine", "empty")]
+
+
+@pytest.mark.parametrize("tier,corpus", _RESCORE_CASES)
+def test_rescore_tiers_match_exact_on_tiny_corpora(spark, tier, corpus):
+    """Every shortlist reaches all n ≤ k candidates, so each tier that
+    re-scores its shortlist exactly must return the exact tier's rows:
+    none for an empty frame, and all of them for a 2-dim corpus under
+    the refine tiers' 32-dim default projection."""
+    from semantic_ann_in_data_lake_spark.operators.knn import knn_join
+
+    id_type, rows, k, round_dp, _ = CORPORA[corpus]
+    df = spark.createDataFrame(
+        rows, f"vec_id {id_type}, embedding array<double>"
+    )
+    if tier == "graph":
+        cands, opts = df.select("*"), {"exclude_self": False}
+    else:
+        cands, opts = df, {}
+    want = _rows(
+        knn_join(df, cands, k=k, strategy="exact", round_dp=round_dp, **opts)
+    )
+    # one descent round and one hop already reach every candidate
+    got = _rows(
+        knn_join(
+            df, cands, k=k, strategy=tier, round_dp=round_dp, iters=1,
+            hops=1,
+        )
+    )
+    assert got == want
+
+
 def test_gate_declines_string_ids_without_a_spark_job(spark):
     """The id-type check reads the schema only, so a declined call
     runs no Spark job; an admitted call does collect."""

@@ -4490,6 +4490,36 @@ def test_local_session_lists_partition_directories_on_the_driver(
     assert _job_ids(spark, "driver-side-listing", read) == []
 
 
+def test_ivf_index_reads_centroids_without_a_spark_job(spark, tmp_path):
+    """The stored centroid table is read with its known schema, so a
+    search, refresh or check starts no schema-inference job for it (a
+    plain read of the same table starts one); the rows are the ones the
+    schema-inferring read returns."""
+    from semantic_ann_in_data_lake_spark.operators.ivf_index import (
+        _read_centroids, build_ivf_index,
+    )
+
+    emb = spark.createDataFrame(
+        [(i, [float(i % 7), float(i // 7)]) for i in range(40)],
+        "vec_id long, embedding array<double>",
+    )
+    path = str(tmp_path / "ix")
+    build_ivf_index(emb, path, nlist=4)
+    read = {}
+    assert _job_ids(
+        spark, "centroid-read",
+        lambda: read.setdefault("df", _read_centroids(spark, path)),
+    ) == []
+    assert _job_ids(
+        spark, "centroid-infer",
+        lambda: read.setdefault("inferred", spark.read.parquet(path + "/centroids")),
+    ) != []
+    inferred = read["inferred"]
+    assert read["df"].schema == inferred.schema
+    assert sorted(read["df"].collect()) == sorted(inferred.collect())
+    assert read["df"].count() == 4
+
+
 def test_ivf_index_writes_one_file_per_touched_cell(spark, sf_dir, tmp_path):
     """Build writes exactly one parquet file per cell; a refresh adds
     exactly one file to each cell its rows land in and none elsewhere.
