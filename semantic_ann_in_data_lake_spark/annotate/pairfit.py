@@ -58,6 +58,7 @@ from semantic_ann_in_data_lake_spark.annotate.embedder import (
     hash_embedding_expr,
     hash_embedding_sql,
 )
+from semantic_ann_in_data_lake_spark.operators.knn import _spread
 
 #: default ridge term — keeps weights finite when a dimension is
 #: constant across all training pairs (msd = 0)
@@ -189,10 +190,7 @@ def fit_pair_encoder(
     # partitions (fine for its joins, 8x under-parallel for 2·dim
     # hashes/row): spread the hash work across the executors —
     # aggregation below is order-independent (decimal sums + count)
-    target = pairs.sparkSession.sparkContext.defaultParallelism
-    if src.rdd.getNumPartitions() < target:
-        src = src.repartition(target)
-    hashed = src.mapInPandas(hash_rows, schema=schema)
+    hashed = _spread(src).mapInPandas(hash_rows, schema=schema)
 
     def lane(h):
         # identical float chain to hash_embedding_expr's component

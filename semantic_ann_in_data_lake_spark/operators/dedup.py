@@ -550,6 +550,7 @@ def embedding_near_dups(
         # gate declines, the declarative cross join is the reference.
         import numpy as np
 
+        from semantic_ann_in_data_lake_spark.operators.knn import _spread
         from semantic_ann_in_data_lake_spark.operators.pairscore import (
             admit_matrices,
         )
@@ -563,10 +564,7 @@ def embedding_near_dups(
         bc = spark.sparkContext.broadcast((ids, mat, norms))
         margin = 1e-6
 
-        q = emb.select(F.col(id_col).alias("qid"))
-        target = spark.sparkContext.defaultParallelism
-        if q.rdd.getNumPartitions() < target:
-            q = q.repartition(target)
+        q = _spread(emb.select(F.col(id_col).alias("qid")))
 
         def prefilter(batches):
             import pandas as pd

@@ -810,6 +810,9 @@ def knn_opq_refine(
         model = _refine_model(candidates, vec_col)
         if model is None:
             return _empty_topk(candidates.sparkSession)
+    # as _refine_model clamps m: a dimension 16 does not divide gets the
+    # largest subquantizer count that divides both
+    m_pq = math.gcd(m_pq, model.dim)
     rot = opq_axis_interleave(model, m_pq)
     # persist the full-rank rotation: the IVF-PQ probe walks its input
     # several times (codebook fit sample, cell assignment, ADC scan)

@@ -47,30 +47,16 @@ def _canonical(df: DataFrame, a: str, b: str) -> DataFrame:
     ).distinct()
 
 
-def pair_metrics(
-    retrieved: DataFrame,
-    truth: DataFrame,
-    retrieved_cols: tuple[str, str] = ("query_id", "cand_id"),
-    truth_cols: tuple[str, str] = ("t_query", "t_cand"),
-) -> DataFrame:
-    """Canonical-pair precision/recall/F1 (one row), reference-identical
-    ε and rounding (``join_discoverer.py:399-429``).
-
-    Delegates to :func:`pair_metrics_df` — the single lazy plan (one
-    full-outer-flag aggregation) — so there is exactly one metric
-    implementation and no eager three-job twin to misuse.
-    """
-    return pair_metrics_df(retrieved, truth, retrieved_cols, truth_cols)
-
-
 def pair_metrics_df(
     retrieved: DataFrame,
     truth: DataFrame,
     retrieved_cols: tuple[str, str] = ("query_id", "cand_id"),
     truth_cols: tuple[str, str] = ("t_query", "t_cand"),
 ) -> DataFrame:
-    """Same as :func:`pair_metrics` but as one lazy plan (no driver-side
-    counts) — the form used in ``queries()`` so the oracle can check it.
+    """Canonical-pair precision/recall/F1 (one row), reference-identical
+    ε and rounding (``join_discoverer.py:399-429``), as one lazy plan
+    (one full-outer-flag aggregation, no driver-side counts) — the form
+    used in ``queries()`` so the oracle can check it.
     """
     disc = _canonical(retrieved, *retrieved_cols)
     tru = _canonical(truth, *truth_cols)

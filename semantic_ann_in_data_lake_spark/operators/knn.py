@@ -27,6 +27,17 @@ picks broadcast, pq, ivf or graph from measured sizes:
   and ``graph`` (beam search over a candidate graph,
   ``operators/graphsearch.py`` — the hnswlib ``knn_query`` role).
 
+Every numpy kNN kernel — broadcast, LSH buckets, IVF cells (and so the
+standing index), PQ/ADC and IVF-PQ cells, and the exact superset and
+near-dup kernels in ``operators/pairscore.py`` and
+``operators/dedup.py`` — shares one scoring core kept in this module:
+:func:`_prep` (the input projection, which drops NULL ids and NULL
+vectors), :func:`_vectors` (the one float64 batch reader),
+:func:`_by_id` (the candidate id order that breaks ties),
+:func:`_mask_self` (every candidate whose id equals the query id),
+:func:`_topk_rows` (the rounded, tie-broken top-k selection over a
+distance key) and :func:`_spread` (the query-side repartition).
+
 Every tier that re-scores (query, candidate) pairs on the raw vectors
 — the five refine tiers, NN-descent's declarative path, graph search —
 verifies through :func:`_rescore_pairs`, and every declarative
@@ -173,10 +184,14 @@ def _check_metric(metric: str) -> None:
 
 
 def _prep(df: DataFrame, id_col: str, vec_col: str, side: str) -> DataFrame:
+    """The one input projection of every kNN tier: ``({side}_id,
+    {side}_vec array<double>)``, without the rows whose id or vector is
+    NULL — such a row has no distance to rank."""
+    sid, svec = f"{side}_id", f"{side}_vec"
     return df.select(
-        F.col(id_col).alias(f"{side}_id"),
-        F.col(vec_col).cast("array<double>").alias(f"{side}_vec"),
-    )
+        F.col(id_col).alias(sid),
+        F.col(vec_col).cast("array<double>").alias(svec),
+    ).where(F.col(sid).isNotNull() & F.col(svec).isNotNull())
 
 
 def _integral_ids(*frames: DataFrame) -> bool:
@@ -256,7 +271,10 @@ def knn_join(
     Returns ``(query_id, cand_id, distance, rank)`` with ``rank`` in
     1..k ordered by (distance asc, cand_id asc) for ``l2_sq`` and
     (similarity desc, cand_id asc) for ``cosine`` (where ``distance``
-    holds the similarity).
+    holds the similarity). Rows whose id or vector is NULL take no
+    part. A duplicated query id is ranked once per query row by
+    ``strategy="broadcast"`` (and the ``auto`` rung that runs it), and
+    once per id by the tiers that rank in Spark.
 
     ``strategy="nndescent"`` routes self-join graph builds to the
     index-free graph-ANN tier (`operators/nndescent.py`), same return
@@ -649,57 +667,87 @@ def _topk_mask(key, k, round_dp):
         return (key <= kth[:, None] + margin) & np.isfinite(key)
 
 
-def _np_topk_rows(qids, qmat, cids, cmat, k, metric, exclude_self, round_dp,
-                  with_rank=True):
-    """Shared numpy kernel: BLAS distance matrix + per-query stable top-k.
+def _mask_self(key, qids, cids):
+    """Set to +inf, in place, every cell of ``key`` whose candidate id
+    equals its query id: the one self-pair rule of the numpy kernels.
+    Every copy of a duplicated id is masked."""
+    import numpy as np
 
-    ``cids``/``cmat`` MUST be pre-sorted by id so the stable argsort on
-    rounded distances reproduces the declarative (distance, cand_id)
-    tie-break. Distances are rounded BEFORE ranking (cross-engine
-    reproducibility — module docstring).
-    """
+    key[qids[:, None] == cids[None, :]] = np.inf
+
+
+def _topk_rows(qids, key, cids, k, round_dp, exclude_self, with_rank=False):
+    """The one numpy top-k selection: per row of ``key`` (smaller is
+    better, +inf marks excluded cells; masked in place when
+    ``exclude_self``) the ``k`` best cells by (round(key, round_dp),
+    candidate order), as a frame ``(query_id, cand_id, distance[,
+    rank])`` with ``distance`` the rounded key.
+
+    ``cids`` MUST be in id order (:func:`_by_id`): cells then ascend in
+    candidate id within a row, so a stable sort on the rounded key
+    reproduces the declarative (distance, cand_id) tie-break. Only the
+    top-k superset (:func:`_topk_mask`) is rounded and sorted; rounding
+    the full matrix costs more than the matmul."""
+    import numpy as np
+    import pandas as pd
+
+    if exclude_self:
+        _mask_self(key, qids, cids)
+    r, c = np.nonzero(_topk_mask(key, k, round_dp))
+    kv = np.round(key[r, c], round_dp)
+    # np.nonzero is row-major, so lexsort's stability keeps cells of an
+    # equal rounded key in candidate order
+    order = np.lexsort((kv, r))
+    r, c, kv = r[order], c[order], kv[order]
+    rank = np.arange(len(r)) - np.searchsorted(r, r) + 1
+    keep = rank <= k
+    out = pd.DataFrame(
+        {"query_id": qids[r[keep]], "cand_id": cids[c[keep]], "distance": kv[keep]}
+    )
+    if with_rank:
+        out["rank"] = rank[keep]
+    return out
+
+
+def _np_topk_rows(qids, qmat, cids, cmat, k, metric, exclude_self, round_dp,
+                  with_rank=False):
+    """BLAS distances (squared L2 clamped at 0, or cosine similarity)
+    from every query to every candidate, then :func:`_topk_rows`. The
+    key is the negated similarity for cosine, and np.round is symmetric,
+    so negating the rounded key gives the rounded similarity."""
     import numpy as np
 
     if metric == "l2_sq":
-        d = np.maximum(_sq_l2(qmat, cmat), 0.0)
-        asc = True
-    else:
-        qn = np.sqrt((qmat * qmat).sum(axis=1))
-        cn = np.sqrt((cmat * cmat).sum(axis=1))
-        d = (qmat @ cmat.T) / (qn[:, None] * cn[None, :] + 1e-12)
-        asc = False
-    # Vectorized selection (a per-query python loop with a full argsort
-    # was the measured hot spot, and rounding the FULL matrix costs more
-    # than the matmul): work on key = ±d so "best" is always smallest,
-    # knock out self-matches with +inf via one searchsorted, keep the
-    # top-k superset (_topk_mask), then round and exact-tie-break ONLY
-    # the ≤ k+ties survivors.
-    key = d if asc else -d
-    if exclude_self:
-        pos = np.searchsorted(cids, qids)
-        ok = pos < len(cids)
-        ri = np.nonzero(ok)[0]
-        hit = ri[cids[pos[ok]] == qids[ri]]
-        key[hit, pos[hit]] = np.inf
-    mask = _topk_mask(key, k, round_dp)
-    counts = mask.sum(axis=1)
-    _, cols_idx = np.nonzero(mask)
-    rows = []
-    sign = 1.0 if asc else -1.0
-    for i, cols in enumerate(np.split(cols_idx, np.cumsum(counts)[:-1])):
-        if len(cols) == 0:
-            continue
-        # np.round is half-even and symmetric, so round(key)=±round(d)
-        ki = np.round(key[i, cols], round_dp)
-        # cols ascend in cand_id (cids pre-sorted), so a stable sort on
-        # the rounded key alone reproduces the (distance, cand_id)
-        # tie-break of the declarative round-then-rank plan
-        order = np.argsort(ki, kind="stable")[:k]
-        qi = int(qids[i])
-        for r, (j, kv) in enumerate(zip(cols[order], ki[order]), start=1):
-            row = (qi, int(cids[j]), float(sign * kv))
-            rows.append(row + (r,) if with_rank else row)
-    return rows
+        return _topk_rows(
+            qids, np.maximum(_sq_l2(qmat, cmat), 0.0), cids, k, round_dp,
+            exclude_self, with_rank,
+        )
+    qn = np.sqrt((qmat * qmat).sum(axis=1))
+    cn = np.sqrt((cmat * cmat).sum(axis=1))
+    sim = (qmat @ cmat.T) / (qn[:, None] * cn[None, :] + 1e-12)
+    out = _topk_rows(
+        qids, -sim, cids, k, round_dp, exclude_self, with_rank
+    )
+    out["distance"] = -out["distance"]
+    return out
+
+
+def _by_id(ids, *arrays):
+    """``ids`` and the arrays aligned with them, sorted by id, stably:
+    the candidate order every numpy top-k breaks its ties by."""
+    import numpy as np
+
+    order = np.argsort(ids, kind="stable")
+    return (ids[order],) + tuple(a[order] for a in arrays)
+
+
+def _spread(df: DataFrame) -> DataFrame:
+    """``df`` repartitioned to the default parallelism when it has fewer
+    partitions: a single-file source arrives as ONE partition, which
+    would run a whole numpy kernel on one task (narrow rows, one extra
+    shuffle — negligible next to the scoring)."""
+    target = df.sparkSession.sparkContext.defaultParallelism
+    return df.repartition(target) if df.rdd.getNumPartitions() < target else df
 
 
 def _knn_broadcast(
@@ -750,37 +798,27 @@ def _knn_broadcast(
             compress=compress,
         )
     if compress == "int8":
-        qrows = quantize_embeddings(candidates, id_col, vec_col).toPandas()
-        cand_ids = qrows["vec_id"].to_numpy(dtype=np.int64)
-        qmat_i8 = np.asarray(list(qrows["qvec"]), dtype=np.int8)
-        scales = qrows["scale"].to_numpy(dtype=np.float64)
-        order = np.argsort(cand_ids)
-        cand_ids = cand_ids[order]
+        qrows = quantize_embeddings(c, "cand_id", "cand_vec").toPandas()
         # The payload crosses the wire as int8 (+1 double/row, 8×
         # narrower); workers rebuild float64 once per PROCESS via
         # _DEQUANT_CACHE (keyed by broadcast path), not once per task —
         # measured on sf0.1 embeddings: repeat int8 broadcast query
         # 6.1 s cold → 1.5 s with reused workers + cached rebuild.
-        payload = (qmat_i8[order], scales[order])
+        cand_ids, qmat_i8, scales = _by_id(
+            qrows["vec_id"].to_numpy(dtype=np.int64),
+            np.asarray(list(qrows["qvec"]), dtype=np.int8),
+            qrows["scale"].to_numpy(dtype=np.float64),
+        )
+        payload = (qmat_i8, scales)
     elif compress is None:
         cand_rows = c.toPandas()
-        cand_ids = np.asarray(cand_rows["cand_id"].to_numpy(), dtype=np.int64)
-        cand_mat = np.asarray(list(cand_rows["cand_vec"]), dtype=np.float64)
-        # Pre-sort candidates by id so numpy's stable argsort tie-break
-        # matches the declarative (distance, cand_id) ordering.
-        order = np.argsort(cand_ids)
-        cand_ids, cand_mat = cand_ids[order], cand_mat[order]
-        payload = cand_mat
+        cand_ids, payload = _by_id(
+            cand_rows["cand_id"].to_numpy(dtype=np.int64), _vectors(cand_rows)
+        )
     else:
         raise ValueError(f"unknown compress {compress!r}")
     bc = spark.sparkContext.broadcast((cand_ids, payload, compress))
-
-    # a single-file parquet source arrives as ONE partition → the whole
-    # top-k would run on one task; spread queries across the executors
-    # (narrow rows, one extra shuffle — negligible next to the scoring)
-    target = spark.sparkContext.defaultParallelism
-    if q.rdd.getNumPartitions() < target:
-        q = q.repartition(target)
+    q = _spread(q)
     out_schema = "query_id long, cand_id long, distance double, rank int"
 
     def topk(batches: Iterator) -> Iterator:
@@ -798,29 +836,24 @@ def _knn_broadcast(
             # a reused worker could serve a stale matrix belonging to a
             # DIFFERENT broadcast index — if there is no stable _path,
             # skip the cache and dequantize per task instead.
-            qi8, sc = data
             key = getattr(bc, "_path", None)
-            if key is None:
-                mat = qi8.astype(np.float64) * sc[:, None]
-            else:
-                cached = _DEQUANT_CACHE.get(key)
-                if cached is None:
-                    cached = qi8.astype(np.float64) * sc[:, None]
+            mat = _DEQUANT_CACHE.get(key)
+            if mat is None:
+                # row views of the int8 matrix: the reader copies once
+                qi8, sc = data
+                mat = _vectors(pd.DataFrame({"scale": sc, "qvec": list(qi8)}))
+                if key is not None:
                     _DEQUANT_CACHE.clear()
-                    _DEQUANT_CACHE[key] = cached
-                mat = cached
+                    _DEQUANT_CACHE[key] = mat
         else:
             mat = data
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            qmat = np.asarray(list(pdf["query_vec"]), dtype=np.float64)
-            qids = pdf["query_id"].to_numpy(dtype=np.int64)
-            rows = _np_topk_rows(
-                qids, qmat, ids, mat, k, metric, exclude_self, round_dp
-            )
-            yield pd.DataFrame(
-                rows, columns=["query_id", "cand_id", "distance", "rank"]
+            yield _np_topk_rows(
+                pdf["query_id"].to_numpy(dtype=np.int64),
+                _vectors(pdf, "query_vec"), ids, mat, k, metric,
+                exclude_self, round_dp, with_rank=True,
             )
 
     return q.mapInPandas(topk, schema=out_schema)
@@ -863,6 +896,7 @@ def _knn_lsh(
     spark = queries.sparkSession
     c = _prep(candidates, id_col, vec_col, "cand")
     q = _prep(queries, id_col, vec_col, "query")
+    _require_integral_ids(q, c)
     first = c.select("cand_vec").head(1)
     if not first:
         return _empty_topk(spark)
@@ -877,7 +911,10 @@ def _knn_lsh(
             for pdf in batches:
                 if len(pdf) == 0:
                     continue
-                vecs = np.asarray(list(pdf.iloc[:, 1]), dtype=np.float64)
+                # the corpus is never collected here, so each batch is
+                # checked against the dimension the projections were
+                # drawn for (the first candidate's)
+                vecs = _vectors(pdf, dim=P.shape[1])
                 if normalize:  # cosine-via-unit-L2: see knn_join
                     norms = np.linalg.norm(vecs, axis=1, keepdims=True)
                     norms[norms == 0.0] = 1.0
@@ -925,20 +962,16 @@ def _knn_lsh(
     )
 
     def score_bucket(qpdf: pd.DataFrame, cpdf: pd.DataFrame) -> pd.DataFrame:
-        cols = ["query_id", "cand_id", "distance"]
         if len(qpdf) == 0 or len(cpdf) == 0:
-            return pd.DataFrame(columns=cols)
-        cids = cpdf["cand_id"].to_numpy(dtype=np.int64)
-        cmat = np.asarray(list(cpdf["cand_vec"]), dtype=np.float64)
-        order = np.argsort(cids)
-        cids, cmat = cids[order], cmat[order]
-        qids = qpdf["query_id"].to_numpy(dtype=np.int64)
-        qmat = np.asarray(list(qpdf["query_vec"]), dtype=np.float64)
-        rows = _np_topk_rows(
-            qids, qmat, cids, cmat, k, "l2_sq", exclude_self, round_dp,
-            with_rank=False,
+            return pd.DataFrame(columns=["query_id", "cand_id", "distance"])
+        cids, cmat = _by_id(
+            cpdf["cand_id"].to_numpy(dtype=np.int64), _vectors(cpdf, "cand_vec")
         )
-        return pd.DataFrame(rows, columns=cols)
+        return _np_topk_rows(
+            qpdf["query_id"].to_numpy(dtype=np.int64),
+            _vectors(qpdf, "query_vec"), cids, cmat, k, "l2_sq",
+            exclude_self, round_dp,
+        )
 
     scored = (
         q_b.groupBy("table", "bucket")
@@ -983,8 +1016,7 @@ def _id_sorted_sample(c: DataFrame, limit: int):
     sample = c.select("cand_id", "cand_vec").limit(limit).toPandas()
     if sample.empty:
         raise _EmptySample("no candidate rows to fit a quantizer on")
-    sample = sample.sort_values("cand_id", kind="mergesort")
-    return np.asarray(list(sample["cand_vec"]), dtype=np.float64)
+    return _vectors(sample.sort_values("cand_id", kind="mergesort"))
 
 
 def _lloyd(mat, init, iters: int):
@@ -1013,16 +1045,32 @@ def _nearest(x, cents, n: int):
     return np.argsort(_sq_l2(x, cents), axis=1, kind="stable")[:, :n]
 
 
-def _vectors(pdf):
-    """A batch's vectors as a float64 matrix: its second column, or
-    ``qvec``·``scale`` for the int8 index (:func:`quantize_embeddings`)."""
+def _vectors(pdf, col: str | None = None, dim: int | None = None):
+    """The one reader of a batch's vectors as a float64 matrix: column
+    ``col``, else the second column, or ``qvec``·``scale`` for the int8
+    index (:func:`quantize_embeddings`). Vectors of unequal length, or
+    of another length than ``dim`` when it is given (a batch may hold
+    one length, and another batch a different one), raise
+    ``ValueError``: only the declarative exact tier scores them."""
     import numpy as np
 
-    if "qvec" in pdf.columns:
-        mat = np.asarray(list(pdf["qvec"]), dtype=np.float64)
+    int8 = col is None and "qvec" in pdf.columns
+    if int8:
+        col = "qvec"
+    vals = pdf.iloc[:, 1] if col is None else pdf[col]
+    try:
+        mat = np.asarray(list(vals), dtype=np.float64)
+        ragged = dim is not None and mat.shape[1] != dim
+    except ValueError:  # numpy's "inhomogeneous shape"
+        ragged = True
+    if ragged:
+        raise ValueError(
+            "vectors of unequal length: the numpy kNN tiers score one "
+            "dimension; knn_join(strategy='exact') scores ragged vectors"
+        )
+    if int8:
         mat *= pdf["scale"].to_numpy(dtype=np.float64)[:, None]
-        return mat
-    return np.asarray(list(pdf.iloc[:, 1]), dtype=np.float64)
+    return mat
 
 
 def _assign_cells(df: DataFrame, cents, n_cells: int) -> DataFrame:
@@ -1128,7 +1176,7 @@ def _knn_ivf(
         # (8× narrower than float64); cells dequantize qvec·scale at
         # scoring time. Distances become quantization-approximate —
         # same contract as the broadcast int8 tier.
-        c = quantize_embeddings(candidates, id_col, vec_col).select(
+        c = quantize_embeddings(c, "cand_id", "cand_vec").select(
             F.col("vec_id").alias("cand_id"), "scale", "qvec"
         )
     c_cells = _assign_cells(c, centroids, 1).select(
@@ -1168,25 +1216,20 @@ def _ivf_scored(
     import pandas as pd
 
     def score_cell(qpdf: pd.DataFrame, cpdf: pd.DataFrame) -> pd.DataFrame:
-        cols = ["query_id", "cand_id", "distance"]
         if len(qpdf) == 0 or len(cpdf) == 0:
-            return pd.DataFrame(columns=cols)
-        cids = cpdf["cand_id"].to_numpy(dtype=np.int64)
-        cmat = _vectors(cpdf)
-        order = np.argsort(cids)
-        cids, cmat = cids[order], cmat[order]
+            return pd.DataFrame(columns=["query_id", "cand_id", "distance"])
+        cids, cmat = _by_id(
+            cpdf["cand_id"].to_numpy(dtype=np.int64), _vectors(cpdf)
+        )
         # a standing index re-ingests: an id stored twice in one cell is
-        # scored once, so it neither fills two local top-k slots nor
-        # escapes the self-pair exclusion
+        # scored once, so it does not fill two local top-k slots
         first = np.r_[True, cids[1:] != cids[:-1]]
         cids, cmat = cids[first], cmat[first]
-        qids = qpdf["query_id"].to_numpy(dtype=np.int64)
-        qmat = np.asarray(list(qpdf["query_vec"]), dtype=np.float64)
-        rows = _np_topk_rows(
-            qids, qmat, cids, cmat, k, metric, exclude_self, round_dp,
-            with_rank=False,
+        return _np_topk_rows(
+            qpdf["query_id"].to_numpy(dtype=np.int64),
+            _vectors(qpdf, "query_vec"), cids, cmat, k, metric,
+            exclude_self, round_dp,
         )
-        return pd.DataFrame(rows, columns=cols)
 
     return (
         q_cells.groupBy("cell")

@@ -30,6 +30,11 @@ the fold emits. Rounding stays a JVM expression on the returned
 column. No reordered/blocked summation anywhere — this is NOT a BLAS
 matmul, precisely so no re-score step is needed.
 
+The kernels read, mask and spread through the numpy scoring core in
+``operators/knn.py``: ``knn._vectors`` builds every float64 matrix,
+``knn._mask_self`` drops self pairs, ``knn._topk_mask`` picks the
+superset and ``knn._spread`` spreads the query side over the cores.
+
 Join-semantics parity: :func:`admit_matrices` is the one admission
 gate for every broadcast vector-matrix kernel. It admits only frames
 with unique non-null integral ids, no NULL/NaN vectors and one uniform
@@ -43,13 +48,16 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import ByteType, IntegerType, LongType, ShortType
 
 from semantic_ann_in_data_lake_spark.operators.knn import (
+    _integral_ids,
+    _mask_self,
     _over_budget,
     _row_count,
+    _spread,
     _topk_mask,
     _vec_dim,
+    _vectors,
 )
 
 
@@ -70,7 +78,7 @@ def _collect(vframe: DataFrame, id_col: str, vec_col: str):
     ):
         return None
     ids = rows["__id"].to_numpy(dtype=np.int64)
-    mat = np.asarray(list(rows["__v"]), dtype=np.float64)
+    mat = _vectors(rows)
     if (
         len(ids) != len(np.unique(ids))
         or mat.shape[1] == 0
@@ -94,10 +102,7 @@ def admit_matrices(
     of the result are the same objects."""
     same = qframe is cframe
     sides = [qframe] if same else [qframe, cframe]
-    integral = (ByteType, ShortType, IntegerType, LongType)
-    if not all(
-        isinstance(side.schema[id_col].dataType, integral) for side in sides
-    ):
+    if not _integral_ids(*(side.select(id_col) for side in sides)):
         return None
     dim = _vec_dim(qframe, vec_col)
     if dim == 0:
@@ -144,10 +149,7 @@ def exact_l2_topk_superset(
     spark = qframe.sparkSession
     bc = spark.sparkContext.broadcast(m)
 
-    qid = qframe.select(F.col(id_col).alias(qcol))
-    target = spark.sparkContext.defaultParallelism
-    if qid.rdd.getNumPartitions() < target:
-        qid = qid.repartition(target)
+    qid = _spread(qframe.select(F.col(id_col).alias(qcol)))
 
     def kern(batches):
         import pandas as pd
@@ -175,12 +177,11 @@ def exact_l2_topk_superset(
                 for i in range(d):
                     diff = a[:, i][:, None] - cmat[:, i][None, :]
                     acc += diff * diff
-                key = acc
                 if exclude_self:
-                    key = np.where(
-                        cids[None, :] == ids_blk[:, None], np.inf, acc
-                    )
-                r, cj = np.nonzero(_topk_mask(key, k, round_dp))
+                    # a masked cell is never selected, so acc keeps the
+                    # distances of every cell emitted below
+                    _mask_self(acc, ids_blk, cids)
+                r, cj = np.nonzero(_topk_mask(acc, k, round_dp))
                 yield pd.DataFrame(
                     {
                         qcol: ids_blk[r],

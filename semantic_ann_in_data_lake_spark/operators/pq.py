@@ -40,6 +40,7 @@ from pyspark.sql import functions as F
 from semantic_ann_in_data_lake_spark.operators.knn import (
     DEFAULT_ROUND_DP,
     _assign_cells,
+    _by_id,
     _empty_topk,
     _EmptySample,
     _id_sorted_sample,
@@ -48,10 +49,14 @@ from semantic_ann_in_data_lake_spark.operators.knn import (
     _over_budget,
     _prep,
     _ranked_topk,
+    _require_integral_ids,
     _rescore_pairs,
     _row_count,
+    _spread,
     _sq_l2,
+    _topk_rows,
     _vec_dim,
+    _vectors,
     derive_nlist,
 )
 
@@ -147,11 +152,10 @@ def _pq_reconstruct(codes, books):
 def _adc_topk_rows(
     qids, qmat, cids, code_cols, books, k, exclude_self, round_dp
 ):
-    """ADC top-k: ``(query_id, cand_id, distance)`` rows, the k best per
-    query by distance rounded to ``round_dp``. ``cids`` MUST be sorted
-    (the stable argsort then breaks ties by id); ``code_cols[j]`` is
-    subspace j's code column offset by ``j·ksub`` into the flat lookup
-    table.
+    """ADC top-k: a ``(query_id, cand_id, distance)`` frame, the k best
+    per query by distance rounded to ``round_dp`` (``knn._topk_rows``).
+    ``cids`` MUST be in id order; ``code_cols[j]`` is subspace j's code
+    column offset by ``j·ksub`` into the flat lookup table.
 
     The lookup tables for the whole batch are built at once (per
     subspace one BLAS pass, (nq, m·ksub)); distances are then gathered
@@ -161,6 +165,7 @@ def _adc_topk_rows(
     larger, which OOMs the python worker at broadcast-tier candidate
     counts before the broadcast budget ever binds."""
     import numpy as np
+    import pandas as pd
 
     mm, kk, dsub = books.shape
     lut = np.empty((len(qmat), mm * kk), dtype=np.float64)
@@ -168,21 +173,16 @@ def _adc_topk_rows(
         lut[:, j * kk:(j + 1) * kk] = _sq_l2(
             qmat[:, j * dsub:(j + 1) * dsub], books[j]
         )
-    rows = []
+    out = []
     for lo in range(0, len(qmat), 256):
-        hi = min(lo + 256, len(qmat))
-        blk = lut[lo:hi]
+        blk = lut[lo:lo + 256]
         dist = blk[:, code_cols[0]]
         for col in code_cols[1:]:
             dist += blk[:, col]
-        if exclude_self:
-            dist[qids[lo:hi, None] == cids[None, :]] = np.inf
-        dr = np.round(dist, round_dp)
-        for qi in range(hi - lo):
-            take = min(k, int((dr[qi] < np.inf).sum()))
-            for j in np.argsort(dr[qi], kind="stable")[:take]:
-                rows.append((int(qids[lo + qi]), int(cids[j]), float(dr[qi, j])))
-    return rows
+        out.append(
+            _topk_rows(qids[lo:lo + 256], dist, cids, k, round_dp, exclude_self)
+        )
+    return pd.concat(out, ignore_index=True)
 
 
 def pq_encode(
@@ -206,8 +206,7 @@ def pq_encode(
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            vecs = np.asarray(list(pdf["cand_vec"]), dtype=np.float64)
-            codes = _pq_codes(vecs, books)
+            codes = _pq_codes(_vectors(pdf), books)
             yield pd.DataFrame(
                 {"vec_id": pdf["cand_id"], "codes": list(codes)}
             )
@@ -242,8 +241,11 @@ def knn_pq(
     import numpy as np
 
     spark = queries.sparkSession
+    q = _prep(queries, id_col, vec_col, "query")
+    c = _prep(candidates, id_col, vec_col, "cand")
+    _require_integral_ids(q, c)
     if m is None:
-        dim = _vec_dim(candidates, vec_col)
+        dim = _vec_dim(c, "cand_vec")
         m = derive_m(dim) if dim else 16
     # the coded index is collected to the driver and broadcast (m codes
     # + id ≈ m+16 bytes a row), and ADC shrinks memory, not compute:
@@ -277,20 +279,13 @@ def knn_pq(
     except _EmptySample:
         return _empty_topk(spark)
     coded = pq_encode(candidates, books, id_col, vec_col).toPandas()
-    cand_ids = coded["vec_id"].to_numpy(dtype=np.int64)
-    codes = np.asarray(list(coded["codes"]), dtype=np.int64)
-    order = np.argsort(cand_ids)
-    cand_ids, codes = cand_ids[order], codes[order]
+    cand_ids, codes = _by_id(
+        coded["vec_id"].to_numpy(dtype=np.int64),
+        np.asarray(list(coded["codes"]), dtype=np.int64),
+    )
     bc = spark.sparkContext.broadcast((cand_ids, codes, np.asarray(books)))
 
-    q = _prep(queries, id_col, vec_col, "query")
-    target = spark.sparkContext.defaultParallelism
-    if q.rdd.getNumPartitions() < target:
-        q = q.repartition(target)
-
     def topk(batches: Iterator):
-        import pandas as pd
-
         cids, cds, bks = bc.value
         # offset each subspace's codes into the flat lookup table once
         # per worker, not once per batch
@@ -299,14 +294,13 @@ def knn_pq(
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            qmat = np.asarray(list(pdf["query_vec"]), dtype=np.float64)
-            qids = pdf["query_id"].to_numpy(dtype=np.int64)
-            rows = _adc_topk_rows(
-                qids, qmat, cids, code_cols, bks, k, exclude_self, round_dp
+            yield _adc_topk_rows(
+                pdf["query_id"].to_numpy(dtype=np.int64),
+                _vectors(pdf, "query_vec"), cids, code_cols, bks, k,
+                exclude_self, round_dp,
             )
-            yield pd.DataFrame(rows, columns=["query_id", "cand_id", "distance"])
 
-    scored = q.mapInPandas(
+    scored = _spread(q).mapInPandas(
         topk, schema="query_id long, cand_id long, distance double"
     )
     # each worker keeps its local top-k; the declarative window ranks
@@ -361,7 +355,7 @@ def ivf_pq_encode(
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            vecs = np.asarray(list(pdf["cand_vec"]), dtype=np.float64)
+            vecs = _vectors(pdf)
             cell = _nearest(vecs, cents_, 1)[:, 0].astype("int32")
             codes = _pq_codes(vecs - cents_[cell], books_)
             yield pd.DataFrame(
@@ -439,43 +433,41 @@ def knn_ivf_pq(
     import pandas as pd
 
     spark = queries.sparkSession
+    q = _prep(queries, id_col, vec_col, "query")
+    c = _prep(candidates, id_col, vec_col, "cand")
+    _require_integral_ids(q, c)
     if nlist is None:
         # mirror knn_join's explicit-IVF default: cells scale ≈ √n so
         # per-cell ADC work stays bounded as the corpus grows
         nlist = derive_nlist(candidates)
     try:
-        cents, books = fit_ivf_pq(
-            _prep(candidates, id_col, vec_col, "cand"),
-            nlist=nlist, m=m, ksub=ksub, seed=seed,
-        )
+        cents, books = fit_ivf_pq(c, nlist=nlist, m=m, ksub=ksub, seed=seed)
     except _EmptySample:
         return _empty_topk(spark)
     c_cells = ivf_pq_encode(candidates, cents, books, id_col, vec_col)
-    q_cells = _assign_cells(
-        _prep(queries, id_col, vec_col, "query"), cents, nprobe
-    ).select("query_id", "query_vec", F.explode("cells").alias("cell"))
+    q_cells = _assign_cells(q, cents, nprobe).select(
+        "query_id", "query_vec", F.explode("cells").alias("cell")
+    )
     bc = spark.sparkContext.broadcast((cents, books))
 
     def score_cell(key, qpdf, cpdf):
-        cols = ["query_id", "cand_id", "distance"]
         if len(qpdf) == 0 or len(cpdf) == 0:
-            return pd.DataFrame(columns=cols)
+            return pd.DataFrame(columns=["query_id", "cand_id", "distance"])
         cents_, books_ = bc.value
-        cids = cpdf["cand_id"].to_numpy(dtype=np.int64)
-        codes = np.asarray(list(cpdf["codes"]), dtype=np.int64)
-        order = np.argsort(cids)
-        cids, codes = cids[order], codes[order]
+        cids, codes = _by_id(
+            cpdf["cand_id"].to_numpy(dtype=np.int64),
+            np.asarray(list(cpdf["codes"]), dtype=np.int64),
+        )
         kk = books_.shape[1]
         code_cols = [codes[:, j] + j * kk for j in range(books_.shape[0])]
-        qids = qpdf["query_id"].to_numpy(dtype=np.int64)
-        qmat = np.asarray(list(qpdf["query_vec"]), dtype=np.float64)
         # the query also moves to THIS cell's residual frame — the
         # cogroup key is the cell id
-        qmat = qmat - cents_[int(key[0])][None, :]
-        rows = _adc_topk_rows(
-            qids, qmat, cids, code_cols, books_, k, exclude_self, round_dp
+        qmat = _vectors(qpdf, "query_vec")
+        qmat -= cents_[int(key[0])][None, :]
+        return _adc_topk_rows(
+            qpdf["query_id"].to_numpy(dtype=np.int64), qmat, cids,
+            code_cols, books_, k, exclude_self, round_dp,
         )
-        return pd.DataFrame(rows, columns=cols)
 
     scored = (
         q_cells.groupBy("cell")

@@ -45,6 +45,7 @@ from pyspark.sql import functions as F
 
 from semantic_ann_in_data_lake_spark.operators.knn import (
     _prep,
+    _vectors,
     derive_nlist,
     fit_ivf_centroids,
 )
@@ -96,7 +97,7 @@ def semdedup(
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            vecs = np.asarray(list(pdf["cand_vec"]), dtype=np.float64)
+            vecs = _vectors(pdf)
             norms = np.linalg.norm(vecs, axis=1)
             norms[norms == 0.0] = 1.0
             unit = vecs / norms[:, None]
@@ -162,7 +163,7 @@ def semdedup(
         pdf = pdf.sort_values(
             ["centroid_cos", "vec_id"], kind="mergesort"
         ).reset_index(drop=True)
-        mat = np.asarray(list(pdf["unit_vec"]), dtype=np.float64)
+        mat = _vectors(pdf, "unit_vec")
         kept_rows: list[int] = []
         kept = np.zeros(len(pdf), dtype=bool)
         dup_of = np.full(len(pdf), -1, dtype=np.int64)

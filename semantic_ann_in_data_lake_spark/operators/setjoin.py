@@ -38,7 +38,7 @@ from pyspark.sql.window import Window
 
 from semantic_ann_in_data_lake_spark.cache import scoped_persist
 from semantic_ann_in_data_lake_spark.functions.text import words
-from semantic_ann_in_data_lake_spark.operators.knn import _over_budget
+from semantic_ann_in_data_lake_spark.operators.knn import _over_budget, _spread
 
 
 def jaccard_prefix_join(
@@ -231,10 +231,7 @@ def _bitmask_exact_jaccard(toks: DataFrame, threshold: float):
         [bin(x).count("1") for x in range(256)], dtype=np.uint8
     )
 
-    q = toks.select(F.col("doc_id").alias("qid"))
-    target = spark.sparkContext.defaultParallelism
-    if q.rdd.getNumPartitions() < target:
-        q = q.repartition(target)
+    q = _spread(toks.select(F.col("doc_id").alias("qid")))
 
     def pair_counts(batches):
         import pandas as pd

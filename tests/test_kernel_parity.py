@@ -5,6 +5,9 @@ Every broadcast vector-matrix kernel engages only through
 the gate live and pins whether the gate admits the corpus. When it
 does, the row runs them again with the gate patched to decline (the
 declarative twin, which is the reference) and requires identical rows.
+The approximate and broadcast tiers of ``knn_join`` are held to the
+exact tier's rows on the same corpora where they must agree, and to
+its rules on duplicate ids, ragged vectors and string ids.
 """
 
 from __future__ import annotations
@@ -40,6 +43,14 @@ def _rows(df):
     return sorted(map(tuple, df.collect()), key=repr)
 
 
+def _frame(spark, corpus):
+    id_type, rows, k, round_dp, _ = CORPORA[corpus]
+    df = spark.createDataFrame(
+        rows, f"vec_id {id_type}, embedding array<double>"
+    )
+    return df, k, round_dp
+
+
 def _run_kernels(df, k, round_dp):
     from semantic_ann_in_data_lake_spark.operators import dedup
     from semantic_ann_in_data_lake_spark.operators.knn import knn_join
@@ -66,10 +77,8 @@ def _run_kernels(df, k, round_dp):
 
 @pytest.mark.parametrize("corpus", list(CORPORA))
 def test_exact_kernels_match_declarative_twins(spark, monkeypatch, corpus):
-    id_type, rows, k, round_dp, admitted = CORPORA[corpus]
-    df = spark.createDataFrame(
-        rows, f"vec_id {id_type}, embedding array<double>"
-    )
+    df, k, round_dp = _frame(spark, corpus)
+    admitted = CORPORA[corpus][4]
 
     real = pairscore.admit_matrices
     decisions = []
@@ -111,10 +120,7 @@ def test_quantizer_tiers_match_exact_on_tiny_corpora(spark, corpus, tier):
     return exactly the exact tier's rows — none for an empty frame."""
     from semantic_ann_in_data_lake_spark.operators.knn import knn_join
 
-    id_type, rows, k, round_dp, _ = CORPORA[corpus]
-    df = spark.createDataFrame(
-        rows, f"vec_id {id_type}, embedding array<double>"
-    )
+    df, k, round_dp = _frame(spark, corpus)
     want = _rows(knn_join(df, df, k=k, strategy="exact", round_dp=round_dp))
     got = _rows(
         knn_join(df, df, k=k, round_dp=round_dp, **_QUANTIZER_TIERS[tier])
@@ -128,7 +134,7 @@ _RESCORE_CASES = [
     (tier, corpus)
     for tier in ("nndescent", "nndescent_refine", "pca_refine", "graph")
     for corpus in ("empty", "n_1", "n_le_k")
-] + [("opq_refine", "empty")]
+] + [("opq_refine", "empty"), ("opq_refine", "n_le_k")]
 
 
 @pytest.mark.parametrize("tier,corpus", _RESCORE_CASES)
@@ -139,10 +145,7 @@ def test_rescore_tiers_match_exact_on_tiny_corpora(spark, tier, corpus):
     the refine tiers' 32-dim default projection."""
     from semantic_ann_in_data_lake_spark.operators.knn import knn_join
 
-    id_type, rows, k, round_dp, _ = CORPORA[corpus]
-    df = spark.createDataFrame(
-        rows, f"vec_id {id_type}, embedding array<double>"
-    )
+    df, k, round_dp = _frame(spark, corpus)
     if tier == "graph":
         cands, opts = df.select("*"), {"exclude_self": False}
     else:
@@ -158,6 +161,109 @@ def test_rescore_tiers_match_exact_on_tiny_corpora(spark, tier, corpus):
         )
     )
     assert got == want
+
+
+# the numpy tiers, as knn_join options
+_NUMPY_TIERS = {
+    "broadcast": {"strategy": "broadcast"},
+    "broadcast_cosine": {"strategy": "broadcast", "metric": "cosine"},
+    "lsh": {"strategy": "lsh"},
+    "pq": {"strategy": "pq"},
+    "ivf": {"strategy": "ivf"},
+    "ivf_pq": {"strategy": "ivf_pq"},
+}
+
+
+@pytest.mark.parametrize("tier", ["broadcast", "broadcast_cosine", "pq", "ivf"])
+@pytest.mark.parametrize("corpus", ["null_id", "null_vec"])
+def test_numpy_tiers_drop_null_ids_and_vectors(spark, corpus, tier):
+    """A row with a NULL id or a NULL vector takes no part: each tier
+    returns the exact tier's rows under the same metric."""
+    from semantic_ann_in_data_lake_spark.operators.knn import knn_join
+
+    df, k, round_dp = _frame(spark, corpus)
+    opts = _NUMPY_TIERS[tier]
+    metric = opts.get("metric", "l2_sq")
+    want = _rows(
+        knn_join(df, df, k=k, strategy="exact", metric=metric, round_dp=round_dp)
+    )
+    assert want and all(None not in row for row in want)
+    assert _rows(knn_join(df, df, k=k, round_dp=round_dp, **opts)) == want
+
+
+@pytest.mark.parametrize("tier", ["broadcast", "lsh"])
+def test_numpy_tiers_mask_every_copy_of_a_duplicated_id(spark, tier):
+    """Every candidate that shares the query's id is a self pair.
+    Broadcast ranks each query ROW, so its scored pairs, not its ranks,
+    equal the exact tier's, which ranks each query id."""
+    from semantic_ann_in_data_lake_spark.operators.knn import knn_join
+
+    df, k, round_dp = _frame(spark, "dup_ids")
+    got = _rows(knn_join(df, df, k=k, **_NUMPY_TIERS[tier]))
+    assert got and all(q != c for q, c, _, _ in got)
+    if tier == "broadcast":
+        want = knn_join(df, df, k=k, strategy="exact")
+        assert {r[:3] for r in got} == {r[:3] for r in _rows(want)}
+
+
+@pytest.mark.parametrize("tier", ["broadcast", "pq", "ivf", "lsh"])
+def test_numpy_tiers_reject_ragged_vectors(spark, tier):
+    from semantic_ann_in_data_lake_spark.operators.knn import knn_join
+
+    df, k, round_dp = _frame(spark, "ragged")
+    with pytest.raises(Exception, match="strategy='exact'"):
+        knn_join(df, df, k=k, **_NUMPY_TIERS[tier]).collect()
+
+
+@pytest.mark.parametrize("tier", ["lsh", "pq", "ivf_pq"])
+def test_numpy_tiers_reject_string_ids_without_a_spark_job(spark, tier):
+    from semantic_ann_in_data_lake_spark.operators.knn import knn_join
+
+    df, k, _ = _frame(spark, "string_ids")
+    sc = spark.sparkContext
+    group = f"string-ids-{tier}"
+    sc.setJobGroup(group, group)
+    try:
+        with pytest.raises(ValueError, match="integral"):
+            knn_join(df, df, k=k, **_NUMPY_TIERS[tier])
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+
+
+def test_topk_rows_matches_a_brute_force_sort():
+    """The shared numpy selection against a full sort of each row on
+    (round(key), cand_id): grid keys tie on the rounding boundary, +inf
+    cells never appear, and a row with fewer than k finite keys returns
+    only those."""
+    import numpy as np
+
+    from semantic_ann_in_data_lake_spark.operators.knn import _topk_rows
+
+    rng = np.random.RandomState(7)
+    for _ in range(200):
+        nq, nc = rng.randint(1, 12), rng.randint(1, 25)
+        k, round_dp = rng.randint(1, 8), int(rng.choice([1, 2, 6]))
+        key = np.round(rng.rand(nq, nc) * 4, 2) + rng.choice([0.0, 5e-7], (nq, nc))
+        key[rng.rand(nq, nc) < 0.3] = np.inf
+        cids = np.sort(rng.choice(100, nc, replace=False)).astype(np.int64)
+        qids = rng.choice(np.r_[cids, 100], nq).astype(np.int64)
+        exclude_self = bool(rng.rand() < 0.5)
+        rounded = np.round(key, round_dp)
+        want = []
+        for i in range(nq):
+            cells = [
+                (float(rounded[i, j]), int(cids[j]))
+                for j in range(nc)
+                if np.isfinite(key[i, j])
+                and not (exclude_self and cids[j] == qids[i])
+            ]
+            for r, (d, c) in enumerate(sorted(cells)[:k], start=1):
+                want.append((int(qids[i]), c, d, r))
+        got = _topk_rows(
+            qids, key.copy(), cids, k, round_dp, exclude_self, with_rank=True
+        )
+        assert list(got.itertuples(index=False, name=None)) == want
 
 
 def test_gate_declines_string_ids_without_a_spark_job(spark):
